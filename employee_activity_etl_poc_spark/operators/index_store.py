@@ -28,6 +28,9 @@ enough to collect driver-side always (a 256-cell/64-dim IVF +
 16×256-codebook PQ + 8×8-plane LSH artifact is < 5k rows), written
 through the ordinary parquet sink so it lands anywhere a Spark path
 can (the jar-free Delta log composes for versioned index history).
+A pinned IVF index is monitored and re-trained on drift by
+:func:`..plans.model_lifecycle.refresh_ivf_index_if_drifted`, which
+replaces the artifact through :func:`..sources.sinks.swap_staged`.
 
 Reference parity: the reference persists no index state (its dedup is
 pandas ``drop_duplicates``, ``bronze/test7.py``); this is part of the

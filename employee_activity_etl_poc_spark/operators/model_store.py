@@ -12,7 +12,10 @@ training pass uses for the bias gradient) and a ``b = -2`` row whose
 ``w6`` is the feature-space size — enough to rebuild the dense literal
 vector and to LOUDLY reject scoring with a mismatched bucket count
 (hash family drift = silently wrong features, the index_store plane
-lesson).
+lesson). The three model artifacts here are monitored and re-trained
+on drift by :mod:`..plans.model_lifecycle`, which replaces them
+through :func:`..sources.sinks.swap_staged` — the same lifecycle loop
+the IVF index artifact runs.
 
 Reference parity: the reference trains/persists no models; this is
 part of the LLM-pipeline surface the engine adds on top.

@@ -58,7 +58,12 @@ from pyspark.sql import functions as F
 from ..localrel import local_df
 from ..operators import dedup as D
 from ..operators.textops import chunk_tokens, lang_id, quality_score, tokens
-from ..sources.sinks import write_training_shards
+from ..sources.sinks import (
+    recover_staged_swap,
+    staging_path,
+    swap_staged,
+    write_training_shards,
+)
 
 
 @dataclass
@@ -98,29 +103,6 @@ class TemplateFloodError(RuntimeError):
     the caller can quarantine the batch, raise ``max_doc_frequency``
     pruning, or re-ingest with a tighter shingle policy — nothing about
     the workdir state has changed when this propagates."""
-
-
-def _recover_store(store_path: str) -> None:
-    """Startup recovery for a crash mid-way through a store prune's
-    write-then-swap (:func:`prune_signature_store` /
-    :func:`prune_line_store` / :func:`prune_gram_store` /
-    :func:`prune_soft_store` — all four persistent stores share the
-    protocol): a leftover ``__pre_prune``
-    backup either replaces a missing store (crash between the two moves)
-    or is discarded (crash after the swap, before cleanup); an incomplete
-    ``__pruning`` staging dir is always discarded (the prune simply
-    re-runs)."""
-    import shutil
-
-    backup = store_path + "__pre_prune"
-    staging = store_path + "__pruning"
-    if os.path.isdir(backup):
-        if not os.path.isdir(store_path):
-            shutil.move(backup, store_path)
-        else:
-            shutil.rmtree(backup)
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)
 
 
 def ingest_document_batch(
@@ -209,7 +191,7 @@ def ingest_document_batch(
     ``ann_index=True`` (requires ``vec_col`` on the batch) runs the
     index-lifecycle epoch hook: exported docs' embeddings append to
     ``embstore/`` (batch-keyed like the signature store), and
-    :func:`..plans.index_lifecycle.refresh_ivf_index_if_drifted` runs
+    :func:`..plans.model_lifecycle.refresh_ivf_index_if_drifted` runs
     once per batch against the CUMULATIVE exported corpus with the
     artifact at ``<workdir>/ann_index`` as pipeline state — built on the
     first batch, kept while the pinned centroids stay within
@@ -219,7 +201,7 @@ def ingest_document_batch(
     """
     store_path = os.path.join(workdir, "sigstore")
     shards_path = os.path.join(workdir, "shards")
-    _recover_store(store_path)
+    recover_staged_swap(spark, store_path)
 
     n_arrived = batch.count()
 
@@ -230,8 +212,7 @@ def ingest_document_batch(
     n_soft_reweighted = None
     soft_path = os.path.join(workdir, "softstore")
     if soft_dedup:
-        _recover_store(soft_path)
-        if os.path.isdir(soft_path):
+        if recover_staged_swap(spark, soft_path):
             sstore = spark.read.parquet(soft_path)
             if batch_id is not None and "batch" in sstore.columns:
                 sstore = sstore.where(F.col("batch") != F.lit(batch_id))
@@ -273,8 +254,7 @@ def ingest_document_batch(
     n_line_dropped = 0
     line_path = os.path.join(workdir, "linestore")
     if line_dedup:
-        _recover_store(line_path)
-        if os.path.isdir(line_path):
+        if recover_staged_swap(spark, line_path):
             lstore = spark.read.parquet(line_path)
             if batch_id is not None and "batch" in lstore.columns:
                 lstore = lstore.where(F.col("batch") != F.lit(batch_id))
@@ -383,8 +363,7 @@ def ingest_document_batch(
     n_span_tokens_removed = 0
     gram_path = os.path.join(workdir, "gramstore")
     if span_dedup:
-        _recover_store(gram_path)
-        if os.path.isdir(gram_path):
+        if recover_staged_swap(spark, gram_path):
             gstore = spark.read.parquet(gram_path)
             if batch_id is not None and "batch" in gstore.columns:
                 gstore = gstore.where(F.col("batch") != F.lit(batch_id))
@@ -510,7 +489,7 @@ def ingest_document_batch(
             raise ValueError(
                 f"ann_index=True needs column '{vec_col}' on the batch"
             )
-        from .index_lifecycle import refresh_ivf_index_if_drifted
+        from .model_lifecycle import refresh_ivf_index_if_drifted
 
         emb_path = os.path.join(workdir, "embstore")
         # embeddings of the EXPORTED docs only — the index should serve
@@ -563,16 +542,18 @@ def prune_signature_store(
     (write-then-swap via a staging dir, same pattern as
     ``compact_parquet``).
 
-    Swap atomicity: the swap is two directory moves, so there IS a window
-    (microseconds) where ``sigstore/`` does not exist, and a crash between
-    the moves strands the store at ``sigstore__pre_prune``. Both cases are
+    Swap atomicity: the swap (:func:`..sources.sinks.swap_staged`) is
+    two directory renames, so there IS a window (microseconds) where
+    ``sigstore/`` does not exist, and a crash between the renames
+    strands the store at ``sigstore__pre_prune``. Both cases are
     handled: the ingest path and this function call
-    :func:`_recover_store` first, which restores a stranded backup and
-    discards incomplete staging output — so a crashed prune never loses
-    data and simply re-runs. (A reader outside this module racing the swap
-    on a shared filesystem should retry on missing-path; plain local/HDFS
-    directory moves cannot be made jointly atomic without an indirection
-    pointer, which the single-writer ingest lifecycle does not need.)
+    :func:`..sources.sinks.recover_staged_swap` first, which restores a
+    stranded backup and discards incomplete staging output — so a
+    crashed prune never loses data and simply re-runs. (A reader outside
+    this module racing the swap on a shared filesystem should retry on
+    missing-path; plain local/HDFS directory moves cannot be made
+    jointly atomic without an indirection pointer, which the
+    single-writer ingest lifecycle does not need.)
 
     If the store is batch-partitioned (the streaming path's
     ``batch=<id>/`` layout), the compacted output is written as a single
@@ -612,10 +593,10 @@ def _prune_store(
     final data columns — NO ``batch`` column in the output), rewrite
     into right-sized files via a staging dir, swap atomically-enough
     (see :func:`prune_signature_store`'s swap-atomicity note; crashes
-    recover via :func:`_recover_store`). Batch-partitioned stores
-    compact into a single ``batch=-1`` partition so the layout stays
-    partition-discoverable and later per-batch writes/replay pruning
-    keep working.
+    recover via :func:`..sources.sinks.recover_staged_swap`).
+    Batch-partitioned stores compact into a single ``batch=-1``
+    partition so the layout stays partition-discoverable and later
+    per-batch writes/replay pruning keep working.
 
     REPLAY HAZARD (r11 advice #1) and the ``completed_below`` guard:
     ingest excludes a replayed batch's own stale store rows via
@@ -634,7 +615,7 @@ def _prune_store(
     import math
     import shutil
 
-    _recover_store(store_path)
+    recover_staged_swap(spark, store_path)
     batch_parts = [
         f for f in os.listdir(store_path) if f.startswith("batch=")
     ]
@@ -661,7 +642,7 @@ def _prune_store(
     kept = transform(src)
     n = kept.count()
     n_files = max(1, math.ceil(n / target_rows_per_file))
-    staging = store_path + "__pruning"
+    staging = staging_path(store_path)
     out_dir = os.path.join(staging, "batch=-1") if batch_layout else staging
     kept.repartition(n_files).write.mode("overwrite").parquet(out_dir)
     for part in preserved:
@@ -671,10 +652,7 @@ def _prune_store(
         shutil.copytree(
             os.path.join(store_path, part), os.path.join(staging, part)
         )
-    backup = store_path + "__pre_prune"
-    shutil.move(store_path, backup)
-    shutil.move(staging, store_path)
-    shutil.rmtree(backup)
+    swap_staged(spark, store_path)
     return n + n_preserved
 
 

@@ -3134,7 +3134,6 @@ def _reload_identity_gate(
 )
 def embedding_index_reload_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
     import tempfile
 
     from ..operators.index_store import load_ann_index, save_ann_index
@@ -3148,18 +3147,14 @@ def embedding_index_reload_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every granularity the index derives is PINNED into the artifact:
     # the probe count too (suggest_ivf_probe at build-time n)
     n_probe = SIM.suggest_ivf_probe(n, len(cents))
-    # fixed per-sf scratch path, rebuilt each run (the
-    # delta_roundtrip_stats convention: bench loops and oracle sweeps
-    # reuse one directory instead of leaking a mkdtemp per call)
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_ann_idx_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    shutil.rmtree(path, ignore_errors=True)
-    save_ann_index(
-        spark, path, dim=64, built_n=n, n_probe=n_probe, centroids=cents
-    )
-    idx = load_ann_index(spark, path)
+    # private scratch dir per call, removed on exit: the loader collects
+    # the whole artifact driver-side, so nothing below reads it again
+    with tempfile.TemporaryDirectory() as tmp:
+        path = os.path.join(tmp, "ann_idx")
+        save_ann_index(
+            spark, path, dim=64, built_n=n, n_probe=n_probe, centroids=cents
+        )
+        idx = load_ann_index(spark, path)
     reloaded = SIM.ivf_topk(
         emb, q, "vec_id", "embedding",
         k=5, n_probe=idx["n_probe"], cents=idx["centroids"],
@@ -3213,7 +3208,6 @@ def embedding_index_reload_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_pq_index_reload_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
     import tempfile
 
     from ..operators.index_store import load_ann_index, save_ann_index
@@ -3228,16 +3222,13 @@ def embedding_pq_index_reload_topk(spark: SparkSession, sf_dir: str) -> DataFram
     n, _, _ = _reload_gate_exact_rows(spark, sf_dir)
     cents, books = _reload_gate_pq(spark, sf_dir)
     n_probe = SIM.suggest_ivf_probe(n, len(cents))
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_ann_pq_idx_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    shutil.rmtree(path, ignore_errors=True)
-    save_ann_index(
-        spark, path, dim=len(cents[0]), built_n=n, n_probe=n_probe,
-        coarse=cents, codebooks=books,
-    )
-    idx = load_ann_index(spark, path)
+    with tempfile.TemporaryDirectory() as tmp:
+        path = os.path.join(tmp, "ann_pq_idx")
+        save_ann_index(
+            spark, path, dim=len(cents[0]), built_n=n, n_probe=n_probe,
+            coarse=cents, codebooks=books,
+        )
+        idx = load_ann_index(spark, path)
     reloaded = SIM.ivf_pq_rerank_topk(
         emb, q, "vec_id", "embedding", k=5,
         n_probe=idx["n_probe"], residual=True,
@@ -4188,27 +4179,19 @@ def _qc_trained_model(spark: SparkSession, sf_dir: str) -> dict:
 )
 def quality_classifier_reload_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
     import tempfile
 
     from ..operators.model_store import load_classifier, save_classifier
 
     docs = load(spark, sf_dir, "documents")
     model = _qc_trained_model(spark, sf_dir)
-    # pid-scoped artifact path (r11 advice #4): a FIXED shared temp path
-    # keyed only by the fixture basename lets two concurrent sessions
-    # (or two fixture dirs sharing a basename) race the rmtree/save/load
-    # sequence — flaky load failures, or scoring under another session's
-    # weights. The gate exercises save→load round-trip identity, which
-    # is path-independent.
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_qc_model_{os.getpid()}_"
-        f"{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    shutil.rmtree(path, ignore_errors=True)
-    save_classifier(spark, path, model["w6"], model["b6"])
-    w6, b6 = load_classifier(spark, path)
+    # private scratch dir per call (a shared path lets two concurrent
+    # sessions race the save/load); the gate exercises save→load
+    # round-trip identity, which is path-independent
+    with tempfile.TemporaryDirectory() as tmp:
+        path = os.path.join(tmp, "qc_model")
+        save_classifier(spark, path, model["w6"], model["b6"])
+        w6, b6 = load_classifier(spark, path)
     identical = w6 == model["w6"] and b6 == model["b6"]
     return TX.score_quality_classifier(
         docs, "text", "doc_id", label=F.col("lang") == "en", w6=w6, b6=b6
@@ -4735,21 +4718,16 @@ def cluster_balanced_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame
 )
 def bpe_reload_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
     import tempfile
 
     from ..operators.model_store import load_tokenizer, save_tokenizer
 
     docs = load(spark, sf_dir, "documents")
     ms = _bpe_trained(spark, sf_dir, docs)
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_bpe_model_{os.getpid()}_"
-        f"{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    shutil.rmtree(path, ignore_errors=True)
-    save_tokenizer(spark, path, ms)
-    reloaded = load_tokenizer(spark, path)
+    with tempfile.TemporaryDirectory() as tmp:
+        path = os.path.join(tmp, "bpe_model")
+        save_tokenizer(spark, path, ms)
+        reloaded = load_tokenizer(spark, path)
     identical = reloaded == ms
     return TX.bpe_fertility_by_group(
         docs, "text", "lang", reloaded
@@ -5286,21 +5264,16 @@ def _kmeans_trained(spark: SparkSession, sf_dir: str) -> dict:
 )
 def kmeans_reload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
     import tempfile
 
     from ..operators.model_store import load_centroids, save_centroids
 
     emb = load(spark, sf_dir, "embeddings")
     model = _kmeans_trained(spark, sf_dir)
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_kmeans_model_{os.getpid()}_"
-        f"{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    shutil.rmtree(path, ignore_errors=True)
-    save_centroids(spark, path, model["centroids"], model["grid"])
-    art = load_centroids(spark, path)
+    with tempfile.TemporaryDirectory() as tmp:
+        path = os.path.join(tmp, "kmeans_model")
+        save_centroids(spark, path, model["centroids"], model["grid"])
+        art = load_centroids(spark, path)
     identical = (
         art["centroids"] == model["centroids"] and art["grid"] == model["grid"]
     )

@@ -1,27 +1,29 @@
-"""Classifier-model lifecycle policy: monitor a PINNED quality
-classifier for score-distribution drift and re-train it on breach —
-:mod:`.index_lifecycle`'s deployment contract applied to the learned
-quality filter (r11 judge ask #4), completing the train-once /
-score-many story the ANN stack already has.
+"""Artifact lifecycles: monitor a PINNED index or model for drift and
+re-train it on breach — one idempotent call per ingest epoch that a
+scheduler (foreachBatch hook, cron'd job) invokes, for each of the four
+artifacts the engine persists (:mod:`..operators.index_store`,
+:mod:`..operators.model_store`):
 
-Drift signal: Population Stability Index (PSI) between the CURRENT
-corpus's score histogram under the pinned weights and the
-TRAINING-TIME histogram stored inside the artifact
-(:mod:`..operators.model_store`'s ``score_profile`` rows). PSI is the
-standard model-monitoring statistic (sum over buckets of
-``(p - q) * ln(p / q)``): < 0.1 is conventionally "no shift", > 0.25
-"major shift"; the default bound 0.2 sits in the usual alerting band.
-A model scoring a drifted corpus produces a shifted score histogram
-long before labels exist to measure accuracy — exactly the
-cheap-to-observe proxy a 100 TB ingest loop can afford per epoch (the
-histogram is ONE 10-row aggregate over scores the epoch may already be
-computing for its quality gate).
+- IVF index — the imbalance of the pinned centroids' cell populations
+  on the CURRENT corpus (``similarity.ivf_cell_stats(cents=...)``; a
+  refit is balanced by construction and cannot observe drift);
+- quality classifier, BPE tokenizer, k-means centroids — Population
+  Stability Index (PSI) between the current corpus's score /
+  tokens-per-word / cell-occupancy histogram under the pinned artifact
+  and the TRAINING-TIME histogram stored inside it. PSI is the standard
+  model-monitoring statistic (sum over buckets of
+  ``(p - q) * ln(p / q)``): < 0.1 is conventionally "no shift", > 0.25
+  "major shift"; the default bound 0.2 sits in the usual alerting band.
+  A drifted corpus shifts these histograms long before labels or
+  downstream metrics exist to notice.
 
-Everything heavy stays distributed (the scoring pass, the histogram
-aggregate); the DECISION is driver-side over 10 bigint counts, like
-the index lifecycle's one monitor row. Reference parity: the
-reference trains/persists no models; this belongs to the LLM-pipeline
-surface the engine adds.
+All four run the same epoch, :func:`_refresh_if_drifted`, and differ
+only in how they fit and which drift signal they read. Everything heavy
+(fits, scoring passes, histogram aggregates) stays distributed in the
+operators they delegate to; the DECISION is driver-side over a handful
+of counts. Reference parity: the reference persists no models or index
+state (its dedup is pandas ``drop_duplicates``, ``bronze/test7.py``);
+this belongs to the LLM-pipeline surface the engine adds.
 """
 
 from __future__ import annotations
@@ -31,15 +33,18 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import similarity as SIM
+from ..operators.index_store import load_ann_index, save_ann_index
 from ..operators.model_store import (
     N_PROFILE_BUCKETS,
     load_classifier_artifact,
     save_classifier,
 )
 from ..operators.textops import quality_classifier, score_quality_classifier
-from .index_lifecycle import _hadoop_fs
+from ..sources.sinks import recover_staged_swap, staging_path, swap_staged
 
 __all__ = [
+    "refresh_ivf_index_if_drifted",
     "refresh_classifier_if_drifted",
     "refresh_tokenizer_if_drifted",
     "refresh_kmeans_if_drifted",
@@ -47,6 +52,102 @@ __all__ = [
     "fertility_profile",
     "psi",
 ]
+
+
+def _refresh_if_drifted(spark: SparkSession, path: str, fit, check) -> dict:
+    """One lifecycle epoch for the artifact at ``path``. ``fit(target)``
+    trains on the current corpus, saves to ``target`` and returns its
+    report fields; ``check()`` loads the live artifact and returns
+    ``(ok, report)``, or ``None`` when it carries no stored profile.
+
+    - A crashed earlier swap is recovered first
+      (:func:`..sources.sinks.recover_staged_swap`), so a crash between
+      its renames resumes from the old artifact instead of silently
+      retraining it as ``'built'``.
+    - No artifact → fit in place, ``action='built'``.
+    - Within bound → ``'kept'``: the artifact is untouched, so scorers
+      and probers keep bit-identical behavior.
+    - Breached → fit into the staging dir and swap it in
+      (:func:`..sources.sinks.swap_staged`, which works on whatever
+      filesystem the artifact lives on), ``'refreshed'`` with the
+      breaching report overlaid by the fresh fit's fields.
+    - No stored profile → the same fit and swap, ``'rebuilt'``: an
+      unmonitorable artifact can't be 'kept' honestly, and the rebuild
+      gives it the profile every later epoch monitors.
+    """
+    if not recover_staged_swap(spark, path):
+        return {"action": "built", **fit(path)}
+    verdict = check()
+    if verdict is not None and verdict[0]:
+        return {"action": "kept", **verdict[1]}
+    fresh = fit(staging_path(path))
+    swap_staged(spark, path)
+    if verdict is None:
+        return {"action": "rebuilt", **fresh}
+    return {"action": "refreshed", **verdict[1], **fresh}
+
+
+def refresh_ivf_index_if_drifted(
+    spark: SparkSession,
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    path: str,
+    imbalance_bound: float = 8.0,
+    n: int | None = None,
+) -> dict:
+    """One lifecycle epoch for an IVF index artifact at ``path``
+    (:func:`_refresh_if_drifted`). Fit: k-center + Lloyd, every
+    granularity auto-derived from the CURRENT corpus count. Drift: the
+    pinned centroids' cell-population imbalance on the current corpus
+    against ``imbalance_bound``.
+
+    Returns a driver-side dict: ``{action, n, built_n, n_cells,
+    imbalance, imbalance_after (refreshed only), n_probe}``. A
+    ``'refreshed'`` report carries the before/after imbalance so the
+    caller can alert on a retrain that did NOT rebalance (data got
+    genuinely skewed, not just drifted). Idempotent per corpus
+    snapshot: a second call on the same corpus is always ``'kept'`` (a
+    fresh fit on the corpus it was fit on is balanced).
+    """
+    if n is None:
+        n = corpus.count()
+
+    def cell_stats(cents):
+        return SIM.ivf_cell_stats(
+            corpus, id_col, vec_col,
+            cents=cents, imbalance_bound=imbalance_bound, n=n,
+        ).collect()[0]
+
+    def fit(target: str) -> dict:
+        cents = SIM._ivf_centroids_kcenter(
+            corpus, id_col, vec_col, SIM.suggest_ivf_cells(n)
+        )
+        n_probe = SIM.suggest_ivf_probe(n, len(cents))
+        save_ann_index(
+            spark, target, dim=len(cents[0]), built_n=n, n_probe=n_probe,
+            centroids=cents,
+        )
+        return {
+            "n": n, "built_n": n, "n_cells": len(cents), "n_probe": n_probe,
+        }
+
+    def check():
+        idx = load_ann_index(spark, path)
+        stat = cell_stats(idx["centroids"])
+        return stat["imbalance_ok"], {
+            "n": n,
+            "built_n": idx["built_n"],
+            "n_cells": len(idx["centroids"]),
+            "n_probe": idx["n_probe"],
+            "imbalance": stat["imbalance"],
+        }
+
+    report = _refresh_if_drifted(spark, path, fit, check)
+    if report["action"] == "refreshed":
+        fresh = load_ann_index(spark, path)
+        report["imbalance_after"] = cell_stats(fresh["centroids"])["imbalance"]
+    return report
 
 
 def score_profile(scored: DataFrame) -> list[int]:
@@ -88,6 +189,18 @@ def psi(current: list[int], reference: list[int]) -> float:
     return total
 
 
+def _psi_verdict(current, reference, n: int, psi_bound: float):
+    """``check()`` result for a PSI-monitored artifact: ``None`` when
+    the artifact stored no ``reference`` profile, else ``(within bound,
+    report)`` with ``current()`` evaluated only then."""
+    if reference is None:
+        return None
+    drift = psi(current(), reference)
+    return drift <= psi_bound, {
+        "n": n, "psi": round(drift, 6), "psi_bound": psi_bound,
+    }
+
+
 def refresh_classifier_if_drifted(
     spark: SparkSession,
     corpus: DataFrame,
@@ -102,26 +215,11 @@ def refresh_classifier_if_drifted(
     n: int | None = None,
 ) -> dict:
     """One lifecycle epoch for a classifier artifact at ``path``
-    (mirrors :func:`.index_lifecycle.refresh_ivf_index_if_drifted`):
-
-    - No artifact yet → train on the current corpus
-      (:func:`..operators.textops.quality_classifier`, full-batch GD),
-      score it, store weights + the training-time score profile;
-      report ``action='built'``.
-    - Artifact exists → score the current corpus under the PINNED
-      weights (one feature pass, no training jobs), take the decile
-      histogram, and compare PSI against the stored profile. Within
-      ``psi_bound`` → leave the artifact untouched (scorers keep
-      bit-identical behavior; report ``action='kept'``). Breached →
-      re-train on the current corpus, write the new artifact (with its
-      own fresh profile) to ``path + '.next'`` and swap via the Hadoop
-      FS (works on whatever filesystem the artifact lives on — the
-      index-lifecycle lesson), report ``action='refreshed'`` with the
-      breaching ``psi``.
-    - Artifact exists but predates score profiles → re-train and swap
-      (``action='rebuilt'``): an unmonitorable artifact can't be
-      'kept' honestly, and the rebuild gives it the profile every
-      later epoch monitors.
+    (:func:`_refresh_if_drifted`). Fit:
+    :func:`..operators.textops.quality_classifier` (full-batch GD), then
+    store weights + the training-time score profile. Drift: PSI of the
+    current corpus's score histogram under the PINNED weights (one
+    feature pass, no training jobs) against the stored profile.
 
     Returns a driver-side dict ``{action, n, psi (kept/refreshed),
     psi_bound}``. Idempotent per corpus snapshot: a second call on the
@@ -131,7 +229,7 @@ def refresh_classifier_if_drifted(
     if n is None:
         n = corpus.count()
 
-    def _train_and_save(target: str) -> None:
+    def fit(target: str) -> dict:
         model: dict = {}
         trained = quality_classifier(
             corpus, text_col, id_col, label,
@@ -142,40 +240,18 @@ def refresh_classifier_if_drifted(
         save_classifier(
             spark, target, model["w6"], model["b6"], score_profile=profile
         )
+        return {"n": n, "psi_bound": psi_bound}
 
-    fs, hpath = _hadoop_fs(spark, path)
-    if not fs.exists(hpath):
-        _train_and_save(path)
-        return {"action": "built", "n": n, "psi_bound": psi_bound}
+    def check():
+        art = load_classifier_artifact(spark, path)
+        return _psi_verdict(
+            lambda: score_profile(score_quality_classifier(
+                corpus, text_col, id_col, label, w6=art["w6"], b6=art["b6"]
+            )),
+            art["score_profile"], n, psi_bound,
+        )
 
-    art = load_classifier_artifact(spark, path)
-
-    def _swap_in_fresh() -> None:
-        staging = path.rstrip("/") + ".next"
-        fs_stg, hstg = _hadoop_fs(spark, staging)
-        if fs_stg.exists(hstg):
-            fs_stg.delete(hstg, True)
-        _train_and_save(staging)
-        fs.delete(hpath, True)
-        if not fs.rename(hstg, hpath):
-            raise IOError(
-                f"classifier swap failed: rename({staging} -> {path}) "
-                "returned false on " + fs.getUri().toString()
-            )
-
-    if art["score_profile"] is None:
-        _swap_in_fresh()
-        return {"action": "rebuilt", "n": n, "psi_bound": psi_bound}
-
-    scored = score_quality_classifier(
-        corpus, text_col, id_col, label, w6=art["w6"], b6=art["b6"]
-    )
-    drift = psi(score_profile(scored), art["score_profile"])
-    report = {"n": n, "psi": round(drift, 6), "psi_bound": psi_bound}
-    if drift <= psi_bound:
-        return {"action": "kept", **report}
-    _swap_in_fresh()
-    return {"action": "refreshed", **report}
+    return _refresh_if_drifted(spark, path, fit, check)
 
 
 def fertility_profile(corpus: DataFrame, text_col: str, merges: list) -> list[int]:
@@ -223,26 +299,18 @@ def refresh_tokenizer_if_drifted(
     n_merges: int = 6,
     n: int | None = None,
 ) -> dict:
-    """One lifecycle epoch for a tokenizer artifact at ``path`` — the
-    :func:`refresh_classifier_if_drifted` contract applied to the
-    learned BPE merges (a tokenizer is the ONE model a pipeline must
-    not silently retrain: changing merges mid-corpus splits the token
-    space; but a tokenizer trained on last year's crawl over-segments
-    this year's — the answer is the same monitored staged swap the
-    classifier and the ANN index get):
+    """One lifecycle epoch for a tokenizer artifact at ``path``
+    (:func:`_refresh_if_drifted`; a tokenizer is the ONE model a
+    pipeline must not silently retrain — changing merges mid-corpus
+    splits the token space — but a tokenizer trained on last year's
+    crawl over-segments this year's). Fit: ``textops.bpe_merge_table``,
+    then store merges + the training-time fertility profile. Drift: PSI
+    of the tokens-per-word histogram under the PINNED merges
+    (vocab-bounded fold pass, no training jobs) against the stored one.
 
-    - No artifact → train (``textops.bpe_merge_table``), store merges +
-      the training-time fertility profile; ``action='built'``.
-    - Artifact exists → tokenize the current corpus under the PINNED
-      merges (vocab-bounded fold pass, no training jobs), take the
-      tokens-per-word histogram, PSI against the stored profile.
-      Within bound → ``'kept'`` (bit-identical tokenization persists);
-      breached → retrain, staged ``.next`` + Hadoop-FS swap,
-      ``'refreshed'``.
-    - Pre-profile artifact → retrain and swap (``'rebuilt'``).
-
-    Idempotent per corpus snapshot: exact integer histograms make the
-    second call on the same corpus PSI = 0 exactly."""
+    Returns the :func:`refresh_classifier_if_drifted` dict. Idempotent
+    per corpus snapshot: exact integer histograms make the second call
+    on the same corpus PSI = 0 exactly."""
     from ..operators.model_store import (
         load_tokenizer_artifact,
         save_tokenizer,
@@ -252,44 +320,20 @@ def refresh_tokenizer_if_drifted(
     if n is None:
         n = corpus.count()
 
-    def _train_and_save(target: str) -> None:
+    def fit(target: str) -> dict:
         merges = bpe_merge_table(corpus, text_col, n_merges=n_merges)
         profile = fertility_profile(corpus, text_col, merges)
         save_tokenizer(spark, target, merges, fertility_profile=profile)
+        return {"n": n, "psi_bound": psi_bound}
 
-    fs, hpath = _hadoop_fs(spark, path)
-    if not fs.exists(hpath):
-        _train_and_save(path)
-        return {"action": "built", "n": n, "psi_bound": psi_bound}
+    def check():
+        art = load_tokenizer_artifact(spark, path)
+        return _psi_verdict(
+            lambda: fertility_profile(corpus, text_col, art["merges"]),
+            art["fertility_profile"], n, psi_bound,
+        )
 
-    art = load_tokenizer_artifact(spark, path)
-
-    def _swap_in_fresh() -> None:
-        staging = path.rstrip("/") + ".next"
-        fs_stg, hstg = _hadoop_fs(spark, staging)
-        if fs_stg.exists(hstg):
-            fs_stg.delete(hstg, True)
-        _train_and_save(staging)
-        fs.delete(hpath, True)
-        if not fs.rename(hstg, hpath):
-            raise IOError(
-                f"tokenizer swap failed: rename({staging} -> {path}) "
-                "returned false on " + fs.getUri().toString()
-            )
-
-    if art["fertility_profile"] is None:
-        _swap_in_fresh()
-        return {"action": "rebuilt", "n": n, "psi_bound": psi_bound}
-
-    drift = psi(
-        fertility_profile(corpus, text_col, art["merges"]),
-        art["fertility_profile"],
-    )
-    report = {"n": n, "psi": round(drift, 6), "psi_bound": psi_bound}
-    if drift <= psi_bound:
-        return {"action": "kept", **report}
-    _swap_in_fresh()
-    return {"action": "refreshed", **report}
+    return _refresh_if_drifted(spark, path, fit, check)
 
 
 def refresh_kmeans_if_drifted(
@@ -305,90 +349,54 @@ def refresh_kmeans_if_drifted(
     n: int | None = None,
 ) -> dict:
     """One lifecycle epoch for a k-means centroid artifact at ``path``
-    — the :func:`refresh_classifier_if_drifted` contract applied to the
-    clustering model (centroids pin SemDeDup blocks, balanced-sampling
-    cells and IVF coarse quantizers: silently retraining them re-draws
-    every block boundary mid-corpus, but centroids trained on last
-    year's embedding distribution starve/flood cells on this year's).
+    (:func:`_refresh_if_drifted`; centroids pin SemDeDup blocks,
+    balanced-sampling cells and IVF coarse quantizers — silently
+    retraining them re-draws every block boundary mid-corpus, but
+    centroids trained on last year's embedding distribution
+    starve/flood cells on this year's). Fit:
+    ``similarity.kmeans_lloyd_grid``, then store centroids + the
+    training-time occupancy. Drift: PSI of the CELL-OCCUPANCY histogram
+    under the PINNED centroids (``similarity.kmeans_cell_counts`` — k
+    exact bigint counts, one map-side-combinable aggregate) against the
+    stored one. An artifact trained on a different ``grid`` raises
+    ``ValueError`` rather than compare occupancies across grids.
 
-    Drift signal: PSI over the CELL-OCCUPANCY histogram under the
-    PINNED centroids (``similarity.kmeans_cell_counts`` — k exact
-    bigint counts, one map-side-combinable aggregate per epoch) vs the
-    training-time occupancy stored in the artifact. A corpus whose
-    density moved between embedding regions shifts occupancy mass long
-    before any downstream metric notices.
-
-    - No artifact → train (``similarity.kmeans_lloyd_grid``), store
-      centroids + occupancy; ``action='built'``.
-    - Artifact → occupancy under pinned centroids, PSI vs stored.
-      Within bound → ``'kept'`` (bit-identical assignments persist);
-      breached → retrain, staged ``.next`` + Hadoop-FS swap,
-      ``'refreshed'``.
-    - Pre-profile artifact → retrain and swap (``'rebuilt'``).
-
-    Idempotent per corpus snapshot: exact integer occupancy histograms
-    make the second call on the same corpus PSI = 0 exactly."""
+    Returns the :func:`refresh_classifier_if_drifted` dict. Idempotent
+    per corpus snapshot: exact integer occupancy histograms make the
+    second call on the same corpus PSI = 0 exactly."""
     from ..operators.model_store import load_centroids, save_centroids
-    from ..operators.similarity import (
-        kmeans_cell_counts,
-        kmeans_lloyd_grid,
-    )
 
     if n is None:
         n = corpus.count()
 
-    def _train_and_save(target: str) -> None:
+    def fit(target: str) -> dict:
         model: dict = {}
-        kmeans_lloyd_grid(
+        SIM.kmeans_lloyd_grid(
             corpus, id_col, vec_col, k=k, iterations=iterations, grid=grid,
             model_out=model,
         ).collect()
-        occupancy = kmeans_cell_counts(
+        occupancy = SIM.kmeans_cell_counts(
             corpus, id_col, vec_col, model["centroids"], grid=grid
         )
         save_centroids(
             spark, target, model["centroids"], grid,
             occupancy_profile=occupancy,
         )
+        return {"n": n, "psi_bound": psi_bound}
 
-    fs, hpath = _hadoop_fs(spark, path)
-    if not fs.exists(hpath):
-        _train_and_save(path)
-        return {"action": "built", "n": n, "psi_bound": psi_bound}
-
-    art = load_centroids(spark, path)
-    if art["grid"] != grid:
-        raise ValueError(
-            f"centroid artifact at {path} was trained on grid "
-            f"{art['grid']}, scoring requested grid {grid} — refusing "
-            "to compare occupancies across grids"
+    def check():
+        art = load_centroids(spark, path)
+        if art["grid"] != grid:
+            raise ValueError(
+                f"centroid artifact at {path} was trained on grid "
+                f"{art['grid']}, scoring requested grid {grid} — refusing "
+                "to compare occupancies across grids"
+            )
+        return _psi_verdict(
+            lambda: SIM.kmeans_cell_counts(
+                corpus, id_col, vec_col, art["centroids"], grid=art["grid"]
+            ),
+            art["occupancy_profile"], n, psi_bound,
         )
 
-    def _swap_in_fresh() -> None:
-        staging = path.rstrip("/") + ".next"
-        fs_stg, hstg = _hadoop_fs(spark, staging)
-        if fs_stg.exists(hstg):
-            fs_stg.delete(hstg, True)
-        _train_and_save(staging)
-        fs.delete(hpath, True)
-        if not fs.rename(hstg, hpath):
-            raise IOError(
-                f"centroid swap failed: rename({staging} -> {path}) "
-                "returned false on " + fs.getUri().toString()
-            )
-
-    if art["occupancy_profile"] is None:
-        _swap_in_fresh()
-        return {"action": "rebuilt", "n": n, "psi_bound": psi_bound}
-
-    drift = psi(
-        kmeans_cell_counts(
-            corpus, id_col, vec_col, art["centroids"], grid=art["grid"]
-        ),
-        art["occupancy_profile"],
-    )
-    report = {"n": n, "psi": round(drift, 6), "psi_bound": psi_bound}
-    if drift <= psi_bound:
-        return {"action": "kept", **report}
-    _swap_in_fresh()
-    return {"action": "refreshed", **report}
+    return _refresh_if_drifted(spark, path, fit, check)

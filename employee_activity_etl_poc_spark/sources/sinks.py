@@ -257,21 +257,80 @@ def compact_parquet(
     OPTIMIZE on Delta, this rewrite on plain parquet).
 
     Rewrites the table into ``ceil(rows / target_rows_per_file)`` files via
-    a staging directory (write-then-swap; readers mid-swap see old or new,
-    never half). Returns the new file count."""
+    a staging directory and :func:`swap_staged`; a crash mid-swap is
+    repaired by the next call's :func:`recover_staged_swap`. Returns the
+    new file count."""
     import math
-    import shutil
 
+    recover_staged_swap(spark, path)
     df = spark.read.parquet(path)
     n = df.count()
     n_files = max(1, math.ceil(n / target_rows_per_file))
-    staging = path.rstrip("/") + "__compacting"
-    df.repartition(n_files).write.mode("overwrite").parquet(staging)
-    backup = path.rstrip("/") + "__pre_compact"
-    shutil.move(path, backup)
-    shutil.move(staging, path)
-    shutil.rmtree(backup)
+    df.repartition(n_files).write.mode("overwrite").parquet(staging_path(path))
+    swap_staged(spark, path)
     return n_files
+
+
+# Staged directory swap, shared by every store, table and model/index
+# artifact the engine rewrites in place. The suffixes are the ingest
+# stores' original ones, so a backup stranded by an older build still
+# recovers.
+_STAGING = "__pruning"
+_BACKUP = "__pre_prune"
+
+
+def staging_path(path: str) -> str:
+    """The directory a rewrite of ``path`` writes into before
+    :func:`swap_staged` moves it live."""
+    return path.rstrip("/") + _STAGING
+
+
+def _swap_paths(spark, path: str):
+    """(FileSystem, live, staging, backup) Hadoop paths for ``path``,
+    resolved against the session's Hadoop conf — the filesystem Spark's
+    own writes land on, local or not."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    live = path.rstrip("/")
+    fs = Path(live).getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs, Path(live), Path(live + _STAGING), Path(live + _BACKUP)
+
+
+def _rename(fs, src, dst) -> None:
+    if not fs.rename(src, dst):
+        raise IOError(
+            f"swap failed: rename({src.toString()} -> {dst.toString()}) "
+            "returned false on " + fs.getUri().toString()
+        )
+
+
+def swap_staged(spark, path: str) -> None:
+    """Replace the directory ``path`` with :func:`staging_path(path)
+    <staging_path>`: rename live → backup, staging → live, then delete
+    the backup. A crash between any two steps leaves either the live
+    directory or its backup in place, which :func:`recover_staged_swap`
+    turns back into a consistent state. Raises ``IOError`` when the
+    filesystem refuses a rename."""
+    fs, live, staging, backup = _swap_paths(spark, path)
+    _rename(fs, live, backup)
+    _rename(fs, staging, live)
+    fs.delete(backup, True)
+
+
+def recover_staged_swap(spark, path: str) -> bool:
+    """Undo whatever a crashed :func:`swap_staged` left behind: a backup
+    with no live directory is restored (crash between the renames), a
+    backup next to a live directory is dropped (crash before the final
+    delete), and leftover staging output is always discarded (the
+    rewrite simply re-runs). Returns whether ``path`` exists afterwards."""
+    fs, live, staging, backup = _swap_paths(spark, path)
+    if fs.exists(backup):
+        if fs.exists(live):
+            fs.delete(backup, True)
+        else:
+            _rename(fs, backup, live)
+    if fs.exists(staging):
+        fs.delete(staging, True)
+    return bool(fs.exists(live))
 
 
 def write_jdbc(

@@ -113,7 +113,7 @@ def test_lsh_params_roundtrip_and_drift_guard(spark, tmp_path):
 def test_refresh_ivf_index_lifecycle(spark, tmp_path):
     """build -> kept (same corpus) -> refreshed (collapsed corpus
     breaches the bound) -> kept again (idempotent after retrain)."""
-    from employee_activity_etl_poc_spark.plans.index_lifecycle import (
+    from employee_activity_etl_poc_spark.plans.model_lifecycle import (
         refresh_ivf_index_if_drifted,
     )
 
@@ -128,6 +128,20 @@ def test_refresh_ivf_index_lifecycle(spark, tmp_path):
         spark, spread, "vec_id", "embedding", path, imbalance_bound=3.0
     )
     assert r1["action"] == "built" and os.path.isdir(path)
+    # crash injection: a crash between the swap's two renames leaves only
+    # the backup, and an interrupted retrain leaves stray staging output;
+    # the next epoch restores the former and discards the latter instead
+    # of silently retraining as 'built'
+    import shutil
+
+    shutil.move(path, path + "__pre_prune")
+    os.makedirs(path + "__pruning")
+    rc = refresh_ivf_index_if_drifted(
+        spark, spread, "vec_id", "embedding", path, imbalance_bound=3.0
+    )
+    assert rc["action"] == "kept" and rc["built_n"] == r1["built_n"]
+    assert os.path.isdir(path) and not os.path.exists(path + "__pre_prune")
+    assert not os.path.exists(path + "__pruning")
     r2 = refresh_ivf_index_if_drifted(
         spark, spread, "vec_id", "embedding", path, imbalance_bound=3.0
     )

@@ -552,7 +552,7 @@ def test_prune_line_store_compaction_retention_readmission(spark, tmp_path):
     assert r4.n_lines_removed == 0  # nothing in the store to collide with
 
     # crash recovery: a stranded __pre_prune backup with a missing store
-    # is restored on the next ingest (the _recover_store contract)
+    # is restored on the next ingest (the recover_staged_swap contract)
     import shutil
 
     shutil.move(lp, lp + "__pre_prune")

@@ -66,6 +66,12 @@ def test_compact_parquet_merges_small_files(spark, tmp_path):
     assert sorted(r["id"] for r in out.collect()) == list(range(80))
     n_after = len([f for f in __import__("os").listdir(path) if f.endswith(".parquet")])
     assert n_after == 2
+    # crash injection: a crash between the swap's two renames strands the
+    # table at its backup name; the next compaction restores it first
+    os.rename(path, path + "__pre_prune")
+    assert compact_parquet(spark, path, target_rows_per_file=50) == 2
+    assert spark.read.parquet(path).count() == 80
+    assert not os.path.exists(path + "__pre_prune")
 
 
 def test_chunk_tokens_overlap_and_coverage(spark):
