@@ -8,13 +8,17 @@ DuckDB oracle where SQL-expressible.
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
 
 from employee_activity_etl_poc_spark.plans.registry import REGISTRY  # noqa: E402
 
@@ -36,232 +40,28 @@ def entry(spark: SparkSession) -> DataFrame:
     return REGISTRY["wellness_kpis"].fn(spark, "/root/testdata/sf0.001")
 
 
-# Explicit gate ordering: the driver's correctness harness verifies a
-# PREFIX of this dict (50 queries), so the queries that most need an
-# external correctness signal go first.
-_DRIVER_PRIORITY: tuple[str, ...] = (
-    # Round-12 rotation (judge r11 ask #2): the 50 queries whose latest
-    # driver gate is r9 — now the oldest block (latest-gate histogram at
-    # r11 close: r11:50 / r10:48 / r9:50) — fill the ENTIRE 50-slot
-    # prefix, so after this round nothing is staler than r10.
-    # dedup_lsh_bucket_stats_sampled / embedding_index_reload_topk /
-    # embedding_ivfpq_topk / embedding_pq_topk were also bench-flagged
-    # this round and carry fresh idle median-of-3 pins
-    # (BENCH_REMEASURED.json); none changed plan.
-    "embedding_ann_lsh",
-    "embedding_ann_ivf",
-    "embedding_pq_topk",
-    "embedding_ivfpq_topk",
-    "dedup_lsh_bucket_stats_sampled",
-    "embedding_index_reload_topk",
-    "embedding_pq_index_reload_topk",
-    "event_row_numbers",
-    "event_row_numbers_distributed",
-    "dedup_lsh_bucket_stats",
-    "text_quality",
-    "lang_id_heuristic",
-    "dedup_quality_keepers",
-    "embedding_topk_vectorized",
-    "events_after_watermark",
-    "active_user_intersection",
-    "activity_validation",
-    "cheapest_supplier_per_part",
-    "commute_analytics",
-    "customers_without_events",
-    "dormant_customers",
-    "error_in_signup_window",
-    "event_type_mode_value",
-    "event_type_stats",
-    "event_value_histogram",
-    "event_value_outliers",
-    "events_interarrival",
-    "events_pivot_by_type",
-    "events_running_totals",
-    "events_session_1h",
-    "events_sliding_2d_1d",
-    "events_tumbling_6h",
-    "events_user_zscores",
-    "heavy_purchasers_not_heavy_signups",
-    "heavy_user_event_types",
-    "hypertable_daily_rollup",
-    "latest_events_per_user",
-    "lineitem_union_fragments",
-    "lineitem_unpivot_metrics",
-    "nation_revenue_share",
-    "newest_events",
-    "open_order_customers",
-    "purchase_asof_click",
-    "revenue_rollup_region_nation",
-    "shipping_priority",
-    "sport_code_mapping",
-    "streaming_ingest_gate",
-    "table_row_counts",
-    "text_compression_ratio",
-    "time_features",
-    # --- 50-query gate boundary ---
-    # token_budget_mixture_unimax is NEW this round (never driver-gated;
-    # the r11 vocab_zipf_fit situation): the 50 r9-stale queries above
-    # outrank it because leaving any of them ungated would keep an
-    # r9-stale gate alive (the ask's explicit DONE bar), while the new
-    # query is hash-gated in-session at sf0.001/0.01/0.1
-    # (tools/check_oracle.py) and sits first in line for r13.
-    "token_budget_mixture_unimax",
-    # bpe_merges / bpe_token_counts are NEW this round (in-engine BPE
-    # tokenizer induction + fertility audit): same situation — gated
-    # in-session at sf0.001/0.01/0.1, queued behind unimax for r13.
-    "bpe_merges",
-    "bpe_token_counts",
-    # embedding_topk_filtered / embedding_ivf_filtered_topk are NEW this
-    # round (filtered vector search): gated in-session at
-    # sf0.001/0.01/0.1, queued for r13 with the other new queries.
-    "embedding_topk_filtered",
-    "embedding_ivf_filtered_topk",
-    # corpus_divergence_by_source is NEW this round (per-source KL/JS
-    # corpus-shift report): gated in-session at sf0.001/0.01/0.1.
-    "corpus_divergence_by_source",
-    # quality_ensemble_report is NEW this round (the filter stack as one
-    # 2-of-3 decision table; oracle nests the component oracles):
-    # gated in-session at sf0.001/0.01/0.1.
-    "quality_ensemble_report",
-    # badwords_filter / cluster_balanced_sample_stats are NEW this round:
-    # gated in-session at sf0.001/0.01/0.1.
-    "badwords_filter",
-    "cluster_balanced_sample_stats",
-    # bpe_reload_token_counts is NEW this round (tokenizer-artifact
-    # lifecycle): gated in-session at sf0.001/0.01/0.1.
-    "bpe_reload_token_counts",
-    # soft_dedup_weights / ngram_novelty_by_source /
-    # embedding_hard_negatives / leakage_safe_split_counts are NEW this
-    # round (continuation #2): gated in-session at sf0.001/0.01/0.1.
-    "soft_dedup_weights",
-    "ngram_novelty_by_source",
-    "embedding_hard_negatives",
-    "leakage_safe_split_counts",
-    "kmeans_cluster_stats",
-    "kmeans_reload_stats",
-    "embedding_pca_top_component",
-    "classifier_calibration_bins",
-    "source_overlap_matrix",
-    "soft_dedup_incremental",
-    "embedding_norm_outliers",
-    "embedding_triplet_mining",
-    "dedup_lsh_parameter_report",
-    "bpe_vocab_size_curve",
-    "quality_bootstrap_ci",
-    # quality_classifier_scores changed plan this round (it now trains
-    # via the per-fixture memo shared with the reload gate — judge ask
-    # #5 — and scores via score_quality_classifier): output is
-    # hash-identical by construction (the trained weights are
-    # deterministic grid-unit integers and the returned frame is the
-    # same _classifier_score_frame), re-hash-gated in-session at
-    # sf0.001/0.01/0.1; it keeps its r11 driver gate and follows the
-    # new query in line. Below: previous rotations keep their relative
-    # order (r10-gated first, then the r11-gated block).
-    "gopher_quality_filter",
-    "embedding_mmr_rerank",
-    "bm25_scores",
-    "lm_quality_nll",
-    "semantic_dedup_pairs",
-    "semantic_dedup_incremental",
-    "token_entropy",
-    "dsir_importance_weights",
-    "lm_quality_bigram_nll",
-    "activity_gold_enrichment",
-    "cdc_apply_snapshot",
-    "cdc_envelope_roundtrip",
-    "cdc_scd2_history",
-    "commute_enrichment",
-    "dedup_duplicated_spans",
-    "dedup_levenshtein_blocked",
-    "dedup_levenshtein_passjoin",
-    "dedup_ngram_prefix",
-    "dedup_span_removal_stats",
-    "dedup_spans_incremental",
-    "dedup_spans_incremental_removal",
-    "doc_fingerprints",
-    "document_chunks",
-    "documents_shard_stats",
-    "documents_split_counts",
-    "documents_stratified_sample",
-    "documents_weighted_sample",
-    "domain_wellness_kpis",
-    "embedding_ivf_cell_stats",
-    "error_in_signup_window_sliced",
-    "event_value_deciles",
-    "event_value_percentiles",
-    "events_column_profile",
-    "lang_confusion_matrix",
-    "multimodal_frame_features",
-    "multimodal_frame_sample",
-    "multimodal_metadata",
-    "salted_event_rollup",
-    "slack_messages",
-    "synthetic_activities_profile",
-    "synthetic_activities_sample",
-    "text_redaction",
-    "tfidf_scores",
-    "token_budget_mixture",
-    "token_counts",
-    "user_qualification",
-    "vocabulary_top_terms",
-    "wellness_kpis",
-    "vocab_zipf_fit",
-    "quality_classifier_scores",
-    "c4_line_dedup",
-    "c4_line_dedup_incremental",
-    "quality_classifier_reload_scores",
-    "ccnet_perplexity_buckets",
-    "benchmark_decontamination",
-    "brand_volume",
-    "dedup_cluster_summary",
-    "dedup_clusters_alternating",
-    "dedup_exact",
-    "dedup_exact_normalized",
-    "dedup_minhash_df_pruned",
-    "dedup_minhash_incremental",
-    "dedup_minhash_lsh",
-    "dedup_ngram_blocked",
-    "dedup_simhash",
-    "dedup_simhash_hamming",
-    "delta_roundtrip_stats",
-    "documents_domain_cap",
-    "documents_sequence_packing",
-    "embedding_incremental_near_dup",
-    "embedding_near_dup",
-    "embedding_quantized_topk",
-    "embedding_topk",
-    "error_in_signup_window_by_user",
-    "event_type_user_grouping_sets",
-    "event_value_kll",
-    "event_value_tdigest",
-    "events_bloom_pruned_building",
-    "events_cms_daily_range",
-    "events_distinct_users_hll",
-    "events_heavy_hitter_users",
-    "events_hourly_gapfilled",
-    "events_json_props_stats",
-    "events_robust_outliers",
-    "events_snapshot_diff",
-    "events_theta_distinct_algebra",
-    "events_trailing_hour_sum",
-    "events_user_cms_counts",
-    "fuzzy_decontamination",
-    "large_order_customers",
-    "order_priority_check",
-    "order_revenue_cube",
-    "pricing_summary",
-    "pricing_summary_sql",
-    "promo_revenue_share",
-    "regional_supplier_volume",
-    "revenue_by_segment",
-    "text_repetition",
-)
+def _latest_gate_round() -> dict[str, int]:
+    """query -> the latest round N whose committed
+    ``CORRECTNESS_r<N>.json`` gated it."""
+    latest: dict[str, int] = {}
+    for path in glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if m is None:
+            continue
+        with open(path) as fh:
+            for name in json.load(fh):
+                latest[name] = max(latest.get(name, 0), int(m.group(1)))
+    return latest
 
 
 def _ordered() -> dict[str, object]:
-    prio = [n for n in _DRIVER_PRIORITY if n in REGISTRY]
-    rest = [n for n in REGISTRY if n not in set(prio)]
-    return {n: REGISTRY[n] for n in (*prio, *rest)}
+    """The registry, stalest gate first. The external correctness gate
+    verifies a PREFIX of this dict (50 queries), so queries never gated
+    (round 0) lead, then those whose latest gate is oldest; the sort is
+    stable, so ties keep registry order."""
+    latest = _latest_gate_round()
+    names = sorted(REGISTRY, key=lambda n: latest.get(n, 0))
+    return {n: REGISTRY[n] for n in names}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

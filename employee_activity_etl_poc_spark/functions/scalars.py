@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
-# Timestamps (F1-F5)
+# Timestamps (F1-F3, F5; the F4 stamps live in gold_jobs.enrich_activities)
 # ---------------------------------------------------------------------------
 
 
@@ -54,12 +54,6 @@ def coerce_double(col: Column | str) -> Column:
     (``pd.to_numeric(errors='coerce')``, ``gold/2test1.py:135``)."""
     c = F.col(col) if isinstance(col, str) else col
     return c.try_cast("double")
-
-
-def processing_stamp() -> tuple[Column, Column]:
-    """F4: (processing timestamp, processing date) metadata pair
-    (``bronze/redPandaToDeltaLake.py:86``, ``gold/bronzeToGold.py:182-183``)."""
-    return F.current_timestamp(), F.current_date()
 
 
 def elapsed_seconds(start: Column | str, end: Column | str) -> Column:
@@ -108,7 +102,8 @@ def map_code(col: Column | str, mapping: dict[str, str], default: str) -> Column
     for code, label in mapping.items():
         branch = F.when(c == code, F.lit(label))
         expr = branch if expr is None else expr.when(c == code, F.lit(label))
-    assert expr is not None, "mapping must be non-empty"
+    if expr is None:
+        raise ValueError("mapping must be non-empty")
     return expr.otherwise(F.lit(default))
 
 
@@ -126,7 +121,7 @@ SPORT_CODE_NAMES = {
 
 
 # ---------------------------------------------------------------------------
-# Flags / fills (F7, F8, F9)
+# Flags (F7, F8; F9 null fills are plain F.coalesce)
 # ---------------------------------------------------------------------------
 
 # Active transport modes that qualify for the sport bonus
@@ -153,11 +148,6 @@ def commute_long(transport: Column | str, distance_km: Column | str) -> Column:
         .when((t == "vélo/trottinette/autres") & (d > 25.0), F.lit(True))
         .otherwise(F.lit(False))
     )
-
-
-def fill_zero(col: Column | str) -> Column:
-    """F9: null -> 0 (``strava_like_data.ipynb:114``)."""
-    return F.coalesce(F.col(col) if isinstance(col, str) else col, F.lit(0))
 
 
 # ---------------------------------------------------------------------------

@@ -187,37 +187,21 @@ def _hash_long60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def _positioned_grams(
-    df: DataFrame, text_col: str, id_col: str, k: int
-) -> DataFrame:
-    """(doc, pos, g): every positioned k-gram of every document — the
-    shared front end of batch AND incremental span detection. NO
-    array_distinct (positions matter here, unlike the minhash shingle
-    set); shorter-than-k docs yield no rows by construction (the guarded
-    sequence); 60-bit fingerprints (:func:`_hash_long60`)."""
-    ws = tokens(F.col(text_col))
-    idx = F.sequence(F.lit(1), F.size(ws) - (k - 1))
-    make = lambda i: F.array_join(F.slice(ws, i, k), " ")  # noqa: E731
-    return (
-        df.where(F.size(tokens(F.col(text_col))) >= k)
-        .select(
-            F.col(id_col).alias("doc"),
-            F.posexplode(F.transform(idx, make)).alias("pos", "gram"),
-        )
-        .select(
-            "doc",
-            F.col("pos").cast("long").alias("pos"),
-            _hash_long60(F.col("gram")).alias("g"),
-        )
+def _tokenized(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(doc, ws): each document's token array — the one tokenize pass
+    the span family derives grams, span content and rewrites from."""
+    return df.select(
+        F.col(id_col).alias("doc"), tokens(F.col(text_col)).alias("ws")
     )
 
 
-def _positioned_grams_from_ws(base: DataFrame, k: int) -> DataFrame:
-    """:func:`_positioned_grams` over a pre-tokenized (doc, ws) frame —
-    lets a caller that already holds (and persists) the token arrays
-    derive grams without a second tokenize pass (r13). Identical
-    values: ``tokens`` is deterministic, the gram windows and 60-bit
-    fingerprints are the same expressions."""
+def _positioned_grams(base: DataFrame, k: int) -> DataFrame:
+    """(doc, pos, g): every positioned k-gram of every document of a
+    :func:`_tokenized` frame — the shared front end of batch AND
+    incremental span detection. NO array_distinct (positions matter
+    here, unlike the minhash shingle set); shorter-than-k docs yield no
+    rows by construction (the guarded sequence); 60-bit fingerprints
+    (:func:`_hash_long60`)."""
     idx = F.sequence(F.lit(1), F.size(F.col("ws")) - (k - 1))
     make = lambda i: F.array_join(F.slice(F.col("ws"), i, k), " ")  # noqa: E731
     return (
@@ -330,7 +314,8 @@ def lsh_parameter_report(
     a bigint, and the areas are exact unit sums divided once at the
     edge. Input-free (a parameter sweep over ``range(grid_steps)``) —
     cost is O(grid_steps · divisors), independent of any corpus."""
-    assert num_perm & (num_perm - 1) == 0, "num_perm must be a power of two"
+    if num_perm < 1 or num_perm & (num_perm - 1):
+        raise ValueError(f"num_perm must be a power of two, got {num_perm}")
     splits = []
     b = 1
     while b <= num_perm:
@@ -390,16 +375,6 @@ def lsh_parameter_report(
     )
 
 
-def minhash_signature(shingle_arr: Column, num_perm: int = 16) -> Column:
-    """num_perm minhash values over a shingle array.
-
-    One md5 per shingle (the expensive part), then each permutation is a
-    two-op integer transform over the precomputed hash array — 16 perms cost
-    barely more than 1. No UDF; portable to the SQL oracle."""
-    hashes = F.transform(shingle_arr, _hash_long)
-    return minhash_from_hashes(hashes, num_perm)
-
-
 def _permuted_min(hash_arr: Column, a: int, b: int) -> Column:
     # Closure factory (not default-arg lambdas): PySpark infers HOF lambda
     # arity from the signature, so `lambda x, a=a` would read as a 2-arg HOF.
@@ -428,6 +403,70 @@ def lsh_band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
                 for r in range(rows_per_band)
             ],
         ),
+    )
+
+
+# The private stages every MinHash-LSH entry point runs:
+# shingle -> sign -> band -> verify.
+
+
+def _shingle_hashes(
+    df: DataFrame, text_col: str, id_col: str, shingle_k: int
+) -> DataFrame:
+    """(doc, hs: array<long>): tokenize → shingle → md5 → distinct, the
+    base frame signatures, band keys and the verify Jaccard all derive
+    from. Shingles become 32-bit longs IMMEDIATELY (one md5 pass):
+    Jaccard over hashed shingles equals string-shingle Jaccard up to
+    32-bit collisions, and since the SQL oracle computes the identical
+    hashes, both engines agree exactly by construction. Long arrays
+    also persist ~5× smaller than strings and intersect/union faster
+    in the verify join."""
+    return (
+        df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("t"))
+        .where(F.size(tokens(F.col("t"))) >= shingle_k)
+        .select(
+            "doc",
+            F.array_distinct(
+                F.transform(shingles("t", shingle_k), _hash_long)
+            ).alias("hs"),
+        )
+    )
+
+
+def _banded(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
+    """(doc, sig) → (doc, band, key): one row per band bucket a
+    document lands in — the frame whose (band, key) equi-join yields
+    LSH candidate pairs."""
+    return sigs.select(
+        "doc",
+        F.posexplode(lsh_band_keys(F.col("sig"), bands, rows_per_band)).alias(
+            "band", "key"
+        ),
+    )
+
+
+def _verified(
+    pairs: DataFrame,
+    hashed_a: DataFrame,
+    hashed_b: DataFrame,
+    a: str,
+    b: str,
+    threshold: float,
+) -> DataFrame:
+    """Candidate pairs (a, b) → (a, b, jaccard >= threshold): join each
+    side's ``hs`` (from ``hashed_a`` / ``hashed_b``, both (doc, hs)) and
+    verify the true hashed-shingle Jaccard, rounded to 4 places."""
+    hs_a = hashed_a.select(F.col("doc").alias(a), F.col("hs").alias("hs_a"))
+    hs_b = hashed_b.select(F.col("doc").alias(b), F.col("hs").alias("hs_b"))
+    return (
+        pairs.join(hs_a, a)
+        .join(hs_b, b)
+        # project jaccard ONCE, then filter on the bound column — the
+        # intersect/union arrays are expensive and must not be re-evaluated
+        # per reference
+        .select(a, b, jaccard(F.col("hs_a"), F.col("hs_b")).alias("j"))
+        .where(F.col("j") >= threshold)
+        .select(a, b, F.round("j", 4).alias("jaccard"))
     )
 
 
@@ -485,37 +524,7 @@ def minhash_near_duplicates(
         .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .distinct()
     )
-    hs_a = hashed.select(F.col("doc").alias("doc_a"), F.col("hs").alias("hs_a"))
-    hs_b = hashed.select(F.col("doc").alias("doc_b"), F.col("hs").alias("hs_b"))
-    return (
-        pairs.join(hs_a, "doc_a")
-        .join(hs_b, "doc_b")
-        # project jaccard ONCE, then filter on the bound column — the
-        # intersect/union arrays are expensive and must not be re-evaluated
-        # per reference
-        .select("doc_a", "doc_b", jaccard(F.col("hs_a"), F.col("hs_b")).alias("j"))
-        .where(F.col("j") >= threshold)
-        .select("doc_a", "doc_b", F.round("j", 4).alias("jaccard"))
-    )
-
-
-def shingle_hash_frame(
-    df: DataFrame, text_col: str, id_col: str, shingle_k: int
-) -> DataFrame:
-    """(doc, hs: array<long>): the tokenize → shingle → md5 → distinct
-    base frame every LSH consumer derives from — extracted (r13) so a
-    caller running SEVERAL monitors/joins over the same corpus can build
-    and persist it ONCE and pass it through ``hashed=``."""
-    return (
-        df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("t"))
-        .where(F.size(tokens(F.col("t"))) >= shingle_k)
-        .select(
-            "doc",
-            F.array_distinct(
-                F.transform(shingles("t", shingle_k), _hash_long)
-            ).alias("hs"),
-        )
-    )
+    return _verified(pairs, hashed, hashed, "doc_a", "doc_b", threshold)
 
 
 def lsh_banded_frame(
@@ -528,7 +537,6 @@ def lsh_banded_frame(
     persist: bool = True,
     max_bucket_size: int | None = None,
     max_doc_frequency: int | None = None,
-    hashed: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The candidate-generation half of :func:`minhash_near_duplicates`:
     ``(hashed, banded)`` where ``hashed`` is (doc, hs: array<long>) and
@@ -536,37 +544,18 @@ def lsh_banded_frame(
     self-equi-join produces LSH candidate pairs. Public so skew
     monitoring (:func:`lsh_bucket_stats`) and the adversarial-corpus
     stress tests measure EXACTLY the candidate space the dedup join
-    pays for, not a reimplementation of it.
-
-    ``hashed``: a caller-provided :func:`shingle_hash_frame` of ``df``
-    (same text/id/shingle_k) — the shingle pass is then skipped and the
-    caller OWNS the frame's cache lifecycle (this function will neither
-    persist nor unpersist it). For callers running several monitors
-    over one corpus (the two-mode gated monitor query), this turns N
-    tokenize+md5 passes into one."""
-    rows_per_band = num_perm // bands
-    # Hash shingles to 32-bit longs IMMEDIATELY (one md5 pass), distinct,
-    # and persist the LONG arrays — signatures, band keys, and the verify
-    # Jaccard all derive from this one frame. Jaccard over hashed shingles
-    # equals string-shingle Jaccard up to 32-bit collisions, and since the
-    # SQL oracle computes the identical hashes, both engines agree exactly
-    # by construction. Long arrays also persist ~5× smaller than strings
-    # and intersect/union faster in the verify join.
-    external_hashed = hashed is not None
-    if not external_hashed:
-        hashed = shingle_hash_frame(df, text_col, id_col, shingle_k)
+    pays for, not a reimplementation of it."""
+    # signatures, band keys and the verify Jaccard all derive from this
+    # one frame, so it is the frame the persist below caches
+    hashed = _shingle_hashes(df, text_col, id_col, shingle_k)
     if max_doc_frequency is not None:
         # hs is already per-doc distinct, so count(*) per hash == document
         # frequency. The anti-join keeps everything NOT in the frequent
         # set; broadcast is safe because shingles shared by > cap docs are
         # rare kinds even when their occurrences are not. Persist the
         # pre-prune frame: the DF aggregate AND the prune join both read
-        # it — one tokenize+md5 pass, not two (an external ``hashed`` is
-        # the caller's cache — reuse it as-is).
-        pre_prune = (
-            hashed if external_hashed
-            else (hashed.persist() if persist else hashed)
-        )
+        # it — one tokenize+md5 pass, not two.
+        pre_prune = hashed.persist() if persist else hashed
         exploded = pre_prune.select("doc", F.explode("hs").alias("h"))
         frequent = (
             exploded.groupBy("h")
@@ -585,19 +574,13 @@ def lsh_banded_frame(
             # cached copy of the un-pruned shingle frame in executor storage.
             hashed = hashed.persist()
             hashed.count()
-            if not external_hashed:
-                pre_prune.unpersist()
-    elif persist and not external_hashed:
+            pre_prune.unpersist()
+    elif persist:
         hashed = hashed.persist()
     sigs = hashed.select(
         "doc", minhash_from_hashes(F.col("hs"), num_perm).alias("sig")
     )
-    banded = sigs.select(
-        "doc",
-        F.posexplode(lsh_band_keys(F.col("sig"), bands, rows_per_band)).alias(
-            "band", "key"
-        ),
-    )
+    banded = _banded(sigs, bands, num_perm // bands)
     if max_bucket_size is not None:
         # Template filter (the standard web-dedup trick): a band bucket with
         # > cap docs is boilerplate colliding en masse — its candidate pairs
@@ -771,16 +754,8 @@ def minhash_signature_table(
     shingles) rides along for the verify Jaccard; at 100 TB this table is
     a fraction of corpus size (ints, not text) and is the thing you
     checkpoint between ingest batches."""
-    return (
-        df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("t"))
-        .where(F.size(tokens(F.col("t"))) >= shingle_k)
-        .select(
-            "doc",
-            F.array_distinct(
-                F.transform(shingles("t", shingle_k), _hash_long)
-            ).alias("hs"),
-        )
-        .select("doc", "hs", minhash_from_hashes(F.col("hs"), num_perm).alias("sig"))
+    return _shingle_hashes(df, text_col, id_col, shingle_k).select(
+        "doc", "hs", minhash_from_hashes(F.col("hs"), num_perm).alias("sig")
     )
 
 
@@ -808,21 +783,12 @@ def minhash_incremental_pairs(
     equals the full-corpus batch result.
     """
     rows_per_band = num_perm // bands
-
-    def banded(sig_tbl: DataFrame) -> DataFrame:
-        return sig_tbl.select(
-            "doc",
-            F.posexplode(
-                lsh_band_keys(F.col("sig"), bands, rows_per_band)
-            ).alias("band", "key"),
-        )
-
     all_docs = store.unionByName(new)
     pairs = (
-        banded(new)
+        _banded(new, bands, rows_per_band)
         .alias("a")
         .join(
-            banded(all_docs).alias("b"),
+            _banded(all_docs, bands, rows_per_band).alias("b"),
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.key") == F.col("b.key"))
             & (F.col("a.doc") != F.col("b.doc")),
@@ -835,15 +801,7 @@ def minhash_incremental_pairs(
         )
         .distinct()
     )
-    hs_a = all_docs.select(F.col("doc").alias("doc_a"), F.col("hs").alias("hs_a"))
-    hs_b = all_docs.select(F.col("doc").alias("doc_b"), F.col("hs").alias("hs_b"))
-    return (
-        pairs.join(hs_a, "doc_a")
-        .join(hs_b, "doc_b")
-        .select("doc_a", "doc_b", jaccard(F.col("hs_a"), F.col("hs_b")).alias("j"))
-        .where(F.col("j") >= threshold)
-        .select("doc_a", "doc_b", F.round("j", 4).alias("jaccard"))
-    )
+    return _verified(pairs, all_docs, all_docs, "doc_a", "doc_b", threshold)
 
 
 def minhash_cross_pairs(
@@ -909,18 +867,7 @@ def minhash_cross_pairs(
         .select(F.col("a.doc").alias("left_id"), F.col("b.doc").alias("right_id"))
         .distinct()
     )
-    hs_l = hashed_l.select(F.col("doc").alias("left_id"), F.col("hs").alias("hs_l"))
-    hs_r = hashed_r.select(F.col("doc").alias("right_id"), F.col("hs").alias("hs_r"))
-    return (
-        pairs.join(hs_l, "left_id")
-        .join(hs_r, "right_id")
-        .select(
-            "left_id", "right_id",
-            jaccard(F.col("hs_l"), F.col("hs_r")).alias("j"),
-        )
-        .where(F.col("j") >= threshold)
-        .select("left_id", "right_id", F.round("j", 4).alias("jaccard"))
-    )
+    return _verified(pairs, hashed_l, hashed_r, "left_id", "right_id", threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -2049,7 +1996,7 @@ def duplicated_token_spans(
     (:func:`_hash_long60`) — corpus-wide frequency counting in a 32-bit
     space would birthday-collide around ~65k distinct grams and report
     unique text as duplicated."""
-    grams = _positioned_grams(df, text_col, id_col, k)
+    grams = _positioned_grams(_tokenized(df, text_col, id_col), k)
     if persist:
         # the gram frame feeds BOTH the frequency aggregate and the
         # semi-join probe; without a cache each side re-pays the
@@ -2081,7 +2028,7 @@ def gram_count_table(
     mergeable aggregate that checkpoints between ingest batches. Same
     60-bit fingerprint space as the batch detector."""
     return (
-        _positioned_grams(df, text_col, id_col, k)
+        _positioned_grams(_tokenized(df, text_col, id_col), k)
         .groupBy("g")
         .agg(F.count("*").cast("long").alias("n"))
     )
@@ -2134,7 +2081,7 @@ def duplicated_token_spans_incremental(
     # disk round-trip (measured +25% cold at sf1). The batch detector
     # caches because its probe side skips the g-shuffle (broadcast
     # semi-join), leaving no exchange to reuse.
-    grams_b = _positioned_grams(batch, text_col, id_col, k)
+    grams_b = _positioned_grams(_tokenized(batch, text_col, id_col), k)
     counts_b = grams_b.groupBy("g").agg(
         F.count("*").cast("long").alias("n")
     )
@@ -2175,9 +2122,7 @@ def remove_duplicated_spans(
         df, text_col, id_col, k=k, min_occurrences=min_occurrences,
         persist=persist,
     )
-    base = df.select(
-        F.col(id_col).alias("doc"), tokens(F.col(text_col)).alias("ws")
-    )
+    base = _tokenized(df, text_col, id_col)
     located = spans.join(
         base, spans.doc_id == base.doc
     ).select(
@@ -2242,12 +2187,10 @@ def remove_duplicated_spans_incremental(
     # branch — four tokenize passes before; persisted (with removals,
     # below) it is one. Lifecycle matches the removals cache: released
     # by the caller's clearCache / persist=False contract.
-    base = batch.select(
-        F.col(id_col).alias("doc"), tokens(F.col(text_col)).alias("ws")
-    )
+    base = _tokenized(batch, text_col, id_col)
     if persist:
         base = base.persist()
-    grams_b = _positioned_grams_from_ws(base, k)
+    grams_b = _positioned_grams(base, k)
     # batch-side gram frequency as a window (one shuffle by g, no
     # broadcast — the distinct-gram set is ~|batch tokens|, never
     # broadcast-sized); the store join then reuses the g-partitioning

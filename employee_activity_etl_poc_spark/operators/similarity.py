@@ -14,7 +14,7 @@ Two tiers:
 
 Scale discipline applied throughout:
 - norms are computed ONCE per row in a projection before the join —
-  ``cosine()`` inside an O(n×q) join would redo the O(dim) norm fold per
+  a pairwise cosine inside an O(n×q) join would redo the O(dim) norm fold per
   PAIR, turning O((n+q)·dim) work into O(n·q·dim);
 - hyperplane weights are row-independent → materialized as array literals
   on the driver (same md5 derivation), not re-hashed per row;
@@ -39,12 +39,6 @@ def dot(a: Column, b: Column) -> Column:
 
 def norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Pairwise cosine. For joins, prefer projecting ``norm`` per side first
-    and dividing the dot product — see module docstring."""
-    return dot(a, b) / (norm(a) * norm(b))
 
 
 def _as_double(df: DataFrame, vec_col: str, out: str = "v") -> DataFrame:

@@ -4575,7 +4575,10 @@ def quality_ensemble_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate (dsir_doc_bucket) instead of two full feature passes —
     # shared structurally, not left to AQE exchange reuse (which the
     # previously-differing projections below the exchange defeated).
-    assert len(model["w6"]) == 1024  # == dsir_doc_bucket's n_buckets
+    if len(model["w6"]) != 1024:  # == dsir_doc_bucket's n_buckets
+        raise ValueError(
+            f"classifier has {len(model['w6'])} feature buckets, expected 1024"
+        )
     bucket_counts = TX.dsir_doc_bucket(
         docs, "text", "doc_id", target=F.col("lang") == "en", n_buckets=1024
     )

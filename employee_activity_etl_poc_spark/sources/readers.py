@@ -83,9 +83,12 @@ def clear_table_cache() -> None:
 
 
 def _parse_bytes_conf(v: str) -> int:
-    """'128m' / '1g' / '134217728' / '4194304b' -> bytes."""
+    """'128m' / '64MB' / '1gb' / '134217728' / '4194304b' -> bytes — Spark's
+    byte-string suffixes (one or two letters, any case)."""
     v = v.strip().lower()
-    mult = {"b": 1, "k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4}
+    if v.endswith("b"):
+        v = v[:-1]
+    mult = {"k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4}
     if v and v[-1] in mult:
         return int(float(v[:-1]) * mult[v[-1]])
     return int(v)
@@ -121,10 +124,7 @@ def _scan_fan_out(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     itself (ceil(bytes / maxPartitionBytes) >= cores — any real corpus,
     certainly 100 TB), this is a NO-OP by construction: no extra
     exchange ever reaches a production plan. The decision reads file
-    metadata only (no Spark job — the plan census stays compile-only).
-    ``SPARK_GRAFT_SCAN_FANOUT=0`` disables it outright."""
-    if os.environ.get("SPARK_GRAFT_SCAN_FANOUT", "1") == "0":
-        return df
+    metadata only (no Spark job — the plan census stays compile-only)."""
     try:
         sizes: list[tuple[str, int]]
         if os.path.isdir(path):

@@ -2459,3 +2459,6 @@ def test_lsh_parameter_report_shape_and_default_validation(spark):
     # exactly one recommended split, and it is the registry default 4x4
     rec = [k for k, r in rep.items() if r["recommended"] == 1]
     assert rec == [(4, 4)]
+    # not a power of two: an explicit raise, which survives ``python -O``
+    with pytest.raises(ValueError):
+        D.lsh_parameter_report(spark, num_perm=12)

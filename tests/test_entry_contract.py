@@ -43,6 +43,15 @@ def test_every_query_has_callable_and_most_have_oracles(spark):
     assert missing == set()
 
 
+def test_queries_are_ordered_stalest_gate_first():
+    # the correctness gate checks a prefix of queries(): never-gated lead,
+    # then ascending latest CORRECTNESS_r<N>.json round
+    latest = E._latest_gate_round()
+    rounds = [latest.get(n, 0) for n in E.queries()]
+    assert rounds == sorted(rounds)
+    assert list(E.oracle_sql()) == list(E.queries())
+
+
 @pytest.fixture(scope="module")
 def duck():
     con = duckdb.connect()

@@ -9,7 +9,25 @@ from employee_activity_etl_poc_spark.schemas import (
     EMPLOYEE_ALIASES,
     canonicalize,
 )
-from employee_activity_etl_poc_spark.sources.readers import _sniff_csv, read_csv_sniffed
+from employee_activity_etl_poc_spark.sources.readers import (
+    _parse_bytes_conf,
+    _sniff_csv,
+    read_csv_sniffed,
+)
+
+
+def test_parse_bytes_conf_accepts_spark_suffixes():
+    # spark.sql.files.maxPartitionBytes takes one- and two-letter suffixes
+    # in any case; a parse failure would silently fall back to 128 MiB
+    mib = 1024**2
+    assert _parse_bytes_conf("134217728") == 128 * mib
+    assert _parse_bytes_conf("4194304b") == 4 * mib
+    assert _parse_bytes_conf("128m") == 128 * mib
+    assert _parse_bytes_conf("128mb") == 128 * mib
+    assert _parse_bytes_conf("64MB") == 64 * mib
+    assert _parse_bytes_conf("512KB") == 512 * 1024
+    assert _parse_bytes_conf(" 1gb ") == 1024 * mib
+    assert _parse_bytes_conf("1g") == 1024 * mib
 
 
 def test_sniff_semicolon_latin1(tmp_path):
