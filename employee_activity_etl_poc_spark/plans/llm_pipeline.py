@@ -37,6 +37,16 @@ Batch lifecycle (run per arrival, e.g. inside ``foreachBatch``):
 6. append the batch's signatures (including losers' — future dups of a
    dropped doc must still collide with SOMETHING) to the store.
 
+Caching: each decision frame is persisted once, and the count that
+reports it is the action that materializes it — the exact-deduped batch
+(``n_after_exact``), the near-dup losers (``n_near_dup_losers``), the
+span-cleaned survivors (``n_span_tokens_removed``) and the gated
+survivors (``n_after_quality``), plus the batch signatures — so later
+actions and the sink writes read those caches instead of re-running the
+exact-dedup, signing and band-join lineage. The function owns every
+cache and releases it on every exit: return, ``TemplateFloodError`` or a
+failed write.
+
 Idempotency: ``foreachBatch`` is AT-LEAST-ONCE — a crash after the sink
 writes but before the checkpoint commits replays the micro-batch. The
 streaming path therefore keys both persistent sinks by ``batch_id``
@@ -50,6 +60,7 @@ consistently per ``workdir``.
 from __future__ import annotations
 
 import os
+from contextlib import ExitStack
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -203,322 +214,338 @@ def ingest_document_batch(
     shards_path = os.path.join(workdir, "shards")
     recover_staged_swap(spark, store_path)
 
-    n_arrived = batch.count()
+    # Every per-batch cache is registered here and released on every exit
+    # (return, TemplateFloodError, a failed write): one cached frame per
+    # micro-batch would otherwise accumulate in a foreachBatch stream.
+    # The handles live on the stack, not in the names below, because
+    # line_dedup and the quality-model stage rebind `deduped` / `gated`.
+    with ExitStack() as owned:
 
-    # Optional SoftDeDup weighting (computed at ARRIVAL, before any
-    # gate: the weight reflects global duplication pressure of the
-    # content, not survivorship)
-    soft_weights = None
-    n_soft_reweighted = None
-    soft_path = os.path.join(workdir, "softstore")
-    if soft_dedup:
-        if recover_staged_swap(spark, soft_path):
-            sstore = spark.read.parquet(soft_path)
-            if batch_id is not None and "batch" in sstore.columns:
-                sstore = sstore.where(F.col("batch") != F.lit(batch_id))
-            sstore = sstore.groupBy("h").agg(
-                F.sum("dup_count").cast("long").alias("dup_count")
-            )
-        else:
-            sstore = None
-        weighted = D.soft_dedup_incremental(
-            sstore, batch, "text", "doc_id"
-        ).persist()  # one pass serves the counts, the exemption and export
-        soft_weights = weighted.select(
-            "doc_id", "dup_count", "soft_weight_units"
-        )
-        exact_repeats = soft_weights.where(F.col("dup_count") > 1).select(
-            "doc_id"
-        )
-        n_soft_reweighted = exact_repeats.count()
+        def cached(df: DataFrame) -> DataFrame:
+            df = df.persist()
+            owned.callback(df.unpersist)
+            return df
 
-    if soft_dedup:
-        # exact repeats are reweighted, not dropped
-        deduped = batch
-        n_after_exact = n_arrived
-    else:
-        deduped = D.drop_exact_duplicates(batch, "text", "doc_id")
-        n_after_exact = deduped.count()
+        n_arrived = batch.count()
 
-    # Optional C4-style line cleaning (Raffel et al. 2020 §2.2,
-    # incremental form): strip lines already seen in ANY earlier batch
-    # (cross-site boilerplate) and corpus-duplicate lines within the
-    # batch, BEFORE anything downstream tokenizes — the signatures, the
-    # pre-flight estimate, spans and the quality gate all see the
-    # cleaned text. A doc whose every line lost (a pure copy / pure
-    # boilerplate page) drops here. The line store mirrors the
-    # signature store's lifecycle: batch-keyed partitions, replay
-    # exclusion, 8 bytes per distinct line ever ingested (losers'
-    # lines too — later copies of a dropped line must still collide).
-    n_lines_removed = 0
-    n_line_dropped = 0
-    line_path = os.path.join(workdir, "linestore")
-    if line_dedup:
-        if recover_staged_swap(spark, line_path):
-            lstore = spark.read.parquet(line_path)
-            if batch_id is not None and "batch" in lstore.columns:
-                lstore = lstore.where(F.col("batch") != F.lit(batch_id))
-            lstore = lstore.select("g")
-        else:
-            lstore = None
-        cleaned_lines = D.line_dedup_incremental(
-            lstore, deduped, "text", "doc_id", sep=line_sep
-        )
-        agg = cleaned_lines.agg(
-            F.sum(F.col("n_lines") - F.col("n_kept")).alias("cut"),
-            F.sum((F.col("n_kept") == 0).cast("long")).alias("dropped"),
-        ).collect()[0]
-        n_lines_removed = int(agg["cut"] or 0)
-        n_line_dropped = int(agg["dropped"] or 0)
-        # the batch's store rows come from the PRE-clean text (every
-        # line seen, kept or cut), bound before `deduped` is rebound
-        line_rows = D.line_store(deduped, "text", "doc_id", sep=line_sep)
-        deduped = cleaned_lines.where(F.col("n_kept") > 0).select(
-            "doc_id", F.col("text_kept").alias("text")
-        )
-
-    # Sampled LSH pre-flight (r8 judge ask #3, wired like the ANN
-    # lifecycle hook): estimate the candidate-pair volume the minhash
-    # band-join is ABOUT to generate for this batch — on a deterministic
-    # 1/sample_mod md5 sample, so the guard costs ~1/sample_mod of a
-    # signing pass — and bail before the join or any sink write when the
-    # estimate says template flood. The bound is pairs-per-doc: a
-    # healthy near-dup corpus generates O(n) candidates (est ratio ~0-5
-    # in the sweeps); a template flood is one bucket of F docs → ~F²/2
-    # pairs, so the ratio crosses any linear bound as soon as
-    # F² > bound·n. Same banding params as the join it protects.
-    preflight_est_pairs = None
-    preflight_est_docs = None
-    if lsh_preflight:
-        stats = D.lsh_bucket_stats_sampled(
-            deduped, "text", "doc_id", sample_mod=preflight_sample_mod
-        ).collect()[0]
-        # NULL-safe: when the 1/sample_mod sample selects zero docs
-        # (empty batch, or ~((m-1)/m)^n for a tiny one, or every doc
-        # shorter than shingle_k tokens), the global aggregates come
-        # back as one row with max_bucket/candidate_pairs = NULL — that
-        # is a vacuously healthy batch, not a flood.
-        preflight_est_pairs = int(stats["est_candidate_pairs"] or 0)
-        preflight_est_docs = int(stats["est_n_docs"] or 0)
-        est_docs = max(preflight_est_docs, 1)
-        if preflight_est_pairs > preflight_pairs_per_doc_bound * est_docs:
-            raise TemplateFloodError(
-                f"batch{'' if batch_id is None else f' {batch_id}'}: "
-                f"sampled LSH pre-flight estimates "
-                f"{preflight_est_pairs} candidate pairs for ~{est_docs} "
-                f"docs (> {preflight_pairs_per_doc_bound}/doc; "
-                f"est_max_bucket={int(stats['est_max_bucket'] or 0)}) — "
-                "template flood; quarantine the batch or prune with "
-                "max_doc_frequency before the minhash join pays for it"
-            )
-
-    sigs = D.minhash_signature_table(deduped, "text", "doc_id").persist()
-    if os.path.isdir(store_path):
-        store = spark.read.parquet(store_path)
-        if batch_id is not None and "batch" in store.columns:
-            # a replayed batch's stale signatures are partition-pruned out
-            store = store.where(F.col("batch") != F.lit(batch_id))
-        store = store.select("doc", "hs", "sig")
-    else:
-        store = sigs.limit(0)
-    pairs = D.minhash_incremental_pairs(
-        store, sigs, threshold=jaccard_threshold
-    )
-    # Survivor policy: a pair spanning store and batch drops the BATCH
-    # member — the store doc was already exported by an earlier batch and
-    # cannot be retracted, so dropping it would keep both copies while
-    # claiming one lost. Within-batch pairs (both members new) drop the
-    # larger id (min-id policy, consistent with exact dedup). doc_b∈batch
-    # covers both batch×batch pairs (doc_b is the larger id) and
-    # store(a)×batch(b); otherwise doc_b is a store doc and doc_a must be
-    # the batch member (every incremental pair has one).
-    batch_b = sigs.select(F.col("doc").alias("doc_b"))
-    losers = (
-        pairs.join(batch_b, "doc_b", "left_semi")
-        .select(F.col("doc_b").alias("doc_id"))
-        .unionByName(
-            pairs.join(batch_b, "doc_b", "left_anti").select(
-                F.col("doc_a").alias("doc_id")
-            )
-        )
-        .distinct()
-    )
-    if soft_dedup:
-        # an exact repeat's J=1 pair partner is precisely the earlier
-        # copy it is being downweighted against — dropping it would
-        # re-introduce hard dedup through the back door
-        losers = losers.join(exact_repeats, "doc_id", "left_anti")
-    survivors = deduped.join(losers, "doc_id", "left_anti")
-    # every loser is a batch member, so the count equals docs actually
-    # dropped from THIS batch (store-side pair members are never counted)
-    n_losers = losers.count()
-
-    # Optional span-level cleaning (Lee et al. 2022, incremental form):
-    # document-level dedup keeps one copy of a PAGE; this cuts the
-    # duplicated PASSAGES inside surviving pages against everything ever
-    # exported — the memorization signal. The gram store mirrors the
-    # signature store's lifecycle: batch-keyed partitions, replay
-    # exclusion, counts of the EXPORTED (cleaned, quality-passed) text so
-    # the store is exactly the retained corpus.
-    n_span_tokens_removed = 0
-    gram_path = os.path.join(workdir, "gramstore")
-    if span_dedup:
-        if recover_staged_swap(spark, gram_path):
-            gstore = spark.read.parquet(gram_path)
-            if batch_id is not None and "batch" in gstore.columns:
-                gstore = gstore.where(F.col("batch") != F.lit(batch_id))
-            gstore = gstore.groupBy("g").agg(
-                F.sum("n").cast("long").alias("n")
-            )
-        else:
-            gstore = local_df(spark, [], "g long, n long")
-        # persist=False: a long-running foreachBatch stream calls this
-        # once per micro-batch, and nobody here owns an unpersist handle
-        # for the remover's internal removals frame — the default would
-        # leak one cached DataFrame per batch. Recompute cost is bounded
-        # (the removals frame is batch-proportional); results identical.
-        cleaned = D.remove_duplicated_spans_incremental(
-            gstore, survivors, "text", "doc_id", k=span_k, persist=False
-        )
-        n_span_tokens_removed = int(
-            cleaned.agg(F.sum("n_tokens_removed")).collect()[0][0] or 0
-        )
-        survivors = cleaned.select(
-            "doc_id", F.col("text_clean").alias("text")
-        )
-
-    # tokenize once for the combined quality+lang gate (26 inlined
-    # splits otherwise — r8 ask #6's project-once pattern)
-    toked = survivors.withColumn("_ws", tokens(F.col("text")))
-    gated = (
-        toked.withColumn(
-            "quality", quality_score(F.col("text"), toks=F.col("_ws"))
-        )
-        .withColumn("lang", lang_id(toks=F.col("_ws")))
-        .where(
-            (F.col("quality") >= min_quality) & F.col("lang").isin(*keep_langs)
-        )
-        .drop("_ws")
-    )
-    n_after_quality = gated.count()
-
-    # Optional learned quality filter (stage 4b): score the heuristic
-    # survivors under the persisted classifier artifact and keep
-    # score >= model_min_score. Runs BEFORE export so every store
-    # (grams) and the shards reflect exactly the retained corpus.
-    n_after_model = None
-    model_psi = None
-    if quality_model_path is not None:
-        from ..operators.model_store import load_classifier_artifact
-        from ..operators.textops import score_quality_classifier
-
-        art = load_classifier_artifact(spark, quality_model_path)
-        scored = score_quality_classifier(
-            gated, "text", "doc_id", label=F.lit(0),
-            w6=art["w6"], b6=art["b6"],
-        ).persist()  # one feature pass serves the gate AND the monitor
-        keep_ids = scored.where(
-            F.col("score") >= F.lit(float(model_min_score))
-        ).select("doc_id")
-        gated = gated.join(keep_ids, "doc_id", "left_semi")
-        n_after_model = gated.count()
-        if art["score_profile"] is not None:
-            # label-free model-health monitor: PSI of the batch's score
-            # histogram vs the training-time profile stored in the
-            # artifact — one 10-row aggregate on the already-persisted
-            # scores; the batch is scored under the PINNED weights, so a
-            # breach means the CORPUS moved, not the model
-            from .model_lifecycle import psi, score_profile
-
-            model_psi = round(
-                psi(score_profile(scored), art["score_profile"]), 6
-            )
-        scored.unpersist()
-
-    chunks = chunk_tokens(gated, "text", "doc_id").join(
-        gated.select("doc_id", "quality", "lang"), "doc_id"
-    )
-    if soft_dedup:
-        chunks = chunks.join(
-            soft_weights.select("doc_id", "soft_weight_units"), "doc_id"
-        )
-    if batch_id is None:
-        write_training_shards(
-            chunks, shards_path, "doc_id", n_shards=n_shards, mode="append"
-        )
-        # append ALL batch signatures (survivors AND losers): later copies
-        # of a dropped doc must still find a collision partner in the store
-        sigs.write.mode("append").parquet(store_path)
+        # Optional SoftDeDup weighting (computed at ARRIVAL, before any
+        # gate: the weight reflects global duplication pressure of the
+        # content, not survivorship)
+        soft_weights = None
+        n_soft_reweighted = None
+        soft_path = os.path.join(workdir, "softstore")
         if soft_dedup:
-            D.soft_dedup_store(batch, "text").write.mode("append").parquet(
-                soft_path
+            if recover_staged_swap(spark, soft_path):
+                sstore = spark.read.parquet(soft_path)
+                if batch_id is not None and "batch" in sstore.columns:
+                    sstore = sstore.where(F.col("batch") != F.lit(batch_id))
+                sstore = sstore.groupBy("h").agg(
+                    F.sum("dup_count").cast("long").alias("dup_count")
+                )
+            else:
+                sstore = None
+            weighted = cached(
+                D.soft_dedup_incremental(sstore, batch, "text", "doc_id")
+            )  # one pass serves the counts, the exemption and export
+            soft_weights = weighted.select(
+                "doc_id", "dup_count", "soft_weight_units"
             )
+            exact_repeats = soft_weights.where(F.col("dup_count") > 1).select(
+                "doc_id"
+            )
+            n_soft_reweighted = exact_repeats.count()
+
+        if soft_dedup:
+            # exact repeats are reweighted, not dropped
+            deduped = batch
+            n_after_exact = n_arrived
+        else:
+            deduped = cached(D.drop_exact_duplicates(batch, "text", "doc_id"))
+            n_after_exact = deduped.count()
+
+        # Optional C4-style line cleaning (Raffel et al. 2020 §2.2,
+        # incremental form): strip lines already seen in ANY earlier batch
+        # (cross-site boilerplate) and corpus-duplicate lines within the
+        # batch, BEFORE anything downstream tokenizes — the signatures, the
+        # pre-flight estimate, spans and the quality gate all see the
+        # cleaned text. A doc whose every line lost (a pure copy / pure
+        # boilerplate page) drops here. The line store mirrors the
+        # signature store's lifecycle: batch-keyed partitions, replay
+        # exclusion, 8 bytes per distinct line ever ingested (losers'
+        # lines too — later copies of a dropped line must still collide).
+        n_lines_removed = 0
+        n_line_dropped = 0
+        line_path = os.path.join(workdir, "linestore")
         if line_dedup:
-            line_rows.write.mode("append").parquet(line_path)
-        if span_dedup:
-            D.gram_count_table(gated, "text", "doc_id", k=span_k).write.mode(
-                "append"
-            ).parquet(gram_path)
-    else:
-        write_training_shards(
-            chunks,
-            os.path.join(shards_path, f"batch={batch_id}"),
-            "doc_id",
-            n_shards=n_shards,
-            mode="overwrite",
+            if recover_staged_swap(spark, line_path):
+                lstore = spark.read.parquet(line_path)
+                if batch_id is not None and "batch" in lstore.columns:
+                    lstore = lstore.where(F.col("batch") != F.lit(batch_id))
+                lstore = lstore.select("g")
+            else:
+                lstore = None
+            cleaned_lines = D.line_dedup_incremental(
+                lstore, deduped, "text", "doc_id", sep=line_sep
+            )
+            agg = cleaned_lines.agg(
+                F.sum(F.col("n_lines") - F.col("n_kept")).alias("cut"),
+                F.sum((F.col("n_kept") == 0).cast("long")).alias("dropped"),
+            ).collect()[0]
+            n_lines_removed = int(agg["cut"] or 0)
+            n_line_dropped = int(agg["dropped"] or 0)
+            # the batch's store rows come from the PRE-clean text (every
+            # line seen, kept or cut), bound before `deduped` is rebound
+            line_rows = D.line_store(deduped, "text", "doc_id", sep=line_sep)
+            deduped = cleaned_lines.where(F.col("n_kept") > 0).select(
+                "doc_id", F.col("text_kept").alias("text")
+            )
+
+        # Sampled LSH pre-flight (r8 judge ask #3, wired like the ANN
+        # lifecycle hook): estimate the candidate-pair volume the minhash
+        # band-join is ABOUT to generate for this batch — on a deterministic
+        # 1/sample_mod md5 sample, so the guard costs ~1/sample_mod of a
+        # signing pass — and bail before the join or any sink write when the
+        # estimate says template flood. The bound is pairs-per-doc: a
+        # healthy near-dup corpus generates O(n) candidates (est ratio ~0-5
+        # in the sweeps); a template flood is one bucket of F docs → ~F²/2
+        # pairs, so the ratio crosses any linear bound as soon as
+        # F² > bound·n. Same banding params as the join it protects.
+        preflight_est_pairs = None
+        preflight_est_docs = None
+        if lsh_preflight:
+            stats = D.lsh_bucket_stats_sampled(
+                deduped, "text", "doc_id", sample_mod=preflight_sample_mod
+            ).collect()[0]
+            # NULL-safe: when the 1/sample_mod sample selects zero docs
+            # (empty batch, or ~((m-1)/m)^n for a tiny one, or every doc
+            # shorter than shingle_k tokens), the global aggregates come
+            # back as one row with max_bucket/candidate_pairs = NULL — that
+            # is a vacuously healthy batch, not a flood.
+            preflight_est_pairs = int(stats["est_candidate_pairs"] or 0)
+            preflight_est_docs = int(stats["est_n_docs"] or 0)
+            est_docs = max(preflight_est_docs, 1)
+            if preflight_est_pairs > preflight_pairs_per_doc_bound * est_docs:
+                raise TemplateFloodError(
+                    f"batch{'' if batch_id is None else f' {batch_id}'}: "
+                    f"sampled LSH pre-flight estimates "
+                    f"{preflight_est_pairs} candidate pairs for ~{est_docs} "
+                    f"docs (> {preflight_pairs_per_doc_bound}/doc; "
+                    f"est_max_bucket={int(stats['est_max_bucket'] or 0)}) — "
+                    "template flood; quarantine the batch or prune with "
+                    "max_doc_frequency before the minhash join pays for it"
+                )
+
+        sigs = cached(D.minhash_signature_table(deduped, "text", "doc_id"))
+        if os.path.isdir(store_path):
+            store = spark.read.parquet(store_path)
+            if batch_id is not None and "batch" in store.columns:
+                # a replayed batch's stale signatures are partition-pruned out
+                store = store.where(F.col("batch") != F.lit(batch_id))
+            store = store.select("doc", "hs", "sig")
+        else:
+            store = sigs.limit(0)
+        pairs = D.minhash_incremental_pairs(
+            store, sigs, threshold=jaccard_threshold
         )
-        sigs.write.mode("overwrite").parquet(
-            os.path.join(store_path, f"batch={batch_id}")
+        # Survivor policy: a pair spanning store and batch drops the BATCH
+        # member — the store doc was already exported by an earlier batch and
+        # cannot be retracted, so dropping it would keep both copies while
+        # claiming one lost. Within-batch pairs (both members new) drop the
+        # larger id (min-id policy, consistent with exact dedup). doc_b∈batch
+        # covers both batch×batch pairs (doc_b is the larger id) and
+        # store(a)×batch(b); otherwise doc_b is a store doc and doc_a must be
+        # the batch member (every incremental pair has one). One pass over
+        # `pairs`: a left join flags whether doc_b is a batch member.
+        batch_b = sigs.select(
+            F.col("doc").alias("doc_b"), F.lit(True).alias("_new")
+        )
+        losers = (
+            pairs.join(batch_b, "doc_b", "left")
+            .select(
+                F.when(F.col("_new"), F.col("doc_b"))
+                .otherwise(F.col("doc_a"))
+                .alias("doc_id")
+            )
+            .distinct()
         )
         if soft_dedup:
-            D.soft_dedup_store(batch, "text").write.mode("overwrite").parquet(
-                os.path.join(soft_path, f"batch={batch_id}")
-            )
-        if line_dedup:
-            line_rows.write.mode("overwrite").parquet(
-                os.path.join(line_path, f"batch={batch_id}")
-            )
-        if span_dedup:
-            D.gram_count_table(gated, "text", "doc_id", k=span_k).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(gram_path, f"batch={batch_id}"))
-    ann_action = None
-    ann_imbalance = None
-    if ann_index:
-        if vec_col not in batch.columns:
-            raise ValueError(
-                f"ann_index=True needs column '{vec_col}' on the batch"
-            )
-        from .model_lifecycle import refresh_ivf_index_if_drifted
+            # an exact repeat's J=1 pair partner is precisely the earlier
+            # copy it is being downweighted against — dropping it would
+            # re-introduce hard dedup through the back door
+            losers = losers.join(exact_repeats, "doc_id", "left_anti")
+        losers = cached(losers)
+        survivors = deduped.join(losers, "doc_id", "left_anti")
+        # every loser is a batch member, so the count equals docs actually
+        # dropped from THIS batch (store-side pair members are never counted)
+        n_losers = losers.count()
 
-        emb_path = os.path.join(workdir, "embstore")
-        # embeddings of the EXPORTED docs only — the index should serve
-        # the retained corpus, and dropped near-dups would double-count
-        # their cluster's density in the cell-balance monitor
-        exported_emb = batch.select("doc_id", vec_col).join(
-            gated.select("doc_id"), "doc_id", "left_semi"
+        # Optional span-level cleaning (Lee et al. 2022, incremental form):
+        # document-level dedup keeps one copy of a PAGE; this cuts the
+        # duplicated PASSAGES inside surviving pages against everything ever
+        # exported — the memorization signal. The gram store mirrors the
+        # signature store's lifecycle: batch-keyed partitions, replay
+        # exclusion, counts of the EXPORTED (cleaned, quality-passed) text so
+        # the store is exactly the retained corpus.
+        n_span_tokens_removed = 0
+        gram_path = os.path.join(workdir, "gramstore")
+        if span_dedup:
+            if recover_staged_swap(spark, gram_path):
+                gstore = spark.read.parquet(gram_path)
+                if batch_id is not None and "batch" in gstore.columns:
+                    gstore = gstore.where(F.col("batch") != F.lit(batch_id))
+                gstore = gstore.groupBy("g").agg(
+                    F.sum("n").cast("long").alias("n")
+                )
+            else:
+                gstore = local_df(spark, [], "g long, n long")
+            # persist=False: the remover's internal caches (tokenized base,
+            # removals) would have no unpersist handle here and leak one
+            # cached frame per micro-batch. The pipeline caches the
+            # remover's OUTPUT instead, on its own stack, so the span
+            # lineage runs once per batch and is released with the rest.
+            cleaned = cached(
+                D.remove_duplicated_spans_incremental(
+                    gstore, survivors, "text", "doc_id", k=span_k,
+                    persist=False,
+                )
+            )
+            n_span_tokens_removed = int(
+                cleaned.agg(F.sum("n_tokens_removed")).collect()[0][0] or 0
+            )
+            survivors = cleaned.select(
+                "doc_id", F.col("text_clean").alias("text")
+            )
+
+        # tokenize once for the combined quality+lang gate (26 inlined
+        # splits otherwise — r8 ask #6's project-once pattern)
+        toked = survivors.withColumn("_ws", tokens(F.col("text")))
+        gated = cached(
+            toked.withColumn(
+                "quality", quality_score(F.col("text"), toks=F.col("_ws"))
+            )
+            .withColumn("lang", lang_id(toks=F.col("_ws")))
+            .where(
+                (F.col("quality") >= min_quality) & F.col("lang").isin(*keep_langs)
+            )
+            .drop("_ws")
         )
+        n_after_quality = gated.count()
+
+        # Optional learned quality filter (stage 4b): score the heuristic
+        # survivors under the persisted classifier artifact and keep
+        # score >= model_min_score. Runs BEFORE export so every store
+        # (grams) and the shards reflect exactly the retained corpus.
+        n_after_model = None
+        model_psi = None
+        if quality_model_path is not None:
+            from ..operators.model_store import load_classifier_artifact
+            from ..operators.textops import score_quality_classifier
+
+            art = load_classifier_artifact(spark, quality_model_path)
+            scored = cached(
+                score_quality_classifier(
+                    gated, "text", "doc_id", label=F.lit(0),
+                    w6=art["w6"], b6=art["b6"],
+                )
+            )  # one feature pass serves the gate AND the monitor
+            keep_ids = scored.where(
+                F.col("score") >= F.lit(float(model_min_score))
+            ).select("doc_id")
+            gated = gated.join(keep_ids, "doc_id", "left_semi")
+            n_after_model = gated.count()
+            if art["score_profile"] is not None:
+                # label-free model-health monitor: PSI of the batch's score
+                # histogram vs the training-time profile stored in the
+                # artifact — one 10-row aggregate on the already-persisted
+                # scores; the batch is scored under the PINNED weights, so a
+                # breach means the CORPUS moved, not the model
+                from .model_lifecycle import psi, score_profile
+
+                model_psi = round(
+                    psi(score_profile(scored), art["score_profile"]), 6
+                )
+
+        chunks = chunk_tokens(gated, "text", "doc_id").join(
+            gated.select("doc_id", "quality", "lang"), "doc_id"
+        )
+        if soft_dedup:
+            chunks = chunks.join(
+                soft_weights.select("doc_id", "soft_weight_units"), "doc_id"
+            )
         if batch_id is None:
-            exported_emb.write.mode("append").parquet(emb_path)
-        else:
-            exported_emb.write.mode("overwrite").parquet(
-                os.path.join(emb_path, f"batch={batch_id}")
+            write_training_shards(
+                chunks, shards_path, "doc_id", n_shards=n_shards, mode="append"
             )
-        # the replayed batch's own partition was just overwritten, so the
-        # cumulative read needs no exclusion — it already reflects exactly
-        # one copy of this epoch's export
-        corpus = spark.read.parquet(emb_path).select("doc_id", vec_col)
-        report = refresh_ivf_index_if_drifted(
-            spark, corpus, "doc_id", vec_col,
-            path=os.path.join(workdir, "ann_index"),
-            imbalance_bound=ann_imbalance_bound,
-        )
-        ann_action = report["action"]
-        ann_imbalance = report.get("imbalance")
+            # append ALL batch signatures (survivors AND losers): later copies
+            # of a dropped doc must still find a collision partner in the store
+            sigs.write.mode("append").parquet(store_path)
+            if soft_dedup:
+                D.soft_dedup_store(batch, "text").write.mode("append").parquet(
+                    soft_path
+                )
+            if line_dedup:
+                line_rows.write.mode("append").parquet(line_path)
+            if span_dedup:
+                D.gram_count_table(gated, "text", "doc_id", k=span_k).write.mode(
+                    "append"
+                ).parquet(gram_path)
+        else:
+            write_training_shards(
+                chunks,
+                os.path.join(shards_path, f"batch={batch_id}"),
+                "doc_id",
+                n_shards=n_shards,
+                mode="overwrite",
+            )
+            sigs.write.mode("overwrite").parquet(
+                os.path.join(store_path, f"batch={batch_id}")
+            )
+            if soft_dedup:
+                D.soft_dedup_store(batch, "text").write.mode("overwrite").parquet(
+                    os.path.join(soft_path, f"batch={batch_id}")
+                )
+            if line_dedup:
+                line_rows.write.mode("overwrite").parquet(
+                    os.path.join(line_path, f"batch={batch_id}")
+                )
+            if span_dedup:
+                D.gram_count_table(gated, "text", "doc_id", k=span_k).write.mode(
+                    "overwrite"
+                ).parquet(os.path.join(gram_path, f"batch={batch_id}"))
+        ann_action = None
+        ann_imbalance = None
+        if ann_index:
+            if vec_col not in batch.columns:
+                raise ValueError(
+                    f"ann_index=True needs column '{vec_col}' on the batch"
+                )
+            from .model_lifecycle import refresh_ivf_index_if_drifted
 
-    sigs.unpersist()
-    if soft_dedup:
-        weighted.unpersist()
+            emb_path = os.path.join(workdir, "embstore")
+            # embeddings of the EXPORTED docs only — the index should serve
+            # the retained corpus, and dropped near-dups would double-count
+            # their cluster's density in the cell-balance monitor
+            exported_emb = batch.select("doc_id", vec_col).join(
+                gated.select("doc_id"), "doc_id", "left_semi"
+            )
+            if batch_id is None:
+                exported_emb.write.mode("append").parquet(emb_path)
+            else:
+                exported_emb.write.mode("overwrite").parquet(
+                    os.path.join(emb_path, f"batch={batch_id}")
+                )
+            # the replayed batch's own partition was just overwritten, so the
+            # cumulative read needs no exclusion — it already reflects exactly
+            # one copy of this epoch's export
+            corpus = spark.read.parquet(emb_path).select("doc_id", vec_col)
+            report = refresh_ivf_index_if_drifted(
+                spark, corpus, "doc_id", vec_col,
+                path=os.path.join(workdir, "ann_index"),
+                imbalance_bound=ann_imbalance_bound,
+            )
+            ann_action = report["action"]
+            ann_imbalance = report.get("imbalance")
+
     return IngestBatchResult(
         n_arrived, n_after_exact, n_losers, n_after_quality,
         n_span_tokens_removed, ann_action, ann_imbalance,

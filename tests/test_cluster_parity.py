@@ -9,13 +9,16 @@ secretly relies on single-JVM locality fails here first."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
+
+TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
 
 
 def test_local_cluster_matches_local():
     proc = subprocess.run(
-        [sys.executable, "/root/repo/tools/cluster_check.py"],
+        [sys.executable, os.path.join(TOOLS, "cluster_check.py")],
         capture_output=True,
         text=True,
         timeout=540,

@@ -6,8 +6,10 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from employee_activity_etl_poc_spark.plans import llm_pipeline
 from employee_activity_etl_poc_spark.plans.llm_pipeline import (
     ingest_document_batch,
 )
@@ -1056,3 +1058,89 @@ def test_prune_soft_store_replay_guard(spark, tmp_path):
     rows10 = {r["soft_weight_units"] for r in
               shards.where(F.col("doc_id") == 10).collect()}
     assert rows10 == {500000}
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["default", "span_dedup", "line_dedup", "soft_dedup", "quality_model",
+     "template_flood", "shard_write_fails"],
+)
+def test_ingest_releases_every_cache(spark, tmp_path, monkeypatch, case):
+    """ingest_document_batch caches each batch's decision frames and must
+    release every one of them on every exit — each opt-in stage, a
+    TemplateFloodError, and a sink write that raises — or a foreachBatch
+    stream accumulates one set of cached frames per micro-batch. The
+    persistent-RDD registry is compared by id: only an RDD the call
+    registered and left behind fails the test, not an unrelated cache
+    collected meanwhile."""
+    from employee_activity_etl_poc_spark.operators.model_store import (
+        N_PROFILE_BUCKETS,
+        save_classifier,
+    )
+
+    mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")  # noqa: E731
+    page = " ".join(f"alpha{i} beta{i} gamma{i} delta{i}" for i in range(30))
+    other = " ".join(f"epsi{i} zeta{i} eta{i} theta{i}" for i in range(30))
+    # an exact copy and a near copy of `page`, so every stage has work
+    batch = mk([(1, page), (2, page), (3, page + " omega"), (4, other)])
+    kw = dict(min_quality=0.0, keep_langs=("unknown",), batch_id=0)
+    raises = None
+    if case in ("span_dedup", "line_dedup", "soft_dedup"):
+        kw[case] = True
+    elif case == "quality_model":
+        art = str(tmp_path / "qc_model")
+        save_classifier(
+            spark, art, [1, -1] * 8, 0,
+            score_profile=[1] * N_PROFILE_BUCKETS,
+        )
+        kw["quality_model_path"] = art
+    elif case == "template_flood":
+        template = (
+            "terms of service all rights reserved navigation home about "
+            "products contact support careers blog privacy policy cookies"
+        )
+        batch = mk([(i, f"{template} page {i}") for i in range(400)])
+        kw["lsh_preflight"] = True
+        raises = llm_pipeline.TemplateFloodError
+    elif case == "shard_write_fails":
+        def failing_write(*args, **kwargs):
+            raise OSError("injected shard-write failure")
+
+        monkeypatch.setattr(
+            llm_pipeline, "write_training_shards", failing_write
+        )
+        raises = OSError
+
+    before = _persistent_rdd_ids(spark)
+    wd = str(tmp_path / "ingest")
+    if raises is None:
+        ingest_document_batch(spark, batch, wd, **kw)
+    else:
+        with pytest.raises(raises):
+            ingest_document_batch(spark, batch, wd, **kw)
+    assert _persistent_rdd_ids(spark) - before == set()
+
+
+def test_default_ingest_job_count_is_pinned(spark, sf_dir, tmp_path):
+    """Each count in ingest_document_batch materializes the cache that
+    every later action and sink write reads, so one default-stage batch
+    runs a bounded number of Spark jobs. Re-inlining the lineage (an
+    action re-running exact dedup, signing and the band-join from the
+    raw batch) multiplies the count: that form ran 153 jobs on this
+    batch, this one 28; the pin allows half of 153."""
+    b1, b2 = _corpus(spark, sf_dir)
+    sc = spark.sparkContext
+    group = "test_default_ingest_job_count_is_pinned"
+    sc.setJobGroup(group, "one default-stage ingest batch")
+    try:
+        ingest_document_batch(spark, b1.unionByName(b2), str(tmp_path / "wd"))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 153 // 2, n_jobs

@@ -34,7 +34,7 @@ pytestmark = [
 def test_auto_config_recall_floors_hold_at_2m_vectors(spark):
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from tools.ann_recall import auto_floors
 
     result = auto_floors(spark, SF100, k=5, n_queries=25)

@@ -6,13 +6,16 @@ hold; see SCALE.md)."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
+
+TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
 
 
 def test_identities_hold_at_smoke_sf():
     proc = subprocess.run(
-        [sys.executable, "/root/repo/tools/self_check.py", "/root/testdata/sf0.001"],
+        [sys.executable, os.path.join(TOOLS, "self_check.py"), "/root/testdata/sf0.001"],
         capture_output=True,
         text=True,
         timeout=420,

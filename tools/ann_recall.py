@@ -20,9 +20,11 @@ for whenever auto cells step up a decade.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -122,7 +124,6 @@ def main() -> None:
 
     if auto_only:
         import json
-        import os
 
         result = auto_floors(spark, sf_dir, k=k, n_queries=n_queries,
                              probe_sweep=probe_sweep)
@@ -131,7 +132,7 @@ def main() -> None:
         for row in result["rows"]:
             print(row)
         base = os.path.basename(sf_dir.rstrip("/")) or "fixture"
-        out = os.path.join("/root/repo", f"RECALL_{base}.json")
+        out = os.path.join(ROOT, f"RECALL_{base}.json")
         with open(out, "w") as fh:
             json.dump(result, fh, indent=1)
         print(f"wrote {out}")

@@ -12,12 +12,13 @@ from __future__ import annotations
 import hashlib
 import json
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from employee_activity_etl_poc_spark.plans.registry import REGISTRY  # noqa: E402
 from employee_activity_etl_poc_spark.schemas import TESTDATA_TABLES  # noqa: E402

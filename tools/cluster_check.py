@@ -18,9 +18,11 @@ Usage: python tools/cluster_check.py [sf_dir]  (exit 0 = parity)
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from tools.check_oracle import normalize  # noqa: E402
 
@@ -69,7 +71,7 @@ def _run(master: str, sf_dir: str) -> dict[str, tuple]:
         # executor JVMs spawn their OWN Python workers, which know nothing
         # of the driver's sys.path hack — ship the repo root explicitly
         # (the local-mode equivalent of --py-files / a wheel on a cluster)
-        .config("spark.executorEnv.PYTHONPATH", "/root/repo")
+        .config("spark.executorEnv.PYTHONPATH", ROOT)
     )
     spark = apply_engine_conf(builder).getOrCreate()
     try:
@@ -102,7 +104,7 @@ def _retry_resilience(sf_dir: str) -> bool:
     builder = (
         SparkSession.builder.master("local-cluster[2,2,1024]")
         .appName("retry_check")
-        .config("spark.executorEnv.PYTHONPATH", "/root/repo")
+        .config("spark.executorEnv.PYTHONPATH", ROOT)
     )
     spark = apply_engine_conf(builder).getOrCreate()
     try:

@@ -1,7 +1,9 @@
 """Regenerate QUERIES.md from the live registry (run after adding queries)."""
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 from employee_activity_etl_poc_spark.plans.registry import REGISTRY  # noqa: E402
 
 lines = [
@@ -24,5 +26,5 @@ lines.append(
     f"Total: {len(REGISTRY)} queries, "
     f"{sum(1 for q in REGISTRY.values() if q.oracle)} oracle-checked."
 )
-open("/root/repo/QUERIES.md", "w").write("\n".join(lines) + "\n")
+open(os.path.join(ROOT, "QUERIES.md"), "w").write("\n".join(lines) + "\n")
 print(f"QUERIES.md: {len(REGISTRY)} entries")

@@ -25,7 +25,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from employee_activity_etl_poc_spark.plans.registry import (  # noqa: E402
     REGISTRY,
@@ -322,7 +323,7 @@ def main() -> int:
     if violations:
         lines += ["", "## VIOLATIONS", ""]
         lines += [f"- {v}" for v in violations]
-    open("/root/repo/PLAN_AUDIT.md", "w").write("\n".join(lines) + "\n")
+    open(os.path.join(ROOT, "PLAN_AUDIT.md"), "w").write("\n".join(lines) + "\n")
     print(f"PLAN_AUDIT.md: {len(rows)} queries")
     for v in violations:
         print(f"VIOLATION {v}")

@@ -24,10 +24,11 @@ Usage: python tools/self_check.py [sf_dir]   (exit 0 = all identities hold)
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.check_oracle import normalize  # noqa: E402
 
