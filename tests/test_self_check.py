@@ -13,9 +13,9 @@ import sys
 TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
 
 
-def test_identities_hold_at_smoke_sf():
+def test_identities_hold_at_smoke_sf(sf_dir):
     proc = subprocess.run(
-        [sys.executable, os.path.join(TOOLS, "self_check.py"), "/root/testdata/sf0.001"],
+        [sys.executable, os.path.join(TOOLS, "self_check.py"), sf_dir],
         capture_output=True,
         text=True,
         timeout=420,
