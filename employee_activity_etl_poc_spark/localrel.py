@@ -1,32 +1,45 @@
-"""One-slice local relations — THE way driver-side rows become a
-DataFrame in this package.
+"""Arrow local relations — THE way driver-side rows become a DataFrame
+in this package.
 
-PySpark's plain ``spark.createDataFrame(local_rows)`` parallelizes the
-rows into ``defaultParallelism`` Python slices (32 here). Any
-single-task consumer — a ``coalesce(1)`` file write, a sequential
-collect, a broadcast build — then drains those 32 partitions as 32
-SEQUENTIAL Python-worker rounds (~135 ms each on 32 cores: the
-index-store artifact save paid 4.4 s for a 5k-row frame before the r9
-fix). Driver-sized frames are bounded by construction, so one slice is
-their honest shape: same values, same schema, one task.
+PySpark's ``createDataFrame`` over Python rows (a list or an RDD) goes
+through ``_createFromRDD``: the plan leaf is ``Scan ExistingRDD``, every
+scan of it runs a Python worker to serve the pickled rows, and its
+``sizeInBytes`` is Long.MaxValue, so the planner never broadcasts it
+unhinted. The first such scan in a session waits ~1.5 s on the worker
+for a 320-row query relation.
 
-This module exists so the idiom has exactly one home (r9 judge ask #4 —
-the pattern had drifted into three private copies). A lint-style pytest
-(``tests/test_localrel_lint.py``) fails any NEW plain
-``createDataFrame`` call site in package code that isn't on its
-documented allowlist.
+:func:`local_df` instead packs the rows into one ``pyarrow.Table`` and
+hands that to ``createDataFrame``, which decodes it in the JVM as a
+``LocalRelation``: reading it (``LocalTableScan``) runs no Python
+worker, the planner sees its real size, and a broadcast of it runs no
+job. Driver-sized frames are bounded by construction, so holding them
+as one local table costs nothing.
+
+A lint-style pytest (``tests/test_localrel_lint.py``) fails any NEW
+plain ``createDataFrame`` call site and any ``parallelize(`` call in
+package code.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType
 
 
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
-    """Driver-local ``rows`` as a ONE-slice DataFrame (empty ``rows``
-    short-circuits: an empty local relation has no slices to mis-shape,
-    and ``parallelize([], 1)`` would lose the schema's nullability
-    round-trip on some row types)."""
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1) if rows else rows, schema
+    """Driver-local ``rows`` (tuples or ``Row``s, in ``schema`` field
+    order) as a DataFrame over an Arrow ``LocalRelation``. ``schema`` is
+    a DDL string or a ``StructType``; its types and nullability are the
+    frame's exactly."""
+    struct = (
+        schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
     )
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows)) if rows else [[] for _ in struct.fields]
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)

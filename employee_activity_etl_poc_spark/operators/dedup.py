@@ -420,14 +420,20 @@ def _shingle_hashes(
     32-bit collisions, and since the SQL oracle computes the identical
     hashes, both engines agree exactly by construction. Long arrays
     also persist ~5× smaller than strings and intersect/union faster
-    in the verify join."""
+    in the verify join. The token array is projected once (``ws``):
+    the per-shingle lambda would otherwise re-split the text once per
+    gram."""
     return (
-        df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("t"))
-        .where(F.size(tokens(F.col("t"))) >= shingle_k)
+        df.select(
+            F.col(id_col).alias("doc"), tokens(F.col(text_col)).alias("ws")
+        )
+        .where(F.size("ws") >= shingle_k)
         .select(
             "doc",
             F.array_distinct(
-                F.transform(shingles("t", shingle_k), _hash_long)
+                F.transform(
+                    shingles(k=shingle_k, toks=F.col("ws")), _hash_long
+                )
             ).alias("hs"),
         )
     )
@@ -670,9 +676,8 @@ def lsh_bucket_stats(
     finally:
         banded.unpersist()
         hashed.unpersist()  # no-op in the un-pruned mode (never persisted)
-    # one-slice local relation (see ..localrel): the eager monitor
-    # result is 1 row; a plain createDataFrame would hand any future
-    # coalesce(1)/sequential consumer 32 sequential Python slices.
+    # the eager monitor result is 1 row: hand it back as a local
+    # relation (see ..localrel), so consumers never re-run the caches
     return local_df(df.sparkSession, rows, out.schema)
 
 

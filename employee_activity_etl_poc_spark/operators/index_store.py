@@ -117,16 +117,14 @@ def save_ann_index(
             _plane_weights(dim, n_planes, t) for t in range(n_tables or 1)
         ]
         rows += _vec_rows("lsh_plane", planes)
-    # ONE slice from the start (see ..localrel): a coalesce(1) write of
-    # a 32-slice local relation drains 32 SEQUENTIAL Python-worker
-    # rounds — measured 4.4 s per artifact save before the r9 fix; the
-    # artifact is driver-sized by construction, so one slice is the
-    # honest shape anyway: 0.3 s, same file, one task on reload.
+    # coalesce(1): a local relation scans as up to one slice per core,
+    # and the artifact is driver-sized, so it is written as ONE file
+    # (one task on reload).
     df = local_df(
         spark, rows,
         "section string, i int, j int, vec array<double>, meta string",
     )
-    df.write.mode("overwrite").parquet(path)
+    df.coalesce(1).write.mode("overwrite").parquet(path)
 
 
 def load_ann_index(spark: SparkSession, path: str) -> dict:

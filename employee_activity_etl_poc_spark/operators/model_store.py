@@ -54,7 +54,7 @@ def save_classifier(
     score_profile: list[int] | None = None,
 ) -> None:
     """Write the grid-unit weight vector + bias as a parquet artifact
-    (one slice — driver-sized by construction: B+2 bigint rows).
+    (one file — driver-sized by construction: B+2 bigint rows).
 
     ``score_profile`` (optional): the TRAINING-TIME score distribution
     as ``N_PROFILE_BUCKETS`` decile counts — the reference histogram
@@ -70,9 +70,9 @@ def save_classifier(
             )
         rows += [(-3 - i, int(c)) for i, c in enumerate(score_profile)]
     rows += [(i, int(v)) for i, v in enumerate(w6)]
-    local_df(spark, rows, "b long, w6 long").write.mode("overwrite").parquet(
-        path
-    )
+    local_df(spark, rows, "b long, w6 long").coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(path)
 
 
 def load_classifier(spark: SparkSession, path: str) -> tuple[list[int], int]:
@@ -158,7 +158,7 @@ def save_tokenizer(
     local_df(
         spark, rows,
         "rank int, lhs string, rhs string, merged string, pair_count long",
-    ).write.mode("overwrite").parquet(path)
+    ).coalesce(1).write.mode("overwrite").parquet(path)
 
 
 def load_tokenizer(spark: SparkSession, path: str) -> list[dict]:
@@ -256,7 +256,7 @@ def save_centroids(
         if len(cv) != dim:
             raise ValueError("ragged centroid list")
         rows += [(cell, j, int(v)) for j, v in enumerate(cv)]
-    local_df(spark, rows, "cell long, j long, c long").write.mode(
+    local_df(spark, rows, "cell long, j long, c long").coalesce(1).write.mode(
         "overwrite"
     ).parquet(path)
 

@@ -139,13 +139,19 @@ def normalize_for_dedup(text: Column | str) -> Column:
     return F.trim(F.regexp_replace(stripped, r" +", " "))
 
 
-def shingles(text: Column | str, k: int = 3) -> Column:
+def shingles(
+    text: Column | str | None = None, k: int = 3, toks: Column | None = None
+) -> Column:
     """Distinct k-word shingles of ``text`` (k=3 default).
 
     Requires >= k tokens; callers filter shorter docs out (Spark's
     ``sequence(1, n)`` runs DESCENDING when n < 1, so an unguarded
-    expression would silently fabricate shingles)."""
-    ws = tokens(text)
+    expression would silently fabricate shingles).
+
+    ``toks`` (an already-projected token array) skips the internal
+    split, which the per-gram lambda would otherwise re-run once per
+    shingle — the project-once pattern (see :func:`lang_id`)."""
+    ws = tokens(text) if toks is None else toks
     idx = F.sequence(F.lit(1), F.size(ws) - (k - 1))
     # slice+array_join, not k element_at's + concat_ws: ~4x fewer
     # interpreted expression nodes per gram (HOF lambdas don't codegen)

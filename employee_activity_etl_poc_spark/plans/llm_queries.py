@@ -2955,8 +2955,8 @@ def embedding_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RELOAD_GATE_BASELINE: dict[str, dict] = {}
 
 
-# One-slice local relations: the shared helper is the single home for
-# the idiom (r9 judge ask #4); see ..localrel for the why.
+# Driver-side rows become Arrow local relations through the one shared
+# helper; see ..localrel for the why.
 from ..localrel import local_df as _local_df  # noqa: E402
 
 
@@ -2986,9 +2986,8 @@ def _reload_gate_exact_rows(spark: SparkSession, sf_dir: str):
 
 
 def _reload_gate_exact(spark: SparkSession, sf_dir: str):
-    """(corpus_n, exact ground-truth top-k as a one-slice local
-    relation). The ONLY field the four recall-only gates touch — no
-    train runs here."""
+    """(corpus_n, exact ground-truth top-k as a local relation). The
+    ONLY field the four recall-only gates touch — no train runs here."""
     n, rows, schema = _reload_gate_exact_rows(spark, sf_dir)
     return n, _local_df(spark, rows, schema)
 

@@ -175,7 +175,7 @@ COUNTERS = {
     "shj": re.compile(r"ShuffledHashJoin"),
     "bnlj_cartesian": re.compile(r"BroadcastNestedLoopJoin|CartesianProduct"),
     "python": re.compile(r"BatchEvalPython|ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas"),
-    "scans": re.compile(r"FileScan parquet|Scan ExistingRDD"),
+    "scans": re.compile(r"FileScan parquet|Scan ExistingRDD|LocalTableScan"),
     "codegen_spans": re.compile(r"\*\(\d+\)"),
 }
 
