@@ -271,12 +271,17 @@ def _perm_params(num_perm: int) -> list[tuple[int, int]]:
     return params
 
 
+def _check_pow2(e: int) -> None:
+    if e < 1 or e & (e - 1):
+        raise ValueError(f"power-of-two exponents only, got {e}")
+
+
 def _pow_int(x: Column, e: int) -> Column:
     """x**e for a power-of-two exponent by repeated squaring — explicit
     IEEE multiplications only, so Spark and the SQL oracle compute
     bit-identical doubles (library pow() is not guaranteed
     correctly-rounded and could flip a grid unit at the boundary)."""
-    assert e >= 1 and (e & (e - 1)) == 0, "power-of-two exponents only"
+    _check_pow2(e)
     while e > 1:
         x = x * x
         e //= 2
@@ -285,7 +290,7 @@ def _pow_int(x: Column, e: int) -> Column:
 
 def pow_int_sql(expr: str, e: int) -> str:
     """SQL twin of :func:`_pow_int` (same repeated-squaring product)."""
-    assert e >= 1 and (e & (e - 1)) == 0
+    _check_pow2(e)
     while e > 1:
         expr = f"(({expr}) * ({expr}))"
         e //= 2

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..localrel import local_df
@@ -45,11 +45,121 @@ def _as_double(df: DataFrame, vec_col: str, out: str = "v") -> DataFrame:
     return df.withColumn(out, F.col(vec_col).cast("array<double>"))
 
 
-def _with_norm(df: DataFrame, vec_col: str, id_col: str, id_out: str, v_out: str, n_out: str) -> DataFrame:
+def _with_norm(
+    df: DataFrame, vec_col: str, id_col: str, id_out: str, v_out: str, n_out: str,
+    *extra: Column,
+) -> DataFrame:
+    """(id_out, v_out, n_out, *extra): the double vector and its norm,
+    computed once per row before any join."""
     d = _as_double(df, vec_col)
     return d.select(
-        F.col(id_col).alias(id_out), F.col("v").alias(v_out), norm(F.col("v")).alias(n_out)
+        F.col(id_col).alias(id_out), F.col("v").alias(v_out), norm(F.col("v")).alias(n_out),
+        *extra,
     )
+
+
+def _cosine(u: str, v: str, nu: str, nv: str | None = None) -> Column:
+    """Cosine of vector columns ``u`` and ``v`` from their precomputed
+    norms; ``nv=None`` when ``v`` is unit-normalized."""
+    d = dot(F.col(u), F.col(v))
+    return d / F.col(nu) if nv is None else d / (F.col(nu) * F.col(nv))
+
+
+def _ranked(sims: DataFrame, *by: str) -> DataFrame:
+    """``sims`` plus ``rnk``: the row number within ``by`` by (sim desc,
+    neighbor_id) — the id tie-break keeps ranks engine-stable."""
+    w = Window.partitionBy(*by).orderBy(F.col("sim").desc(), F.col("neighbor_id"))
+    return sims.withColumn("rnk", F.row_number().over(w))
+
+
+def _topk(sims: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, sim) → the ``k`` best rows per query."""
+    return _ranked(sims, "query_id").where(F.col("rnk") <= k)
+
+
+def _probes(sig: Column, n_bits: int, multi_probe: int) -> Column:
+    """Multi-probe key array: ``sig`` and its flips of the first
+    ``min(multi_probe, n_bits)`` bits, duplicates removed."""
+    return F.array_distinct(
+        F.array(
+            sig,
+            *[sig.bitwiseXOR(F.lit(2**p)) for p in range(min(multi_probe, n_bits))],
+        )
+    )
+
+
+def _pair_side(df: DataFrame, s: str, *extra, id_col: str = "id") -> DataFrame:
+    """(id_s, vs, ns, *extra) from a frame holding (id_col, v, n): one
+    side of a candidate-pair self-join."""
+    return df.select(
+        F.col(id_col).alias(f"id_{s}"), F.col("v").alias(f"v{s}"),
+        F.col("n").alias(f"n{s}"), *extra,
+    )
+
+
+def _verified(cands: DataFrame, threshold: float, unordered: bool = False) -> DataFrame:
+    """Joined pair sides → (id_a, id_b, sim): exact cosine >= ``threshold``,
+    rounded to 4. Batch candidates keep ``id_a < id_b``, one emission per
+    pair. ``unordered`` candidates (the incremental forms, where a pair
+    can meet from either side) keep ``id_a != id_b`` and emit each
+    (least, greatest) pair once."""
+    a, b = F.col("id_a"), F.col("id_b")
+    cos = _cosine("va", "vb", "na", "nb").alias("s")
+    if unordered:
+        return (
+            cands.where(a != b)
+            .select(F.least(a, b).alias("p_a"), F.greatest(a, b).alias("p_b"), cos)
+            .where(F.col("s") >= threshold)
+            .select(
+                F.col("p_a").alias("id_a"),
+                F.col("p_b").alias("id_b"),
+                F.round("s", 4).alias("sim"),
+            )
+            .distinct()
+        )
+    return (
+        cands.where(a < b)
+        .select("id_a", "id_b", cos)
+        .where(F.col("s") >= threshold)
+        .select("id_a", "id_b", F.round("s", 4).alias("sim"))
+    )
+
+
+def _nearest(scores):
+    """Row-wise argmax of a numpy score matrix, ties to the LARGER index
+    (parity with :func:`_nearest_centroids`' struct ordering)."""
+    import numpy as np
+
+    return (scores.shape[1] - 1) - np.argmax(scores[:, ::-1], axis=1)
+
+
+def _unit_rows(x):
+    """Rows of ``x`` divided by their L2 norm; zero rows stay zero."""
+    import numpy as np
+
+    n = np.linalg.norm(x, axis=1, keepdims=True)
+    n[n == 0.0] = 1.0
+    return x / n
+
+
+def _sign_pack(x, w_mat, n_planes: int):
+    """(rows, tables) bit-packed hyperplane signatures: bit p of table t
+    is ``x · plane[t][p] >= 0``; ``w_mat`` is dim × (tables·n_planes)."""
+    import numpy as np
+
+    bits = (x @ w_mat >= 0).astype(np.int64)
+    return bits.reshape(len(x), w_mat.shape[1] // n_planes, n_planes) @ (
+        2 ** np.arange(n_planes)
+    )
+
+
+def _probed_cells(cell_scores, n_probe: int) -> list[list[int]]:
+    """Per query row of ``cell_scores`` (|q| × cells): its ``n_probe``
+    best cells by dot, ties to the larger index."""
+    return [
+        sorted(range(len(r)), key=lambda c: (r[c], c), reverse=True)[:n_probe]
+        for r in cell_scores
+    ]
 
 
 def suggest_granularity(n_rows: int, target_bucket: int = 64) -> int:
@@ -183,8 +293,6 @@ def brute_force_topk(
 
     Ranking uses the ROUNDED similarity with id tie-break so results are
     stable across engines/precision; self-matches are excluded."""
-    from pyspark.sql import Window
-
     c = _with_norm(corpus, vec_col, id_col, "neighbor_id", "cv", "cn")
     q = _with_norm(queries, vec_col, id_col, "query_id", "qv", "qn")
     sims = (
@@ -193,14 +301,10 @@ def brute_force_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(
-                dot(F.col("cv"), F.col("qv")) / (F.col("cn") * F.col("qn")),
-                sim_decimals,
-            ).alias("sim"),
+            F.round(_cosine("cv", "qv", "cn", "qn"), sim_decimals).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return sims.withColumn("rnk", F.row_number().over(w)).where(F.col("rnk") <= k)
+    return _topk(sims, k)
 
 
 def hard_negative_topk(
@@ -230,19 +334,11 @@ def hard_negative_topk(
     the candidate set pre-filtered on ``label <> q.label`` (the
     ``embedding_ivf_filtered_topk`` machinery); this exact form is its
     recall oracle."""
-    from pyspark.sql import Window
-
-    c = _as_double(corpus, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        norm(F.col("v")).alias("cn"),
-        F.col(label_col).alias("_nlabel"),
+    c = _with_norm(
+        corpus, vec_col, id_col, "neighbor_id", "cv", "cn", F.col(label_col).alias("_nlabel")
     )
-    q = _as_double(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("v").alias("qv"),
-        norm(F.col("v")).alias("qn"),
-        F.col(label_col).alias("_qlabel"),
+    q = _with_norm(
+        queries, vec_col, id_col, "query_id", "qv", "qn", F.col(label_col).alias("_qlabel")
     )
     sims = (
         c.crossJoin(F.broadcast(q))
@@ -250,14 +346,10 @@ def hard_negative_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(
-                dot(F.col("cv"), F.col("qv")) / (F.col("cn") * F.col("qn")),
-                sim_decimals,
-            ).alias("sim"),
+            F.round(_cosine("cv", "qv", "cn", "qn"), sim_decimals).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return sims.withColumn("rnk", F.row_number().over(w)).where(F.col("rnk") <= k)
+    return _topk(sims, k)
 
 
 def triplet_mining(
@@ -282,19 +374,11 @@ def triplet_mining(
 
     Margin = pos_sim − neg_sim on the rounded grid: a small or negative
     margin is exactly the triplet worth training on."""
-    from pyspark.sql import Window
-
-    c = _as_double(corpus, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        norm(F.col("v")).alias("cn"),
-        F.col(label_col).alias("_nlabel"),
+    c = _with_norm(
+        corpus, vec_col, id_col, "neighbor_id", "cv", "cn", F.col(label_col).alias("_nlabel")
     )
-    q = _as_double(queries, vec_col).select(
-        F.col(id_col).alias("anchor_id"),
-        F.col("v").alias("qv"),
-        norm(F.col("v")).alias("qn"),
-        F.col(label_col).alias("_qlabel"),
+    q = _with_norm(
+        queries, vec_col, id_col, "anchor_id", "qv", "qn", F.col(label_col).alias("_qlabel")
     )
     sims = (
         c.crossJoin(F.broadcast(q))
@@ -303,16 +387,10 @@ def triplet_mining(
             "anchor_id",
             "neighbor_id",
             (F.col("_nlabel") == F.col("_qlabel")).alias("same_label"),
-            F.round(
-                dot(F.col("cv"), F.col("qv")) / (F.col("cn") * F.col("qn")),
-                sim_decimals,
-            ).alias("sim"),
+            F.round(_cosine("cv", "qv", "cn", "qn"), sim_decimals).alias("sim"),
         )
     )
-    w = Window.partitionBy("anchor_id", "same_label").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    ranked = sims.withColumn("rnk", F.row_number().over(w))
+    ranked = _ranked(sims, "anchor_id", "same_label")
     pos = ranked.where(F.col("same_label") & (F.col("rnk") == 1)).select(
         "anchor_id",
         F.col("neighbor_id").alias("positive_id"),
@@ -346,16 +424,7 @@ def near_duplicate_pairs_exact_small(
     is the bucketed equi-join form."""
     a = _with_norm(df, vec_col, id_col, "id_a", "va", "na")
     b = _with_norm(df, vec_col, id_col, "id_b", "vb", "nb")
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            (dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias("s"),
-        )
-        .where(F.col("s") >= threshold)
-        .select("id_a", "id_b", F.round("s", 4).alias("sim"))
-    )
+    return _verified(a.join(b), threshold)
 
 
 def semantic_near_dup_pairs(
@@ -414,41 +483,17 @@ def semantic_near_dup_pairs(
         c = c.withColumn(
             "_sig", hyperplane_signature(F.col("v"), dim, sub_planes)
         )
-        probes = F.array_distinct(
-            F.array(
-                F.col("_sig"),
-                *[
-                    F.col("_sig").bitwiseXOR(F.lit(2**p))
-                    for p in range(min(multi_probe, sub_planes))
-                ],
-            )
-        )
+        probes = _probes(F.col("_sig"), sub_planes, multi_probe)
     else:  # small corpus: the cell alone is the block
         c = c.withColumn("_sig", F.lit(0).cast("long"))
         probes = F.array(F.col("_sig"))
-    a = c.select(
-        F.col("i").alias("id_a"), F.col("v").alias("va"),
-        F.col("n").alias("na"), "cell", F.explode(probes).alias("bucket"),
-    )
-    b = c.select(
-        F.col("i").alias("id_b"), F.col("v").alias("vb"),
-        F.col("n").alias("nb"), "cell", F.col("_sig").alias("bucket"),
-    )
+    a = _pair_side(c, "a", "cell", F.explode(probes).alias("bucket"), id_col="i")
+    b = _pair_side(c, "b", "cell", F.col("_sig").alias("bucket"), id_col="i")
     # merge-hint the self-join: unhinted, Catalyst size-guesses through
     # the mapInPandas boundary and BROADCASTS the whole corpus-cells
     # side — vectors included, >1 GB at 2M×64d (the repo's standing
     # array-side rule: hint merge, never let BHJ/SHJ pin array frames)
-    return (
-        a.join(b.hint("merge"), ["cell", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            (dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias("s"),
-        )
-        .where(F.col("s") >= threshold)
-        .select("id_a", "id_b", F.round("s", 4).alias("sim"))
-    )
+    return _verified(a.join(b.hint("merge"), ["cell", "bucket"]), threshold)
 
 
 def near_duplicate_pairs(
@@ -514,38 +559,10 @@ def bucketed_near_duplicate_pairs(
     base = _with_norm(df, vec_col, id_col, "id", "v", "n").withColumn(
         "_sig", hyperplane_signature(F.col("v"), dim, n_planes)
     )
-    probes = F.array_distinct(
-        F.array(
-            F.col("_sig"),
-            *[
-                F.col("_sig").bitwiseXOR(F.lit(2**p))
-                for p in range(min(multi_probe, n_planes))
-            ],
-        )
-    )
-    a = base.select(
-        F.col("id").alias("id_a"),
-        F.col("v").alias("va"),
-        F.col("n").alias("na"),
-        F.explode(probes).alias("bucket"),
-    )
-    b = base.select(
-        F.col("id").alias("id_b"),
-        F.col("v").alias("vb"),
-        F.col("n").alias("nb"),
-        F.col("_sig").alias("bucket"),
-    )
-    return (
-        a.join(b, "bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            (dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias("s"),
-        )
-        .where(F.col("s") >= threshold)
-        .select("id_a", "id_b", F.round("s", 4).alias("sim"))
-    )
+    probes = _probes(F.col("_sig"), n_planes, multi_probe)
+    a = _pair_side(base, "a", F.explode(probes).alias("bucket"))
+    b = _pair_side(base, "b", F.col("_sig").alias("bucket"))
+    return _verified(a.join(b, "bucket"), threshold)
 
 
 def quantize_embeddings(
@@ -587,7 +604,6 @@ def quantized_topk(
     Quantization error bounds |sim - sim_fp| ≲ dim·(1/254)/||v̂||; ranks of
     well-separated neighbors are preserved, and the arithmetic is exactly
     reproducible across engines."""
-    from pyspark.sql import Window
     import numpy as np
     import pandas as pd
 
@@ -642,8 +658,7 @@ def quantized_topk(
         .where(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", F.round(F.col("raw"), 6).alias("sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return sims.withColumn("rnk", F.row_number().over(w)).where(F.col("rnk") <= k)
+    return _topk(sims, k)
 
 
 def _plane_weights(dim: int, n_planes: int, table: int = 0) -> list[list[float]]:
@@ -691,15 +706,20 @@ def _ivf_centroids(
     smallest md5(id) — a pseudo-random but reproducible sample. A k-means
     refinement (MLlib) would slot in here without changing the plan shape;
     for bucketing purposes a spread sample is sufficient."""
-    rows = (
+    return [list(r["v"]) for r in _md5_sample(corpus, id_col, vec_col, n_centroids)]
+
+
+def _md5_sample(corpus: DataFrame, id_col: str, vec_col: str, n: int) -> list:
+    """The ``n`` (i, v, h) rows with the smallest md5(id): a pseudo-random
+    but reproducible sample, collected to the driver."""
+    return (
         _as_double(corpus, vec_col)
         .select(F.col(id_col).alias("i"), "v")
         .withColumn("h", F.md5(F.col("i").cast("string")))
         .orderBy("h")
-        .limit(n_centroids)
+        .limit(n)
         .collect()
     )
-    return [list(r["v"]) for r in rows]
 
 
 def _ivf_centroids_kcenter(
@@ -719,14 +739,7 @@ def _ivf_centroids_kcenter(
     sample pattern, as in PQ training)."""
     import numpy as np
 
-    rows = (
-        _as_double(corpus, vec_col)
-        .select(F.col(id_col).alias("i"), "v")
-        .withColumn("h", F.md5(F.col("i").cast("string")))
-        .orderBy("h")
-        .limit(sample_cap)
-        .collect()
-    )
+    rows = _md5_sample(corpus, id_col, vec_col, sample_cap)
     x = np.array([list(r["v"]) for r in rows], dtype=np.float64)
     k = min(n_centroids, len(x))
     chosen = [0]  # md5-min row: deterministic anchor
@@ -735,14 +748,25 @@ def _ivf_centroids_kcenter(
         nxt = int(d2.argmax())
         chosen.append(nxt)
         d2 = np.minimum(d2, ((x - x[nxt]) ** 2).sum(1))
-    cents = x[chosen].copy()
-    for _ in range(lloyd_iters):
-        # argmin ||x-c||² == argmax x·c − ½|c|²: one BLAS matmul +
-        # in-place broadcast, not the (n, k, dim) difference tensor
-        # (~1 GB/iteration at 4096×512×64 — the r7 profile's cost).
-        # Deterministic, no RNG; rounding differs from the tensor form,
-        # which nothing pins (centroids are an internal fit; gated
-        # consumers re-rank or hash only exact arithmetic).
+    cents = _lloyd(x, x[chosen].copy(), lloyd_iters)
+    return [list(map(float, c)) for c in cents]
+
+
+def _lloyd(x, cents, iterations: int):
+    """Driver-side Lloyd refinement of ``cents`` (updated in place and
+    returned) over the sample matrix ``x``; empty clusters keep their
+    centroid. Deterministic, no RNG."""
+    import numpy as np
+
+    k = len(cents)
+    for _ in range(iterations):
+        # argmin ||x-c||² == argmax x·c − ½|c|² (the |x|² term is
+        # constant per row): one BLAS matmul + an in-place broadcast
+        # subtract, not the (n, k, dim) difference tensor (~1 GB per
+        # iteration at 4096×512×64; ~30 s for the 16k×256×4 PQ trainer
+        # over 8 iterations × 16 subspaces). Rounding differs from the
+        # tensor form, which nothing pins: centroids are an internal fit
+        # and every gated consumer re-ranks or hashes exact arithmetic.
         score = x @ cents.T
         score -= 0.5 * (cents * cents).sum(1)[None, :]
         assign = score.argmax(1)
@@ -756,7 +780,7 @@ def _ivf_centroids_kcenter(
         counts = np.bincount(assign, minlength=k)
         nz = counts > 0
         cents[nz] = sums[nz] / counts[nz, None]
-    return [list(map(float, c)) for c in cents]
+    return cents
 
 
 def _nearest_centroids(vec: Column, centroids: list[list[float]], n: int) -> Column:
@@ -1054,7 +1078,6 @@ def brute_force_topk_vectorized(
     ulp — rank ties are resolved by (rounded sim, neighbor_id) to keep
     results stable. Prefer this variant when |corpus|·|queries| is large:
     BLAS beats interpreted folds by orders of magnitude."""
-    from pyspark.sql import Window
     import numpy as np
     import pandas as pd
 
@@ -1087,8 +1110,7 @@ def brute_force_topk_vectorized(
         score, schema=f"query_id {id_type}, neighbor_id {id_type}, sim double"
     )
     sims = sims.where(F.col("neighbor_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return sims.withColumn("rnk", F.row_number().over(w)).where(F.col("rnk") <= k)
+    return _topk(sims, k)
 
 
 def ivf_topk(
@@ -1134,7 +1156,6 @@ def ivf_topk(
     contract). The candidate verify (exact cosine per joined pair) stays
     a JVM fold on the equi-join output."""
     import numpy as np
-    from pyspark.sql import Window
 
     if cents is None:
         if n_centroids is None or n_probe is None:
@@ -1165,11 +1186,8 @@ def ivf_topk(
     cell_scores = q_mat @ np.array(cents, dtype=np.float64).T
     id_type = queries.schema[id_col].dataType.simpleString()
     q_rows = []
-    for qi in range(len(q_ids)):
-        order = sorted(
-            range(len(cents)), key=lambda ci: (cell_scores[qi][ci], ci), reverse=True
-        )
-        for cell in order[:n_probe]:
+    for qi, cells in enumerate(_probed_cells(cell_scores, n_probe)):
+        for cell in cells:
             q_rows.append((q_ids[qi], [float(x) for x in q_mat[qi]], int(cell)))
     q = local_df(
         queries.sparkSession, q_rows,
@@ -1182,11 +1200,10 @@ def ivf_topk(
             "query_id",
             "neighbor_id",
             # qv is unit-normalized at collect time, so cosine = dot / cn
-            F.round(dot(F.col("cv"), F.col("qv")) / F.col("cn"), 6).alias("sim"),
+            F.round(_cosine("cv", "qv", "cn"), 6).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return sims.withColumn("rnk", F.row_number().over(w)).where(F.col("rnk") <= k)
+    return _topk(sims, k)
 
 
 def lsh_bucketed_topk(
@@ -1238,7 +1255,6 @@ def lsh_bucketed_topk(
     expression tree Catalyst otherwise has to analyze."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import Window
 
     if n_planes is None:
         n_planes = suggest_granularity(corpus.count(), AUTO_TARGET_BUCKET)
@@ -1247,15 +1263,13 @@ def lsh_bucketed_topk(
         dtype=np.float64,
     )  # (T, P, dim)
     w_mat = planes.reshape(n_tables * n_planes, dim).T  # dim × (T·P)
-    pow2 = 2 ** np.arange(n_planes)
     id_type = corpus.schema[id_col].dataType.simpleString()
 
     def sign(batches):
         for pdf in batches:
             x = np.array(pdf["v"].tolist(), dtype=np.float64)
             norms = np.linalg.norm(x, axis=1)
-            bits = (x @ w_mat >= 0).astype(np.int64)
-            buckets = bits.reshape(len(x), n_tables, n_planes) @ pow2  # (B, T)
+            buckets = _sign_pack(x, w_mat, n_planes)  # (B, T)
             reps = np.repeat(np.arange(len(x)), n_tables)
             yield pd.DataFrame(
                 {
@@ -1275,14 +1289,12 @@ def lsh_bucketed_topk(
         ),
     )
     q_ids, q_mat = _collect_unit_queries(queries, id_col, vec_col)
-    q_bits = (q_mat @ w_mat >= 0).astype(np.int64).reshape(
-        len(q_ids), n_tables, n_planes
-    )
+    q_sigs = _sign_pack(q_mat, w_mat, n_planes)
     q_rows = []
     for qi in range(len(q_ids)):
         qv = [float(x) for x in q_mat[qi]]
         for t in range(n_tables):
-            base = int(q_bits[qi, t] @ pow2)
+            base = int(q_sigs[qi, t])
             probes = {base} | {
                 base ^ (1 << p) for p in range(min(multi_probe, n_planes))
             }
@@ -1299,13 +1311,12 @@ def lsh_bucketed_topk(
             "query_id",
             "neighbor_id",
             # qv is unit-normalized at collect time, so cosine = dot / cn
-            F.round(dot(F.col("cv"), F.col("qv")) / F.col("cn"), 6).alias("sim"),
+            F.round(_cosine("cv", "qv", "cn"), 6).alias("sim"),
         )
         # same pair can collide in several tables/probes; one vote is enough
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return sims.withColumn("rnk", F.row_number().over(w)).where(F.col("rnk") <= k)
+    return _topk(sims, k)
 
 
 # ---------------------------------------------------------------------------
@@ -1365,28 +1376,7 @@ def _kmeans_subspaces(mat, m: int, k_codes: int, iterations: int):
         if len(cents) < k_codes:  # degenerate tiny corpus: pad by repeat
             reps = -(-k_codes // len(cents))
             cents = np.tile(cents, (reps, 1))[:k_codes]
-        for _ in range(iterations):
-            # argmin of ||x-c||² == argmax of x·c − ½|c|² (the |x|² term
-            # is constant per row): one BLAS matmul + an in-place
-            # broadcast subtract, instead of materializing the
-            # (n, k, sub) difference tensor (memory-bound: that form was
-            # ~30 s for 16k×256×4 × 8 iters × 16 subspaces). Same
-            # deterministic no-RNG contract; float rounding differs from
-            # the tensor form, which nothing pins — every gated consumer
-            # re-ranks the shortlist with exact cosine.
-            score = x @ cents.T
-            score -= 0.5 * (cents * cents).sum(1)[None, :]
-            assign = score.argmax(1)
-            sums = np.stack(
-                [
-                    np.bincount(assign, weights=x[:, j], minlength=k_codes)
-                    for j in range(sub)
-                ],
-                axis=1,
-            )
-            counts = np.bincount(assign, minlength=k_codes)
-            nz = counts > 0
-            cents[nz] = sums[nz] / counts[nz, None]
+        cents = _lloyd(x, cents, iterations)
         books.append([list(map(float, c)) for c in cents])
     return books
 
@@ -1433,8 +1423,8 @@ def train_residual_pq(
     structured than raw vectors, so k_codes codewords spend their
     resolution on the part of the vector the coarse quantizer has NOT
     already explained — the standard reason residual PQ ranks better than
-    flat PQ at identical code size. Assignment uses max dot, matching
-    :func:`_nearest_centroids`.
+    flat PQ at identical code size. Assignment uses max dot with ties to
+    the larger index, matching :func:`_nearest_centroids`.
 
     ``n_centroids=None`` derives the coarse cell count from the corpus
     via :func:`suggest_ivf_cells` and ``k_codes=None`` the codebook
@@ -1452,8 +1442,7 @@ def train_residual_pq(
     if k_codes is None:
         k_codes = suggest_pq_codes(len(mat))
     c_arr = np.array(coarse, dtype=np.float64)
-    assign = (mat @ c_arr.T).argmax(1)
-    res = mat - c_arr[assign]
+    res = mat - c_arr[_nearest(mat @ c_arr.T)]
     return coarse, _kmeans_subspaces(res, m, k_codes, iterations)
 
 
@@ -1475,25 +1464,12 @@ def pq_encode(
     import numpy as np
     import pandas as pd
 
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    books = [np.array(b, dtype=np.float64) for b in codebooks]
-    half_sq = [0.5 * (b * b).sum(axis=1) for b in books]
-    k = books[0].shape[0]
+    books = _pq_books(codebooks)
 
     def encode(batches):
         for pdf in batches:
-            x = np.array(pdf["v"].tolist(), dtype=np.float64)
-            n = np.linalg.norm(x, axis=1, keepdims=True)
-            n[n == 0.0] = 1.0
-            x = x / n
-            codes = np.empty((len(x), m), dtype=np.int64)
-            for s in range(m):
-                scores = x[:, s * sub : (s + 1) * sub] @ books[s].T
-                scores -= half_sq[s][None, :]
-                # argmax with ties to the larger index: argmax over the
-                # reversed axis picks the LAST maximum of the original
-                codes[:, s] = (k - 1) - np.argmax(scores[:, ::-1], axis=1)
+            x = _unit_rows(np.array(pdf["v"].tolist(), dtype=np.float64))
+            codes = _pq_codes(x, books)
             yield pd.DataFrame({"i": pdf["i"], "codes": list(codes.tolist())})
 
     id_type = df.schema[id_col].dataType.simpleString()
@@ -1501,6 +1477,28 @@ def pq_encode(
     return unit.mapInPandas(encode, schema=f"i {id_type}, codes array<int>").select(
         F.col("i").alias(id_col), "codes"
     )
+
+
+def _pq_books(codebooks: list[list[list[float]]]):
+    """Per-subspace (codebook matrix, ½‖c‖² row) pairs for :func:`_pq_codes`."""
+    import numpy as np
+
+    books = [np.array(b, dtype=np.float64) for b in codebooks]
+    return [(b, 0.5 * (b * b).sum(axis=1)) for b in books]
+
+
+def _pq_codes(x, books):
+    """(rows, m) PQ codes of ``x``: per subspace the codeword nearest by
+    L2, as ``max(dot − ½‖c‖²)``, ties to the larger code index."""
+    import numpy as np
+
+    sub = books[0][0].shape[1]
+    codes = np.empty((len(x), len(books)), dtype=np.int64)
+    for s, (b, half_sq) in enumerate(books):
+        scores = x[:, s * sub : (s + 1) * sub] @ b.T
+        scores -= half_sq[None, :]
+        codes[:, s] = _nearest(scores)
+    return codes
 
 
 def pq_encode_residual(
@@ -1512,38 +1510,23 @@ def pq_encode_residual(
 ) -> DataFrame:
     """(id, cell, codes): residual-PQ encode in the Arrow/BLAS tier — the
     normalized vector is assigned to its max-dot coarse centroid (the IVF
-    cell), the RESIDUAL ``v̂ − c_cell`` is what the codebooks encode.
+    cell, ties to the larger index as in :func:`_assign_cells_vectorized`),
+    the RESIDUAL ``v̂ − c_cell`` is what the codebooks encode.
     One matmul for assignment + one per subspace per batch; same
     larger-index tie-break as :func:`pq_encode`."""
     import numpy as np
     import pandas as pd
 
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    books = [np.array(b, dtype=np.float64) for b in codebooks]
-    half_sq = [0.5 * (b * b).sum(axis=1) for b in books]
-    k = books[0].shape[0]
+    books = _pq_books(codebooks)
     c_arr = np.array(coarse, dtype=np.float64)
 
     def encode(batches):
         for pdf in batches:
-            x = np.array(pdf["v"].tolist(), dtype=np.float64)
-            n = np.linalg.norm(x, axis=1, keepdims=True)
-            n[n == 0.0] = 1.0
-            x = x / n
-            cells = np.argmax(x @ c_arr.T, axis=1)
-            r = x - c_arr[cells]
-            codes = np.empty((len(x), m), dtype=np.int64)
-            for s in range(m):
-                scores = r[:, s * sub : (s + 1) * sub] @ books[s].T
-                scores -= half_sq[s][None, :]
-                codes[:, s] = (k - 1) - np.argmax(scores[:, ::-1], axis=1)
+            x = _unit_rows(np.array(pdf["v"].tolist(), dtype=np.float64))
+            cells = _nearest(x @ c_arr.T)
+            codes = _pq_codes(x - c_arr[cells], books)
             yield pd.DataFrame(
-                {
-                    "i": pdf["i"],
-                    "cell": cells.astype(np.int64),
-                    "codes": list(codes.tolist()),
-                }
+                {"i": pdf["i"], "cell": cells, "codes": list(codes.tolist())}
             )
 
     id_type = df.schema[id_col].dataType.simpleString()
@@ -1632,15 +1615,13 @@ def _assign_cells_vectorized(
     import pandas as pd
 
     c_arr = np.array(cents, dtype=np.float64)
-    n_cells = c_arr.shape[0]
     id_type = corpus.schema[id_col].dataType.simpleString()
 
     def assign(batches):
         for pdf in batches:
             x = np.array(pdf["v"].tolist(), dtype=np.float64)
             norms = np.linalg.norm(x, axis=1)
-            scores = x @ c_arr.T
-            cell = (n_cells - 1) - np.argmax(scores[:, ::-1], axis=1)
+            cell = _nearest(x @ c_arr.T)
             yield pd.DataFrame(
                 {"i": pdf["i"], "v": pdf["v"], "n": norms, "cell": cell}
             )
@@ -1662,10 +1643,7 @@ def _collect_unit_queries(queries: DataFrame, id_col: str, vec_col: str):
         .collect()
     )
     ids = [r["qid"] for r in rows]
-    mat = np.array([list(r["v"]) for r in rows], dtype=np.float64)
-    n = np.linalg.norm(mat, axis=1, keepdims=True)
-    n[n == 0.0] = 1.0
-    return ids, mat / n
+    return ids, _unit_rows(np.array([list(r["v"]) for r in rows], dtype=np.float64))
 
 
 def _numpy_luts(q_mat, codebooks) -> list[list[list[float]]]:
@@ -1683,6 +1661,18 @@ def _numpy_luts(q_mat, codebooks) -> list[list[list[float]]]:
         [[float(x) for x in per_sub[s][qi]] for s in range(m)]
         for qi in range(len(q_mat))
     ]
+
+
+def _adc_score(m: int) -> Column:
+    """ADC score Σ_s LUT[s][code_s] over the ``lut`` and ``codes`` columns."""
+    score = None
+    for s in range(m):
+        term = F.element_at(
+            F.element_at(F.col("lut"), s + 1),
+            F.element_at(F.col("codes"), s + 1) + 1,
+        )
+        score = term if score is None else score + term
+    return score
 
 
 def pq_topk(
@@ -1712,8 +1702,6 @@ def pq_topk(
     interpreted folds per query row, inlined into the join plan) costs
     seconds of analysis+evaluation even for 10 queries and dominated
     this operator's wall time."""
-    from pyspark.sql import Window
-
     if codebooks is None:
         codebooks = train_pq_codebooks(corpus, id_col, vec_col, m, k_codes)
     m = len(codebooks)
@@ -1728,19 +1716,11 @@ def pq_topk(
         [(i, lut) for i, lut in zip(q_ids, luts)],
         f"query_id {id_type}, lut array<array<double>>",
     )
-    score = None
-    for s in range(m):
-        term = F.element_at(
-            F.element_at(F.col("lut"), s + 1),
-            F.element_at(F.col("codes"), s + 1) + 1,
-        )
-        score = term if score is None else score + term
     sims = (
         coded.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", F.round(score, 6).alias("sim"))
+        .select("query_id", "neighbor_id", F.round(_adc_score(m), 6).alias("sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return sims.withColumn("rnk", F.row_number().over(w)).where(F.col("rnk") <= k)
+    return _topk(sims, k)
 
 
 def ivf_pq_topk(
@@ -1779,8 +1759,6 @@ def ivf_pq_topk(
     scanned FRACTION as the corpus grows, so ``n_probe`` should be
     re-swept (``tools/ann_recall.py``) when a pinned config meets a
     decade-larger corpus."""
-    from pyspark.sql import Window
-
     if cents is not None:
         n_centroids = len(cents)
     if n_centroids is None or n_probe is None:
@@ -1839,11 +1817,8 @@ def ivf_pq_topk(
     cell_scores = q_mat @ c_arr.T  # |q| × n_centroids
     id_type = queries.schema[id_col].dataType.simpleString()
     q_rows = []
-    for qi in range(len(q_ids)):
-        order = sorted(
-            range(len(cents)), key=lambda c: (cell_scores[qi][c], c), reverse=True
-        )
-        for cell in order[:n_probe]:
+    for qi, cells in enumerate(_probed_cells(cell_scores, n_probe)):
+        for cell in cells:
             q_rows.append(
                 (q_ids[qi], luts[qi], int(cell), float(cell_scores[qi][cell]))
             )
@@ -1855,13 +1830,7 @@ def ivf_pq_topk(
             "cell int, cdot double"
         ),
     )
-    score = None
-    for s in range(m):
-        term = F.element_at(
-            F.element_at(F.col("lut"), s + 1),
-            F.element_at(F.col("codes"), s + 1) + 1,
-        )
-        score = term if score is None else score + term
+    score = _adc_score(m)
     if residual:
         score = score + F.col("cdot")
     sims = (
@@ -1869,8 +1838,7 @@ def ivf_pq_topk(
         .where(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", F.round(score, 6).alias("sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return sims.withColumn("rnk", F.row_number().over(w)).where(F.col("rnk") <= k)
+    return _topk(sims, k)
 
 
 def recall_gate(
@@ -1940,8 +1908,6 @@ def pq_rerank_topk(
     holds ≥0.94 containment on the unclustered worst-case fixture at
     sf0.001-0.1). Output matches the other topk variants; ``sim`` here is
     the EXACT rounded cosine, so ranks are engine-stable."""
-    from pyspark.sql import Window
-
     cand = pq_topk(
         corpus, queries, id_col, vec_col, k=shortlist, m=m, k_codes=k_codes,
         codebooks=codebooks,
@@ -1962,8 +1928,6 @@ def _exact_rerank(
     (the semi-join-shaped fetch — |queries|x|shortlist| rows stream,
     never the corpus), score exact rounded cosine, keep the window
     top-k. sim is engine-stable, so these variants hash-gate."""
-    from pyspark.sql import Window
-
     c = _with_norm(corpus, vec_col, id_col, "neighbor_id", "cv", "cn")
     q = _with_norm(queries, vec_col, id_col, "query_id", "qv", "qn")
     sims = (
@@ -1972,13 +1936,10 @@ def _exact_rerank(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(
-                dot(F.col("cv"), F.col("qv")) / (F.col("cn") * F.col("qn")), 6
-            ).alias("sim"),
+            F.round(_cosine("cv", "qv", "cn", "qn"), 6).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return sims.withColumn("rnk", F.row_number().over(w)).where(F.col("rnk") <= k)
+    return _topk(sims, k)
 
 
 def ivf_pq_rerank_topk(
@@ -2045,7 +2006,6 @@ def embedding_signature_table(
     import pandas as pd
 
     w_mat = np.array(_plane_weights(dim, n_planes, 0), dtype=np.float64).T
-    pow2 = 2 ** np.arange(n_planes)
     id_type = df.schema[id_col].dataType.simpleString()
 
     def sign(batches):
@@ -2056,7 +2016,7 @@ def embedding_signature_table(
                     "id": pdf["i"],
                     "v": pdf["v"],
                     "n": np.linalg.norm(x, axis=1),
-                    "sig": ((x @ w_mat >= 0).astype(np.int64) @ pow2),
+                    "sig": _sign_pack(x, w_mat, n_planes)[:, 0],
                 }
             )
 
@@ -2093,22 +2053,18 @@ def semantic_signature_table(
     import pandas as pd
 
     c_arr = np.array(cents, dtype=np.float64)
-    n_cells = c_arr.shape[0]
-    dim = c_arr.shape[1]
     if sub_planes > 0:
         w_mat = np.array(
-            _plane_weights(dim, sub_planes, 0), dtype=np.float64
+            _plane_weights(c_arr.shape[1], sub_planes, 0), dtype=np.float64
         ).T
-        pow2 = 2 ** np.arange(sub_planes)
     id_type = df.schema[id_col].dataType.simpleString()
 
     def block(batches):
         for pdf in batches:
             x = np.array(pdf["v"].tolist(), dtype=np.float64)
-            scores = x @ c_arr.T
-            cell = (n_cells - 1) - np.argmax(scores[:, ::-1], axis=1)
+            cell = _nearest(x @ c_arr.T)
             sig = (
-                ((x @ w_mat >= 0).astype(np.int64) @ pow2)
+                _sign_pack(x, w_mat, sub_planes)[:, 0]
                 if sub_planes > 0
                 else np.zeros(len(pdf), dtype=np.int64)
             )
@@ -2158,46 +2114,10 @@ def semantic_incremental_pairs(
     caught; verification is exact cosine, precision 1.0. Per-batch cost
     is O(|new|) blocking + the (cell, bucket) equi-join — the store is
     never re-blocked."""
-    probes = F.array_distinct(
-        F.array(
-            F.col("sig"),
-            *[
-                F.col("sig").bitwiseXOR(F.lit(2**p))
-                for p in range(min(multi_probe, sub_planes))
-            ],
-        )
-    )
-    a = new.select(
-        F.col("id").alias("id_a"),
-        F.col("v").alias("va"),
-        F.col("n").alias("na"),
-        "cell",
-        F.explode(probes).alias("bucket"),
-    )
-    all_vecs = store.unionByName(new)
-    b = all_vecs.select(
-        F.col("id").alias("id_b"),
-        F.col("v").alias("vb"),
-        F.col("n").alias("nb"),
-        "cell",
-        F.col("sig").alias("bucket"),
-    )
-    return (
-        a.join(b.hint("merge"), ["cell", "bucket"])
-        .where(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.least(F.col("id_a"), F.col("id_b")).alias("p_a"),
-            F.greatest(F.col("id_a"), F.col("id_b")).alias("p_b"),
-            (dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias("s"),
-        )
-        .where(F.col("s") >= threshold)
-        .select(
-            F.col("p_a").alias("id_a"),
-            F.col("p_b").alias("id_b"),
-            F.round("s", 4).alias("sim"),
-        )
-        .distinct()
-    )
+    probes = _probes(F.col("sig"), sub_planes, multi_probe)
+    a = _pair_side(new, "a", "cell", F.explode(probes).alias("bucket"))
+    b = _pair_side(store.unionByName(new), "b", "cell", F.col("sig").alias("bucket"))
+    return _verified(a.join(b.hint("merge"), ["cell", "bucket"]), threshold, unordered=True)
 
 
 def embedding_incremental_pairs(
@@ -2223,44 +2143,10 @@ def embedding_incremental_pairs(
     store×store pairs were emitted by earlier batches). Exact copies
     share every signature, so they are always caught; verification is
     exact cosine, precision 1.0."""
-    probes = F.array_distinct(
-        F.array(
-            F.col("sig"),
-            *[
-                F.col("sig").bitwiseXOR(F.lit(2**p))
-                for p in range(min(multi_probe, n_planes))
-            ],
-        )
-    )
-    a = new.select(
-        F.col("id").alias("id_a"),
-        F.col("v").alias("va"),
-        F.col("n").alias("na"),
-        F.explode(probes).alias("bucket"),
-    )
-    all_docs = store.unionByName(new)
-    b = all_docs.select(
-        F.col("id").alias("id_b"),
-        F.col("v").alias("vb"),
-        F.col("n").alias("nb"),
-        F.col("sig").alias("bucket"),
-    )
-    return (
-        a.join(b, "bucket")
-        .where(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.least(F.col("id_a"), F.col("id_b")).alias("p_a"),
-            F.greatest(F.col("id_a"), F.col("id_b")).alias("p_b"),
-            (dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias("s"),
-        )
-        .where(F.col("s") >= threshold)
-        .select(
-            F.col("p_a").alias("id_a"),
-            F.col("p_b").alias("id_b"),
-            F.round("s", 4).alias("sim"),
-        )
-        .distinct()
-    )
+    probes = _probes(F.col("sig"), n_planes, multi_probe)
+    a = _pair_side(new, "a", F.explode(probes).alias("bucket"))
+    b = _pair_side(store.unionByName(new), "b", F.col("sig").alias("bucket"))
+    return _verified(a.join(b, "bucket"), threshold, unordered=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2335,10 +2221,7 @@ def mmr_rerank(
             # two on a same-named, same-attribute column trips the
             # ambiguous-self-join check
             F.col("query_id").alias("_ccq"), "a", "b",
-            F.round(
-                dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
-                sim_decimals,
-            ).alias("s"),
+            F.round(_cosine("va", "vb", "na", "nb"), sim_decimals).alias("s"),
         )
     )
     id_type = queries.schema[id_col].dataType.simpleString()
@@ -2421,8 +2304,6 @@ def cluster_balanced_sample(
     the cap filter and returns EVERY row with its in-cell rank — the
     monitoring view (pre-cap populations and kept counts from one
     window pass, no second assignment)."""
-    from pyspark.sql import Window
-
     assigned = _assign_cells_vectorized(corpus, id_col, vec_col, cents)
     w = Window.partitionBy("cell").orderBy(
         F.md5(F.concat(F.lit("cbs|"), F.col(id_col).cast("string"))),

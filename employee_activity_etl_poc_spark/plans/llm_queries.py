@@ -2611,12 +2611,12 @@ def semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cold run's and evicted both into thrash at the 2M-vector decade
     # (warm 203 s > cold 170 s, idle r11 sweep; the r10 lazily-split
     # memo lesson applied to a cached frame)
-    m = _gate_memo(sf_dir)
-    if "sem_blk1" not in m:
-        m["sem_blk1"] = SIM.semantic_signature_table(
+    blk1 = _memoized(
+        sf_dir, "sem_blk1",
+        lambda: SIM.semantic_signature_table(
             emb, "vec_id", "embedding", cents=cents, sub_planes=sub
-        ).persist()
-    blk1 = m["sem_blk1"]
+        ).persist(),
+    )
     blk2 = SIM.semantic_signature_table(
         copies, "vec_id", "embedding", cents=cents, sub_planes=sub
     )
@@ -2960,10 +2960,15 @@ _RELOAD_GATE_BASELINE: dict[str, dict] = {}
 from ..localrel import local_df as _local_df  # noqa: E402
 
 
-def _gate_memo(sf_dir: str) -> dict:
+def _memoized(sf_dir: str, key: str, fit):
+    """The per-fixture memo: ``fit()`` runs once per (fixture, key) per
+    process, and every later call returns that first result."""
     import os as _os
 
-    return _RELOAD_GATE_BASELINE.setdefault(_os.path.abspath(sf_dir), {})
+    m = _RELOAD_GATE_BASELINE.setdefault(_os.path.abspath(sf_dir), {})
+    if key not in m:
+        m[key] = fit()
+    return m[key]
 
 
 def _reload_gate_exact_rows(spark: SparkSession, sf_dir: str):
@@ -2971,15 +2976,15 @@ def _reload_gate_exact_rows(spark: SparkSession, sf_dir: str):
     form; the reload gates consume the rows directly (their identity +
     recall flags are driver-side arithmetic over bounded row lists,
     r13), the recall-only gates wrap them via :func:`_reload_gate_exact`."""
-    m = _gate_memo(sf_dir)
-    if "base" not in m:
+    def fit():
         emb = load(spark, sf_dir, "embeddings")
         q = emb.where(F.col("vec_id") < 10)
         exact = SIM.brute_force_topk(emb, q, "vec_id", "embedding", k=5).select(
             "query_id", "neighbor_id", "sim", "rnk"
         )
-        m["base"] = (exact.collect(), exact.schema)
-    rows, schema = m["base"]
+        return exact.collect(), exact.schema
+
+    rows, schema = _memoized(sf_dir, "base", fit)
     # corpus n rides the shared readers count memo (one count per
     # fixture/process across EVERY consumer, not one per memo field)
     return table_count(spark, sf_dir, "embeddings"), rows, schema
@@ -2996,14 +3001,14 @@ def _reload_gate_cents(spark: SparkSession, sf_dir: str) -> list:
     """Memoized deterministic k-center+Lloyd coarse centroids at the
     auto cell count — computed on first request by an index-building
     gate or the cell-stats monitor, never by a recall-only one."""
-    m = _gate_memo(sf_dir)
-    if "cents" not in m:
+    def fit():
         n = table_count(spark, sf_dir, "embeddings")
         emb = load(spark, sf_dir, "embeddings")
-        m["cents"] = SIM._ivf_centroids_kcenter(
+        return SIM._ivf_centroids_kcenter(
             emb, "vec_id", "embedding", SIM.suggest_ivf_cells(n)
         )
-    return m["cents"]
+
+    return _memoized(sf_dir, "cents", fit)
 
 
 def _reload_gate_pq(spark: SparkSession, sf_dir: str):
@@ -3012,14 +3017,12 @@ def _reload_gate_pq(spark: SparkSession, sf_dir: str):
     (r9 judge ask #3 — the same justification that memoized the
     cents), so the PQ lifecycle gate trains once per fixture/process
     and every later run only pays save/load + probes."""
-    m = _gate_memo(sf_dir)
-    if "pq" not in m:
+    def fit():
         cents = _reload_gate_cents(spark, sf_dir)
         emb = load(spark, sf_dir, "embeddings")
-        m["pq"] = SIM.train_residual_pq(
-            emb, "vec_id", "embedding", coarse=cents
-        )
-    return m["pq"]
+        return SIM.train_residual_pq(emb, "vec_id", "embedding", coarse=cents)
+
+    return _memoized(sf_dir, "pq", fit)
 
 
 def _reload_gate_flatpq(spark: SparkSession, sf_dir: str):
@@ -3030,11 +3033,12 @@ def _reload_gate_flatpq(spark: SparkSession, sf_dir: str):
     fixture is deterministic, so the fit is a BUILD-ONCE artifact;
     before r13 this gate was the one family member re-training per call
     (one md5-sort sample collect + 16 subspace k-means per bench pass)."""
-    m = _gate_memo(sf_dir)
-    if "flatpq" not in m:
-        emb = load(spark, sf_dir, "embeddings")
-        m["flatpq"] = SIM.train_pq_codebooks(emb, "vec_id", "embedding", 16)
-    return m["flatpq"]
+    return _memoized(
+        sf_dir, "flatpq",
+        lambda: SIM.train_pq_codebooks(
+            load(spark, sf_dir, "embeddings"), "vec_id", "embedding", 16
+        ),
+    )
 
 
 def _reload_identity_gate(
@@ -4141,8 +4145,7 @@ def _qc_trained_model(spark: SparkSession, sf_dir: str) -> dict:
     (exact grid-unit integers — the _reload_gate_cents justification),
     so the artifact-lifecycle gate trains once per fixture/process and
     every later run only pays save/load + the fresh scoring pass."""
-    m = _gate_memo(sf_dir)
-    if "qc_model" not in m:
+    def fit():
         docs = load(spark, sf_dir, "documents")
         model: dict = {}
         # persist="train": cache the feature frame for the fit, drop it
@@ -4153,8 +4156,9 @@ def _qc_trained_model(spark: SparkSession, sf_dir: str) -> dict:
             docs, "text", "doc_id", label=F.col("lang") == "en",
             persist="train", model_out=model,
         )
-        m["qc_model"] = model
-    return m["qc_model"]
+        return model
+
+    return _memoized(sf_dir, "qc_model", fit)
 
 
 @register(
@@ -4293,10 +4297,10 @@ def _bpe_trained(spark: SparkSession, sf_dir: str, docs: DataFrame) -> list[dict
     immutable fixture, so one train serves both gate entries and every
     warm bench run. ``docs`` is loaded at the registered-query call site
     (the query_deps load-literal convention)."""
-    m = _gate_memo(sf_dir)
-    if "bpe" not in m:
-        m["bpe"] = TX.bpe_merge_table(docs, "text", n_merges=_BPE_MERGES)
-    return m["bpe"]
+    return _memoized(
+        sf_dir, "bpe",
+        lambda: TX.bpe_merge_table(docs, "text", n_merges=_BPE_MERGES),
+    )
 
 
 @register(
@@ -4386,15 +4390,15 @@ _EXACT_TOPK_FILTERED_SQL = f"""
 def _filtered_gate_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized exact ground truth for the FILTERED-corpus top-k (the
     _reload_gate_exact contract, one memo field per predicate)."""
-    m = _gate_memo(sf_dir)
-    if "base_filtered" not in m:
+    def fit():
         emb = load(spark, sf_dir, "embeddings")
         q = emb.where(F.col("vec_id") < 10)
         exact = SIM.brute_force_topk(
             emb.where(_ann_filter()), q, "vec_id", "embedding", k=5
         ).select("query_id", "neighbor_id", "sim", "rnk")
-        m["base_filtered"] = (exact.collect(), exact.schema)
-    rows, schema = m["base_filtered"]
+        return exact.collect(), exact.schema
+
+    rows, schema = _memoized(sf_dir, "base_filtered", fit)
     return _local_df(spark, rows, schema)
 
 
@@ -4448,13 +4452,11 @@ def embedding_ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = _filtered_gate_exact(spark, sf_dir)
     cents = _reload_gate_cents(spark, sf_dir)  # full-corpus index
     filtered = emb.where(_ann_filter())
-    m = _gate_memo(sf_dir)
-    if "n_filtered" not in m:
-        # the filtered density is what sizes the probe budget; one cheap
-        # memoized count per fixture/process (the embedding_near_dup
-        # granularity-literal pattern)
-        m["n_filtered"] = filtered.count()
-    n_probe = SIM.suggest_ivf_probe(m["n_filtered"], len(cents))
+    # the filtered density is what sizes the probe budget; one cheap
+    # memoized count per fixture/process (the embedding_near_dup
+    # granularity-literal pattern)
+    n_filtered = _memoized(sf_dir, "n_filtered", filtered.count)
+    n_probe = SIM.suggest_ivf_probe(n_filtered, len(cents))
     ann = SIM.ivf_topk(
         filtered, q, "vec_id", "embedding", k=5, cents=cents, n_probe=n_probe
     )
@@ -5233,16 +5235,16 @@ def _kmeans_trained(spark: SparkSession, sf_dir: str) -> dict:
     _bpe_trained contract): the Lloyd fit is deterministic integer
     arithmetic over an immutable fixture, so ONE fit serves the train
     gate, the reload gate and every warm bench run."""
-    m = _gate_memo(sf_dir)
-    if "kmeans" not in m:
+    def fit():
         emb = load(spark, sf_dir, "embeddings")
         model: dict = {}
         SIM.kmeans_lloyd_grid(
             emb, "vec_id", "embedding", k=8, iterations=2, grid=1000,
             model_out=model,
         )
-        m["kmeans"] = model
-    return m["kmeans"]
+        return model
+
+    return _memoized(sf_dir, "kmeans", fit)
 
 
 @register(

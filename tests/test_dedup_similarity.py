@@ -2462,3 +2462,54 @@ def test_lsh_parameter_report_shape_and_default_validation(spark):
     # not a power of two: an explicit raise, which survives ``python -O``
     with pytest.raises(ValueError):
         D.lsh_parameter_report(spark, num_perm=12)
+
+
+@pytest.mark.parametrize("e", [0, 3, 6])
+def test_pow_int_rejects_non_power_of_two(e):
+    """The exponent check is a raise, not an ``assert`` that ``python -O``
+    strips (it would then return a lower power without a word)."""
+    assert D._pow_int(3.0, 4) == 81.0
+    assert D.pow_int_sql("t", 2) == "((t) * (t))"
+    with pytest.raises(ValueError):
+        D._pow_int(3.0, e)
+    with pytest.raises(ValueError):
+        D.pow_int_sql("t", e)
+
+
+def test_plain_and_residual_ivf_share_the_cell_tie_rule(spark):
+    """A vector equally near two coarse cells lands in the same (larger)
+    cell under plain IVF and under residual IVF-PQ."""
+    cents = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]]
+    df = spark.createDataFrame(
+        [(1, [0.0, 0.0, 0.0]), (2, [0.0, 0.0, 1.0])], "id long, emb array<double>"
+    )
+    plain = SIM._assign_cells_vectorized(df, "id", "emb", cents).collect()
+    books = [[[0.0, 0.0, 0.0], [1.0, 1.0, 1.0]]]
+    residual = SIM.pq_encode_residual(df, "id", "emb", cents, books).collect()
+    assert {r["i"]: r["cell"] for r in plain} == {1: 1, 2: 1}
+    assert {r["id"]: r["cell"] for r in residual} == {1: 1, 2: 1}
+
+
+def test_probe_stage_matches_driver_side_probe_set(spark):
+    """The Spark multi-probe key array equals the set lsh_bucketed_topk
+    builds driver-side, for every signature and probe count (past
+    ``n_bits`` the count is clamped)."""
+    n_bits = 3
+    probe_counts = range(n_bits + 2)
+    rows = (
+        spark.range(2**n_bits)
+        .select(
+            F.col("id").alias("sig"),
+            *[
+                SIM._probes(F.col("id"), n_bits, mp).alias(f"p{mp}")
+                for mp in probe_counts
+            ],
+        )
+        .collect()
+    )
+    assert len(rows) == 2**n_bits
+    for r in rows:
+        base = r["sig"]
+        for mp in probe_counts:
+            want = {base} | {base ^ (1 << p) for p in range(min(mp, n_bits))}
+            assert sorted(r[f"p{mp}"]) == sorted(want), (base, mp)
