@@ -781,12 +781,16 @@ def minhash_incremental_pairs(
 
     ``store`` and ``new`` are signature tables (doc, hs, sig) from
     :func:`minhash_signature_table`; ``store`` holds every previously seen
-    doc (NOT including ``new``). Each batch costs: sign |new| docs, band
-    join new × (store ∪ new) — the store side is never re-tokenized or
-    re-signed, so per-batch work is O(|new|) + the candidate join, not
-    O(corpus). Old×old pairs were reported by earlier batches and are not
-    re-emitted (exactly-once across the ingest history). After the batch,
-    append ``new`` to the store (caller's one-line responsibility).
+    doc (NOT including ``new``). Each batch tokenizes and signs only the
+    |new| docs; the store side is never re-tokenized or re-signed. The
+    store is still read in full every batch: every store signature is
+    exploded into its bands and shuffled through the band join, and the
+    verify step joins ``store ∪ new`` twice for both members' shingle
+    hashes. So per-batch work is O(|new|) for signing plus O(|store|) for
+    the scan, banding and shuffle. Old×old pairs were reported by earlier
+    batches and are not re-emitted (exactly-once across the ingest
+    history). After the batch, append ``new`` to the store (caller's
+    one-line responsibility).
 
     Output: (doc_a < doc_b, jaccard >= threshold), same contract as the
     batch operator — union of per-batch outputs over any ingest order

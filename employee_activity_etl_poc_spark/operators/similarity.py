@@ -60,9 +60,10 @@ def _with_norm(
 
 def _cosine(u: str, v: str, nu: str, nv: str | None = None) -> Column:
     """Cosine of vector columns ``u`` and ``v`` from their precomputed
-    norms; ``nv=None`` when ``v`` is unit-normalized."""
+    norms; ``nv=None`` when ``v`` is unit-normalized. Null when a norm is
+    0 (as in the vectorized forms), so :func:`_ranked` ranks it last."""
     d = dot(F.col(u), F.col(v))
-    return d / F.col(nu) if nv is None else d / (F.col(nu) * F.col(nv))
+    return F.try_divide(d, F.col(nu) if nv is None else F.col(nu) * F.col(nv))
 
 
 def _ranked(sims: DataFrame, *by: str) -> DataFrame:

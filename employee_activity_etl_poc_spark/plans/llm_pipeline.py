@@ -16,11 +16,13 @@ Batch lifecycle (run per arrival, e.g. inside ``foreachBatch``):
    fingerprint store (``line_dedup_incremental``) BEFORE anything
    downstream tokenizes; pages that lose every line drop here,
 2. near-dup drop: sign the batch, band-join against the persisted
-   signature STORE ∪ batch (``minhash_incremental_pairs``) — per-batch
-   cost O(|batch|), never O(corpus). Survivor policy: a pair spanning
-   store and batch always drops the BATCH member (the store doc was
-   already exported by an earlier batch and cannot be retracted);
-   within-batch pairs drop the larger id (min-id policy). Guarantee: AT
+   signature STORE ∪ batch (``minhash_incremental_pairs``) — only the
+   batch is tokenized and signed, but every batch still scans, bands
+   and joins the whole store, so that part of its cost is O(store).
+   Survivor policy: a pair spanning store and batch always drops the
+   BATCH member (the store doc was already exported by an earlier batch
+   and cannot be retracted); within-batch pairs drop the larger id
+   (min-id policy). Guarantee: AT
    MOST ONE representative of each near-dup cluster is ever exported,
    regardless of arrival batching or id order; when ids are monotone
    across batches (the common ingest case) the surviving doc SET is
@@ -37,15 +39,25 @@ Batch lifecycle (run per arrival, e.g. inside ``foreachBatch``):
 6. append the batch's signatures (including losers' — future dups of a
    dropped doc must still collide with SOMETHING) to the store.
 
-Caching: each decision frame is persisted once, and the count that
-reports it is the action that materializes it — the exact-deduped batch
-(``n_after_exact``), the near-dup losers (``n_near_dup_losers``), the
-span-cleaned survivors (``n_span_tokens_removed``) and the gated
-survivors (``n_after_quality``), plus the batch signatures — so later
-actions and the sink writes read those caches instead of re-running the
-exact-dedup, signing and band-join lineage. The function owns every
-cache and releases it on every exit: return, ``TemplateFloodError`` or a
-failed write.
+Caching: each decision frame is a lazy local checkpoint
+(``localCheckpoint(eager=False)``), materialized by the first action
+that reads it — the count that reports it where there is one: the
+soft-dedup weights (``n_soft_reweighted``), the exact-deduped batch
+(``n_after_exact``), the batch signatures, the near-dup losers
+(``n_near_dup_losers``), the span-cleaned survivors
+(``n_span_tokens_removed``), the gated survivors (``n_after_quality``)
+and the model scores. A later action or sink write plans from those
+blocks: its plan starts at one scan per frame, where a persisted cache
+would nest the plan of every earlier cache, which Spark re-plans and
+prints at each execution (a default batch's shard write printed 410
+joins). The function owns every checkpoint and unpersists its RDD on
+every exit: return, ``TemplateFloodError`` or a failed write. The trade
+is the one ``dedup.connected_components`` makes: a local checkpoint is
+not fault-tolerant, so a lost executor fails the batch instead of
+recomputing the frame, and the batch-keyed sinks below make the
+foreachBatch replay overwrite its own partitions. A checkpoint plans
+from its pre-materialization size estimate, so the joins that read one
+carry the broadcast hints a measured cache would have planned.
 
 Idempotency: ``foreachBatch`` is AT-LEAST-ONCE — a crash after the sink
 writes but before the checkpoint commits replays the micro-batch. The
@@ -214,16 +226,24 @@ def ingest_document_batch(
     shards_path = os.path.join(workdir, "shards")
     recover_staged_swap(spark, store_path)
 
-    # Every per-batch cache is registered here and released on every exit
-    # (return, TemplateFloodError, a failed write): one cached frame per
-    # micro-batch would otherwise accumulate in a foreachBatch stream.
-    # The handles live on the stack, not in the names below, because
-    # line_dedup and the quality-model stage rebind `deduped` / `gated`.
+    # Every per-batch checkpoint is registered here and released on every
+    # exit (return, TemplateFloodError, a failed write): one checkpointed
+    # frame per micro-batch would otherwise accumulate in a foreachBatch
+    # stream. The handles live on the stack, not in the names below,
+    # because line_dedup and the quality-model stage rebind `deduped` /
+    # `gated`.
     with ExitStack() as owned:
+        # A checkpoint's tasks update the SQL metrics of its source frame's
+        # executed plan, so each source stays referenced until release: a
+        # JVM GC before the first action would otherwise log one "Failed to
+        # update accumulator" error per task.
+        sources: list[DataFrame] = []
 
         def cached(df: DataFrame) -> DataFrame:
-            df = df.persist()
-            owned.callback(df.unpersist)
+            sources.append(df)
+            df = df.localCheckpoint(eager=False)
+            # the checkpoint's plan is one LogicalRDD; its RDD owns the blocks
+            owned.callback(df._jdf.queryExecution().analyzed().rdd().unpersist, False)
             return df
 
         n_arrived = batch.count()
@@ -374,7 +394,10 @@ def ingest_document_batch(
             # re-introduce hard dedup through the back door
             losers = losers.join(exact_repeats, "doc_id", "left_anti")
         losers = cached(losers)
-        survivors = deduped.join(losers, "doc_id", "left_anti")
+        # a checkpoint plans from its pre-materialization size estimate, so
+        # the hint keeps the broadcast a measured cache would have planned:
+        # the losers are a subset of the batch's ids
+        survivors = deduped.join(F.broadcast(losers), "doc_id", "left_anti")
         # every loser is a batch member, so the count equals docs actually
         # dropped from THIS batch (store-side pair members are never counted)
         n_losers = losers.count()
@@ -465,8 +488,10 @@ def ingest_document_batch(
                     psi(score_profile(scored), art["score_profile"]), 6
                 )
 
+        # one narrow row per gated doc, bounded by the batch: the hint keeps
+        # the side a measured cache would have broadcast (see `losers`)
         chunks = chunk_tokens(gated, "text", "doc_id").join(
-            gated.select("doc_id", "quality", "lang"), "doc_id"
+            F.broadcast(gated.select("doc_id", "quality", "lang")), "doc_id"
         )
         if soft_dedup:
             chunks = chunks.join(

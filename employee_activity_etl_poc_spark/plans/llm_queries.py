@@ -1927,7 +1927,8 @@ def dedup_lsh_bucket_stats_sampled(spark: SparkSession, sf_dir: str) -> DataFram
     doc="Incremental MinHash-LSH through the persistable signature store: "
     "the corpus arrives as two ingest batches (originals, then the planted "
     "variants); each batch signs ONLY itself and band-joins against "
-    "store ∪ batch, so per-batch cost is O(|batch|), not O(corpus). The "
+    "store ∪ batch: the store is never re-signed, but every batch still "
+    "scans, bands and joins it, O(|store|). The "
     "union of per-batch outputs is provably the batch operator's result "
     "(every pair emitted exactly once, by its later member's batch) — so "
     "the ORACLE IS THE BATCH SQL, and a hash match certifies the "

@@ -92,3 +92,19 @@ def test_one_shot_allowlist_is_not_stale():
         (rel, name) for rel, name in ONE_SHOT_OK if (rel, name) not in sites
     }
     assert not stale, f"ONE_SHOT_OK entries with no call site: {stale}"
+
+
+def test_ingest_materializes_only_through_cached():
+    """``ingest_document_batch`` materializes each decision frame through
+    its one ``cached()`` helper, a local checkpoint that cuts lineage. A
+    ``.persist(`` or ``.cache(`` call in the module would bring back a
+    frame that nests every earlier cache's plan."""
+    path = os.path.join(PKG, "plans", "llm_pipeline.py")
+    tree = ast.parse(open(path).read(), filename=path)
+    calls = [
+        node.lineno for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("persist", "cache")
+    ]
+    assert not calls, f"plans/llm_pipeline.py: persist/cache at lines {calls}"

@@ -219,6 +219,22 @@ def test_brute_force_topk_exact_match_ranks_first(spark):
     assert abs(sims[4] - 1.0) < 1e-6
 
 
+def test_zero_norm_vector_ranks_last_with_null_sim(spark):
+    """A zero vector has no direction: the fold form must not divide by
+    its norm (DIVIDE_BY_ZERO under ANSI) but return a null ``sim``, ranked
+    last, exactly as the vectorized form does."""
+    corpus = _vecs(spark, [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 0.0])])
+    q = corpus.where(F.col("vec_id") == 1)
+    fold = SIM.brute_force_topk(corpus, q, "vec_id", "embedding", k=2)
+    vec = SIM.brute_force_topk_vectorized(corpus, q, "vec_id", "embedding", k=2)
+    rows = {
+        name: [(r["neighbor_id"], r["rnk"], r["sim"] is None)
+               for r in out.orderBy("rnk").collect()]
+        for name, out in (("fold", fold), ("vectorized", vec))
+    }
+    assert rows["fold"] == rows["vectorized"] == [(2, 1, False), (3, 2, True)]
+
+
 def test_lsh_bucket_same_vector_same_bucket(spark):
     v = [0.5] * 8
     corpus = _vecs(spark, [(1, v), (2, v), (3, [x * -1 for x in v])])
