@@ -102,20 +102,6 @@ def soft_dedup_store(df: DataFrame, content_col: str) -> DataFrame:
     )
 
 
-def merge_soft_dedup_store(store: DataFrame | None, batch: DataFrame, content_col: str) -> DataFrame:
-    """store ∪ batch counts, summed per hash — the store after ingesting
-    ``batch``. One groupBy on the hash key; monotone, so replay-safe
-    callers snapshot per batch like the other stores."""
-    b = soft_dedup_store(batch, content_col)
-    if store is None:
-        return b
-    return (
-        store.unionByName(b)
-        .groupBy("h")
-        .agg(F.sum("dup_count").alias("dup_count"))
-    )
-
-
 def soft_dedup_incremental(
     store: DataFrame | None,
     batch: DataFrame,
@@ -918,17 +904,6 @@ def simhash_from_hashes(hashes: Column, n_bits: int = 16) -> Column:
     return F.aggregate(bits, F.lit(0).cast("long"), lambda acc, x: acc + x)
 
 
-def simhash16_from_hashes(hashes: Column) -> Column:
-    """16-bit simhash (see :func:`simhash_from_hashes`)."""
-    return simhash_from_hashes(hashes, 16)
-
-
-def simhash16(text: Column | str) -> Column:
-    """16-bit simhash over tokens. Convenience wrapper; prefer projecting
-    the hash array and calling :func:`simhash16_from_hashes` in hot paths."""
-    return simhash16_from_hashes(F.transform(tokens(text), _hash_long))
-
-
 def simhash_signatures(
     df: DataFrame, text_col: str, id_col: str, n_bits: int = 16
 ) -> DataFrame:
@@ -964,7 +939,7 @@ def simhash_signatures(
 def simhash_duplicate_groups(
     df: DataFrame, text_col: str, id_col: str
 ) -> DataFrame:
-    """Docs sharing an identical simhash16: (simhash, n_docs, keeper_id).
+    """Docs sharing an identical 16-bit simhash: (simhash, n_docs, keeper_id).
     Hamming-distance<=d probing = re-join with bit-flipped signatures.
 
     Signatures come from :func:`simhash_signatures` (explode + codegen'd

@@ -29,12 +29,10 @@ from ..localrel import local_df
 
 __all__ = [
     "save_classifier",
-    "load_classifier",
     "load_classifier_artifact",
     "save_tokenizer",
     "save_centroids",
     "load_centroids",
-    "load_tokenizer",
     "load_tokenizer_artifact",
     "N_FERTILITY_BUCKETS",
     "N_PROFILE_BUCKETS",
@@ -75,19 +73,12 @@ def save_classifier(
     ).parquet(path)
 
 
-def load_classifier(spark: SparkSession, path: str) -> tuple[list[int], int]:
-    """(w6, b6) exactly as saved. Raises on a truncated/foreign artifact
-    (missing sentinel rows or a weight count that disagrees with the
-    recorded feature-space size)."""
-    art = load_classifier_artifact(spark, path)
-    return art["w6"], art["b6"]
-
-
 def load_classifier_artifact(spark: SparkSession, path: str) -> dict:
     """Full artifact: ``{w6, b6, score_profile}`` — ``score_profile`` is
     the stored decile histogram, or ``None`` on a pre-profile artifact.
-    Same truncation/foreign-artifact rejection as :func:`load_classifier`
-    (which delegates here), plus a partial-profile check."""
+    Raises on a truncated/foreign artifact (missing sentinel rows, a
+    weight count that disagrees with the recorded feature-space size, or
+    a partial profile)."""
     rows = {r["b"]: r["w6"] for r in spark.read.parquet(path).collect()}
     if -2 not in rows or -1 not in rows:
         raise ValueError(
@@ -159,12 +150,6 @@ def save_tokenizer(
         spark, rows,
         "rank int, lhs string, rhs string, merged string, pair_count long",
     ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_tokenizer(spark: SparkSession, path: str) -> list[dict]:
-    """Merge list exactly as saved, ordered by rank (profile dropped —
-    the lifecycle uses :func:`load_tokenizer_artifact`)."""
-    return load_tokenizer_artifact(spark, path)["merges"]
 
 
 def load_tokenizer_artifact(spark: SparkSession, path: str) -> dict:

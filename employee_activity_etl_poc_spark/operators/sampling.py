@@ -21,13 +21,6 @@ from ..localrel import local_df
 from ..sources.generator import uniform
 
 
-def keyed_sample(
-    df: DataFrame, key_col: str, fraction: float, salt: str = "sample"
-) -> DataFrame:
-    """Deterministic ~``fraction`` sample by key hash."""
-    return df.where(uniform(salt, F.col(key_col)) < fraction)
-
-
 def stratified_keyed_sample(
     df: DataFrame, key_col: str, strata_col: str, fractions: dict[str, float],
     salt: str = "strat",
@@ -147,7 +140,7 @@ def token_budget_mixture(
     1. one groupBy for per-stratum token totals (map-side combine; the
        result is |strata| rows),
     2. fraction = min(1, budget*weight / total) joined back broadcast, and
-       rows kept by key-hash (:func:`keyed_sample` semantics — partition-
+       rows kept by key-hash (the module's keyed semantics — partition-
        invariant, replayable, leak-safe across tables sharing the key).
 
     Strata not in ``weights`` are dropped. Oversubscribed strata (target
@@ -199,7 +192,7 @@ def token_budget_mixture_unimax(
     exceed its capacity). One window over |strata| rows (languages — a
     handful; the single-partition window is deliberate), then the
     per-stratum fraction joins back broadcast and rows are kept by key
-    hash (:func:`keyed_sample` semantics: partition-invariant,
+    hash (the module's keyed semantics: partition-invariant,
     replayable, leak-safe).
 
     Engine-exact by construction (the hash-gate requirement): token

@@ -420,9 +420,9 @@ def near_duplicate_pairs_exact_small(
     """Embedding near-dup pairs (a < b, cosine >= threshold) by BRUTE
     FORCE — an ``id_a < id_b`` theta-join, i.e. a BroadcastNestedLoop /
     cartesian at scale. The ``_exact_small`` suffix is deliberate: this is
-    the recall-1.0 oracle twin for tests and small corpora ONLY. The
-    default export under the natural name, :func:`near_duplicate_pairs`,
-    is the bucketed equi-join form."""
+    the recall-1.0 oracle twin for tests and small corpora ONLY; the
+    scale form is the bucketed equi-join
+    :func:`bucketed_near_duplicate_pairs`."""
     a = _with_norm(df, vec_col, id_col, "id_a", "va", "na")
     b = _with_norm(df, vec_col, id_col, "id_b", "vb", "nb")
     return _verified(a.join(b), threshold)
@@ -497,26 +497,6 @@ def semantic_near_dup_pairs(
     return _verified(a.join(b.hint("merge"), ["cell", "bucket"]), threshold)
 
 
-def near_duplicate_pairs(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    threshold: float = 0.99,
-    n_planes: int | None = None,
-    multi_probe: int = 2,
-) -> DataFrame:
-    """Embedding near-dup pairs under the natural name = the SCALE-SAFE
-    bucketed form (:func:`bucketed_near_duplicate_pairs`): hyperplane-LSH
-    candidate buckets + exact cosine verify, a plain equi-join. The brute
-    O(n²) twin lives under the explicit
-    :func:`near_duplicate_pairs_exact_small` name so the cartesian cannot
-    be reached by accident."""
-    return bucketed_near_duplicate_pairs(
-        df, id_col, vec_col, dim, threshold, n_planes, multi_probe
-    )
-
-
 def bucketed_near_duplicate_pairs(
     df: DataFrame,
     id_col: str,
@@ -528,8 +508,8 @@ def bucketed_near_duplicate_pairs(
 ) -> DataFrame:
     """Embedding near-dup pairs at scale: hyperplane-LSH candidate
     generation + cosine verify — the equi-join replacement for
-    :func:`near_duplicate_pairs`' ``id_a < id_b`` theta-join (a
-    BroadcastNestedLoop / cartesian at scale).
+    :func:`near_duplicate_pairs_exact_small`'s ``id_a < id_b`` theta-join
+    (a BroadcastNestedLoop / cartesian at scale).
 
     One side sits in its own signature bucket; the other probes its own
     bucket plus ``multi_probe`` single-bit flips. Bit-flip probing is
@@ -756,7 +736,9 @@ def _ivf_centroids_kcenter(
 def _lloyd(x, cents, iterations: int):
     """Driver-side Lloyd refinement of ``cents`` (updated in place and
     returned) over the sample matrix ``x``; empty clusters keep their
-    centroid. Deterministic, no RNG."""
+    centroid. Deterministic, no RNG; a point equidistant from two
+    centroids joins the larger index (:func:`_nearest`, the rule every
+    serving path assigns by)."""
     import numpy as np
 
     k = len(cents)
@@ -770,7 +752,7 @@ def _lloyd(x, cents, iterations: int):
         # and every gated consumer re-ranks or hashes exact arithmetic.
         score = x @ cents.T
         score -= 0.5 * (cents * cents).sum(1)[None, :]
-        assign = score.argmax(1)
+        assign = _nearest(score)
         sums = np.stack(
             [
                 np.bincount(assign, weights=x[:, j], minlength=k)
@@ -802,33 +784,6 @@ def _nearest_centroids(vec: Column, centroids: list[list[float]], n: int) -> Col
     return F.transform(F.slice(best_first, 1, n), lambda s: s["i"])
 
 
-def refine_centroids_lloyd(
-    corpus: DataFrame,
-    vec_col: str,
-    centroids: list[list[float]],
-    iterations: int = 2,
-) -> list[list[float]]:
-    """Lloyd's k-means refinement as plain DataFrame aggregations: assign
-    each vector to its nearest centroid (literal-array folds), average per
-    cluster (`array agg of element-wise sums / count`), repeat.
-
-    Each iteration is one groupBy over the corpus — fully distributed,
-    deterministic (no RNG), and the centroid list stays a driver-side
-    literal. Empty clusters keep their previous centroid."""
-    dim = len(centroids[0])
-    for _ in range(iterations):
-        assigned = _as_double(corpus, vec_col).select(
-            "v", _nearest_centroids(F.col("v"), centroids, 1)[0].alias("cell")
-        )
-        sums = assigned.groupBy("cell").agg(
-            F.count("*").alias("n"),
-            *[F.sum(F.col("v")[j]).alias(f"s{j}") for j in range(dim)],
-        )
-        new = {r["cell"]: [r[f"s{j}"] / r["n"] for j in range(dim)] for r in sums.collect()}
-        centroids = [new.get(i, c) for i, c in enumerate(centroids)]
-    return centroids
-
-
 def kmeans_lloyd_grid(
     corpus: DataFrame,
     id_col: str,
@@ -840,7 +795,7 @@ def kmeans_lloyd_grid(
 ) -> DataFrame:
     """In-engine Lloyd's k-means on an exact integer grid — the trainable
     counterpart of the driver-literal centroid helpers the IVF stack uses
-    (:func:`refine_centroids_lloyd` refines driver-side floats; this form
+    (:func:`_lloyd` refines driver-side floats; this form
     is fully engine-replayable, so it can be ORACLE-GATED like the quality
     classifier's gradient steps).
 

@@ -20,10 +20,6 @@ Spark shape (the mergeable-aggregate pattern, same as HLL/approx KLL):
   requested quantiles. At 1000 executors this is a few-MB shuffle — the
   tree-merge shape, no driver collect.
 
-The grouped form runs the same two stages keyed by (group, partition_id)
-then (group) via applyInPandas — each task holds one group's PARTIAL
-data, so a group larger than executor memory still sketches fine.
-
 Everything is deterministic: centroids are processed in sorted
 (mean, weight) order, no RNG, fixed compression δ — two runs over the
 same partitioning produce identical estimates (tests pin this, plus a
@@ -494,77 +490,6 @@ def kmv_union(a: DataFrame, b: DataFrame, k: int = 64) -> DataFrame:
     return a.unionByName(b).distinct().orderBy("h").limit(k)
 
 
-def tdigest_percentiles_grouped(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    percentiles: list[float],
-    delta: float = 100.0,
-) -> DataFrame:
-    """Per-group approximate quantiles, fully mergeable: stage 1 digests
-    each (group, input-partition) slice via applyInPandas — a task never
-    holds more than one partition's share of one group — stage 2 merges
-    each group's partial digests and interpolates. Output: group cols +
-    (pct, value). This is the shape that replaces ``percentile`` when a
-    single group outgrows executor memory."""
-    import pandas as pd
-
-    group_schema = ", ".join(
-        f"`{c}` {df.schema[c].dataType.simpleString()}" for c in group_cols
-    )
-
-    def partial(pdf: pd.DataFrame) -> pd.DataFrame:
-        got = _sketch_arrays([pdf[value_col].to_numpy(dtype=float)], delta)
-        if got is None:
-            return pd.DataFrame(
-                columns=[*group_cols, "mean", "weight", "vmin", "vmax"]
-            )
-        means, weights, vmin, vmax = got
-        out = pd.DataFrame(
-            {"mean": means, "weight": weights, "vmin": vmin, "vmax": vmax}
-        )
-        for c in group_cols:
-            out[c] = pdf[c].iloc[0]
-        return out[[*group_cols, "mean", "weight", "vmin", "vmax"]]
-
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        means, weights = _compress(
-            pdf["mean"].to_numpy(dtype=float),
-            pdf["weight"].to_numpy(dtype=float),
-            delta,
-        )
-        vmin = float(pdf["vmin"].min())
-        vmax = float(pdf["vmax"].max())
-        out = pd.DataFrame(
-            {
-                "pct": percentiles,
-                "value": [
-                    _digest_quantile(means, weights, vmin, vmax, p)
-                    for p in percentiles
-                ],
-            }
-        )
-        for c in group_cols:
-            out[c] = pdf[c].iloc[0]
-        return out[[*group_cols, "pct", "value"]]
-
-    partials = (
-        df.select(*group_cols, value_col)
-        .withColumn("_pid", F.spark_partition_id())
-        .groupBy(*group_cols, "_pid")
-        .applyInPandas(
-            lambda pdf: partial(pdf),
-            schema=f"{group_schema}, {_SKETCH_SCHEMA}",
-        )
-    )
-    return partials.groupBy(*group_cols).applyInPandas(
-        lambda pdf: final(pdf),
-        schema=f"{group_schema}, pct double, value double",
-    )
-
-
 # ---------------------------------------------------------------------------
 # KLL-style rank-error quantile sketch (Karnin-Lang-Liberty 2016 shape)
 # ---------------------------------------------------------------------------
@@ -691,86 +616,4 @@ def kll_quantiles(
 
     return sketches.repartition(1).mapInPandas(
         merge, schema="pct double, value double"
-    )
-
-
-def kll_quantiles_grouped(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    percentiles: list[float],
-    k: int = 200,
-) -> DataFrame:
-    """Per-group KLL quantiles, fully mergeable — the same two-stage
-    applyInPandas shape as :func:`tdigest_percentiles_grouped`: stage 1
-    sketches each (group, input-partition) slice (a task never holds
-    more than one partition's share of one group), stage 2 merges each
-    group's partial sketches and reads the quantiles. Output: group cols
-    + (pct, value). Use when per-group rank-uniform error is the
-    contract; the t-digest twin when relative (tail-tight) error is."""
-    import pandas as pd
-
-    group_schema = ", ".join(
-        f"`{c}` {df.schema[c].dataType.simpleString()}" for c in group_cols
-    )
-
-    def partial(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        levels: list[list[float]] = [[]]
-        counts: dict = {}
-        v = pdf[value_col].to_numpy(dtype=float)
-        v = v[~np.isnan(v)]
-        for x in v:
-            levels[0].append(float(x))
-            _kll_compact(levels, k, "kll", counts)
-        rows = [
-            {"level": h, "item": x}
-            for h, buf in enumerate(levels)
-            for x in buf
-        ]
-        out = pd.DataFrame(rows or [], columns=["level", "item"])
-        for c in group_cols:
-            out[c] = pdf[c].iloc[0] if len(out) else pd.Series(dtype=pdf[c].dtype)
-        return out[[*group_cols, "level", "item"]]
-
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
-        levels: list[list[float]] = [[]]
-        counts: dict = {}
-        for lv, item in zip(pdf["level"], pdf["item"]):
-            lv = int(lv)
-            while len(levels) <= lv:
-                levels.append([])
-            levels[lv].append(float(item))
-        _kll_compact(levels, k, "kll", counts)
-        pairs = sorted((x, 2**h) for h, buf in enumerate(levels) for x in buf)
-        total = float(sum(w for _x, w in pairs))
-        rows = []
-        for p in percentiles:
-            t = p * total
-            run = 0.0
-            val = pairs[-1][0]
-            for x, w in pairs:
-                run += w
-                if run >= t:
-                    val = x
-                    break
-            rows.append({"pct": p, "value": val})
-        out = pd.DataFrame(rows)
-        for c in group_cols:
-            out[c] = pdf[c].iloc[0]
-        return out[[*group_cols, "pct", "value"]]
-
-    partials = (
-        df.select(*group_cols, value_col)
-        .withColumn("_pid", F.spark_partition_id())
-        .groupBy(*group_cols, "_pid")
-        .applyInPandas(
-            lambda pdf: partial(pdf),
-            schema=f"{group_schema}, level int, item double",
-        )
-    )
-    return partials.groupBy(*group_cols).applyInPandas(
-        lambda pdf: final(pdf),
-        schema=f"{group_schema}, pct double, value double",
     )

@@ -9,7 +9,7 @@ AQE's skew-join handling covers sort-merge joins at runtime; these are the
   payload aggs like ``collect_list``/exact distinct, or engines/paths where
   partials are unavailable);
 - a shuffle join against a dim too big to broadcast whose fact side has
-  hot keys: replicate the dim ``n_salt``× and scatter the hot fact rows.
+  hot keys: replicate the dim ``n_salt``× and scatter the fact rows.
 
 Both rewrites are RESULT-IDENTICAL to their plain forms (the salted agg is
 oracle-checked against the unsalted SQL in the registry) — salt only
@@ -74,56 +74,6 @@ def salted_agg(
 
     stage1 = salted.groupBy(*keys, _SALT).agg(*partials)
     return stage1.groupBy(*keys).agg(*finals)
-
-
-def detect_hot_keys(
-    df: DataFrame, key: str, sample_fraction: float = 0.05, hot_share: float = 0.01
-) -> list:
-    """Driver-side hot-key detection: sample the fact table, return keys
-    whose sampled share exceeds ``hot_share`` (keys that would dominate a
-    reducer). The sample is tiny and the result is a literal list — this
-    is metadata, not a data-path shuffle."""
-    sampled = df.sample(fraction=sample_fraction, seed=42).groupBy(key).count()
-    total = sampled.agg(F.sum("count")).collect()[0][0] or 0
-    if not total:
-        return []
-    return [
-        r[key]
-        for r in sampled.where(F.col("count") / total > hot_share).collect()
-    ]
-
-
-def hybrid_salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    hot_keys: list | None = None,
-    n_salt: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Salt ONLY the hot keys: cold fact rows take the plain equi-join
-    (no dim replication), hot rows take the salted path. The dim is
-    replicated ``n_salt``× only for its hot-key rows — versus
-    :func:`salted_join`'s whole-dim replication.
-
-    ``hot_keys=None`` auto-detects via :func:`detect_hot_keys`.
-
-    Same join-type restriction as :func:`salted_join` (inner/left only) —
-    checked up front so auto-detection work isn't wasted on a bad call."""
-    if how not in ("inner", "left", "left_outer", "leftouter"):
-        raise ValueError(
-            f"hybrid_salted_join supports how='inner'/'left' only (got {how!r})"
-        )
-    if hot_keys is None:
-        hot_keys = detect_hot_keys(fact, key)
-    if not hot_keys:
-        return fact.join(dim, key, how)
-    is_hot = F.col(key).isin(hot_keys)
-    cold = fact.where(~is_hot).join(dim.where(~is_hot), key, how)
-    hot = salted_join(
-        fact.where(is_hot), dim.where(is_hot), key, n_salt=n_salt, how=how
-    )
-    return cold.unionByName(hot)
 
 
 def salted_join(

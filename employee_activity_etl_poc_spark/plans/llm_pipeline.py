@@ -43,7 +43,8 @@ Caching: each decision frame is a lazy local checkpoint
 (``localCheckpoint(eager=False)``), materialized by the first action
 that reads it — the count that reports it where there is one: the
 soft-dedup weights (``n_soft_reweighted``), the exact-deduped batch
-(``n_after_exact``), the batch signatures, the near-dup losers
+(``n_after_exact``), the line-cleaned batch (``n_lines_removed``),
+the batch signatures, the near-dup losers
 (``n_near_dup_losers``), the span-cleaned survivors
 (``n_span_tokens_removed``), the gated survivors (``n_after_quality``)
 and the model scores. A later action or sink write plans from those
@@ -304,8 +305,12 @@ def ingest_document_batch(
                 lstore = lstore.select("g")
             else:
                 lstore = None
-            cleaned_lines = D.line_dedup_incremental(
-                lstore, deduped, "text", "doc_id", sep=line_sep
+            # one pass of the line split, store join and aggregate serves
+            # the counts, the signatures and the gate
+            cleaned_lines = cached(
+                D.line_dedup_incremental(
+                    lstore, deduped, "text", "doc_id", sep=line_sep
+                )
             )
             agg = cleaned_lines.agg(
                 F.sum(F.col("n_lines") - F.col("n_kept")).alias("cut"),

@@ -2741,26 +2741,19 @@ def embedding_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 10)
-    # exact GROUND TRUTH from the shared per-fixture memo (bit-identical
-    # to the inline brute force; recall_gate references it twice, and a
-    # local relation makes both references free — the ANN operator under
-    # test is the only distributed work left in the plan)
-    _, exact = _reload_gate_exact(spark, sf_dir)
-    ann = SIM.lsh_bucketed_topk(
-        emb, q, "vec_id", "embedding", dim=64, k=5,
-        # n_planes from the corpus count (suggest_granularity at
-        # AUTO_TARGET_BUCKET=128): 2 planes at the 500-vector sf0.01
-        # corpus, 4 at sf0.1's 2k (the previously-pinned sweep point), 8
-        # at sf1's 20k (SCALE.md: recall 0.9 at 9% scanned) — constant
-        # candidate COUNT per query instead of constant fraction. The
-        # count rides the per-fixture memo (r9 judge ask #7).
-        n_planes=SIM.suggest_granularity(
-            table_count(spark, sf_dir, "embeddings"), SIM.AUTO_TARGET_BUCKET
-        ),
-        multi_probe=2, n_tables=8,
+    # n_planes from the corpus count (suggest_granularity at
+    # AUTO_TARGET_BUCKET=128): 2 planes at the 500-vector sf0.01 corpus,
+    # 4 at sf0.1's 2k (the previously-pinned sweep point), 8 at sf1's 20k
+    # (SCALE.md: recall 0.9 at 9% scanned) — constant candidate COUNT per
+    # query instead of constant fraction. The count rides the per-fixture
+    # memo (r9 judge ask #7).
+    n_planes = SIM.suggest_granularity(
+        table_count(spark, sf_dir, "embeddings"), SIM.AUTO_TARGET_BUCKET
     )
-    return SIM.recall_gate(exact, ann, floor=0.6)
+    return _recall_gated(spark, sf_dir, emb, 0.6, lambda q: SIM.lsh_bucketed_topk(
+        emb, q, "vec_id", "embedding", dim=64, k=5,
+        n_planes=n_planes, multi_probe=2, n_tables=8,
+    ))
 
 
 @register(
@@ -2824,21 +2817,15 @@ def embedding_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 10)
-    # exact GROUND TRUTH from the shared per-fixture memo (bit-identical
-    # to the inline brute force; recall_gate references it twice, and a
-    # local relation makes both references free — the ANN operator under
-    # test is the only distributed work left in the plan)
-    _, exact = _reload_gate_exact(spark, sf_dir)
     # flat-PQ fit from the shared per-fixture memo (r13 — the last
     # family member that still re-trained per call; deterministic
     # md5-seeded fit on an immutable fixture, same argument as the
     # cents/residual memo, values bit-identical to the inline train)
-    ann = SIM.pq_rerank_topk(
+    books = _reload_gate_flatpq(spark, sf_dir)
+    return _recall_gated(spark, sf_dir, emb, 0.85, lambda q: SIM.pq_rerank_topk(
         emb, q, "vec_id", "embedding", k=5, shortlist=100, m=16,
-        codebooks=_reload_gate_flatpq(spark, sf_dir),
-    )
-    return SIM.recall_gate(exact, ann, floor=0.85)
+        codebooks=books,
+    ))
 
 
 @register(
@@ -2863,30 +2850,18 @@ def embedding_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 10)
-    # exact GROUND TRUTH from the shared per-fixture memo (bit-identical
-    # to the inline brute force; recall_gate references it twice, and a
-    # local relation makes both references free — the ANN operator under
-    # test is the only distributed work left in the plan)
-    _, exact = _reload_gate_exact(spark, sf_dir)
-    ann = SIM.ivf_topk(
-        emb,
-        q,
-        "vec_id",
-        "embedding",
-        k=5,
-        # n_centroids AND n_probe auto-derived (suggest_ivf_cells ~
-        # sqrt(n); suggest_ivf_probe keeps ~1536 scored candidates per
-        # query): 32 cells/probe-all at the 510-vector gate corpus,
-        # 64/50 at sf0.1's 2k (recall 0.984 — the constant probe 20
-        # dipped to 0.744 there, the r7 audit's find), 256/20 at sf1's
-        # 20k (0.904), 512/4 at sf10's 200k (0.928) — candidate COUNT
-        # constant, scanned fraction still shrinking. n rides the
-        # per-fixture count memo (r9 judge ask #7).
-        n=table_count(spark, sf_dir, "embeddings"),
+    # n_centroids AND n_probe auto-derived (suggest_ivf_cells ~ sqrt(n);
+    # suggest_ivf_probe keeps ~1536 scored candidates per query): 32
+    # cells/probe-all at the 510-vector gate corpus, 64/50 at sf0.1's 2k
+    # (recall 0.984 — the constant probe 20 dipped to 0.744 there, the r7
+    # audit's find), 256/20 at sf1's 20k (0.904), 512/4 at sf10's 200k
+    # (0.928) — candidate COUNT constant, scanned fraction still
+    # shrinking. n rides the per-fixture count memo (r9 judge ask #7).
+    n = table_count(spark, sf_dir, "embeddings")
+    return _recall_gated(spark, sf_dir, emb, 0.8, lambda q: SIM.ivf_topk(
+        emb, q, "vec_id", "embedding", k=5, n=n,
         init="kcenter",  # measured +0.08-0.12 recall over the md5 pick
-    )
-    return SIM.recall_gate(exact, ann, floor=0.8)
+    ))
 
 
 @register(
@@ -2913,12 +2888,6 @@ def embedding_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 10)
-    # exact GROUND TRUTH from the shared per-fixture memo (bit-identical
-    # to the inline brute force; recall_gate references it twice, and a
-    # local relation makes both references free — the ANN operator under
-    # test is the only distributed work left in the plan)
-    _, exact = _reload_gate_exact(spark, sf_dir)
     # cells + codebooks from the shared per-fixture memo (r13): the
     # inline auto-train this gate ran per call is BIT-IDENTICAL to the
     # memoized fit — same k-center+Lloyd coarse init at
@@ -2927,14 +2896,14 @@ def embedding_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it is the standing artifact-lifecycle design (r9 judge ask #3),
     # not a semantics change; probe count re-derives from (n, cells)
     # exactly as the auto path would. Hash-verified at 3 SFs.
-    n_corpus = table_count(spark, sf_dir, "embeddings")
     cents, books = _reload_gate_pq(spark, sf_dir)
-    ann = SIM.ivf_pq_rerank_topk(
-        emb, q, "vec_id", "embedding", k=5,
-        n_probe=SIM.suggest_ivf_probe(n_corpus, len(cents)),
-        cents=cents, codebooks=books,
+    n_probe = SIM.suggest_ivf_probe(
+        table_count(spark, sf_dir, "embeddings"), len(cents)
     )
-    return SIM.recall_gate(exact, ann, floor=0.8)
+    return _recall_gated(spark, sf_dir, emb, 0.8, lambda q: SIM.ivf_pq_rerank_topk(
+        emb, q, "vec_id", "embedding", k=5,
+        n_probe=n_probe, cents=cents, codebooks=books,
+    ))
 
 
 # Shared across the ANN recall/lifecycle gates (r8 judge ask #5, split
@@ -2972,30 +2941,41 @@ def _memoized(sf_dir: str, key: str, fit):
     return m[key]
 
 
-def _reload_gate_exact_rows(spark: SparkSession, sf_dir: str):
-    """(corpus_n, exact ground-truth rows, schema) — the raw memoized
-    form; the reload gates consume the rows directly (their identity +
-    recall flags are driver-side arithmetic over bounded row lists,
-    r13), the recall-only gates wrap them via :func:`_reload_gate_exact`."""
+def _reload_gate_exact_rows(
+    spark: SparkSession, sf_dir: str, filtered: bool = False
+):
+    """(rows, schema) of the memoized exact top-5 ground truth of the
+    ``vec_id < 10`` queries; ``filtered`` scores only the
+    ``_ann_filter()`` corpus slice (one memo field per predicate). The
+    reload gates consume the rows directly (their identity + recall
+    flags are driver-side arithmetic over bounded row lists, r13), the
+    recall-only gates through :func:`_recall_gated`."""
     def fit():
         emb = load(spark, sf_dir, "embeddings")
         q = emb.where(F.col("vec_id") < 10)
-        exact = SIM.brute_force_topk(emb, q, "vec_id", "embedding", k=5).select(
-            "query_id", "neighbor_id", "sim", "rnk"
-        )
+        corpus = emb.where(_ann_filter()) if filtered else emb
+        exact = SIM.brute_force_topk(
+            corpus, q, "vec_id", "embedding", k=5
+        ).select("query_id", "neighbor_id", "sim", "rnk")
         return exact.collect(), exact.schema
 
-    rows, schema = _memoized(sf_dir, "base", fit)
-    # corpus n rides the shared readers count memo (one count per
-    # fixture/process across EVERY consumer, not one per memo field)
-    return table_count(spark, sf_dir, "embeddings"), rows, schema
+    return _memoized(sf_dir, "base_filtered" if filtered else "base", fit)
 
 
-def _reload_gate_exact(spark: SparkSession, sf_dir: str):
-    """(corpus_n, exact ground-truth top-k as a local relation). The
-    ONLY field the four recall-only gates touch — no train runs here."""
-    n, rows, schema = _reload_gate_exact_rows(spark, sf_dir)
-    return n, _local_df(spark, rows, schema)
+def _recall_gated(
+    spark: SparkSession, sf_dir: str, emb: DataFrame, floor: float,
+    ann, filtered: bool = False,
+) -> DataFrame:
+    """The recall-gate contract (SIM.recall_gate) of the five ANN gates:
+    the exact top-5 rows of the ``vec_id < 10`` queries plus a flag that
+    the recall of ``ann(queries)`` clears ``floor``. The ground truth is
+    the per-fixture memo as a local relation (bit-identical to the
+    inline brute force), so recall_gate's two references to it are free
+    and the ANN operator under test is the only distributed work left in
+    the plan. No train runs here."""
+    q = emb.where(F.col("vec_id") < 10)
+    exact = _local_df(spark, *_reload_gate_exact_rows(spark, sf_dir, filtered))
+    return SIM.recall_gate(exact, ann(q), floor=floor)
 
 
 def _reload_gate_cents(spark: SparkSession, sf_dir: str) -> list:
@@ -3042,45 +3022,41 @@ def _reload_gate_flatpq(spark: SparkSession, sf_dir: str):
     )
 
 
+def _reload(spark: SparkSession, save, load_back, **state):
+    """The reload contract of the five artifact-lifecycle gates: ``save``
+    writes ``state`` as an artifact into a private scratch dir (a shared
+    path lets two concurrent sessions race the save/load), ``load_back``
+    reads it into a dict, and the dir is removed on return. Returns
+    ``(artifact, identical)``: ``identical`` is the loaded state equal
+    to the saved state, bit for bit. Every consumer pins on driver-side
+    lists, so the state fixes the gate's output and equal state implies
+    an identical probe or score."""
+    import os
+    import tempfile
+
+    with tempfile.TemporaryDirectory() as tmp:
+        path = os.path.join(tmp, "artifact")
+        save(spark, path, **state)
+        art = load_back(spark, path)
+    return art, all(art[k] == v for k, v in state.items())
+
+
 def _reload_identity_gate(
-    spark: SparkSession, sf_dir: str,
-    reloaded: DataFrame, fresh: DataFrame | None,
+    spark: SparkSession, sf_dir: str, reloaded: DataFrame, identical: bool,
 ) -> DataFrame:
-    """Identity + recall flags for the two index-lifecycle gates.
-
-    r8 form: each distributed probe evaluated EXACTLY ONCE (collect the
-    bounded |q|·k results, driver-side multiset compare, recall_gate on
-    the local relation). r13 form, two further steps (guide §1.2: remove
-    passes outright before tuning them):
-
-    - ``fresh=None`` means the CALLER verified, driver-side and
-      bit-exactly, that the loaded artifact equals the saved state
-      (list equality on centroids/codebooks/n_probe — the parquet
-      round-trip property the gate exists to pin, checked DIRECTLY).
-      Probing is a deterministic function of (corpus, queries, state),
-      so equal state implies the fresh and reloaded probes are
-      identical; running the fresh probe adds no information and is
-      skipped — ``reload_identical`` is decided by the stronger state
-      compare. Any state mismatch falls back to the two-probe multiset
-      compare (pass ``fresh``), so a drifting round-trip still reaches
-      the same verdict the r8 gate gave.
-    - the recall + identity FLAGS are computed driver-side over the
-      already-collected row lists with the same arithmetic
-      ``recall_gate`` used (h = |exact ∩ reloaded| pairs, flag =
-      h >= |exact| * floor), and the output is ONE local relation —
-      the previous exact.join(approx).agg + crossJoin plan spent ~0.4 s
-      of pure job latency per run on 50-row frames. Values and hashes
-      are unchanged (oracle-verified at sf0.001/0.01/0.1)."""
+    """Identity + recall flags for the two index-lifecycle gates: the
+    exact top-k rows, ``recall_ok`` (the reloaded probe clears the 0.8
+    floor) and ``reload_identical`` (the :func:`_reload` state compare).
+    The bounded |q|·k reloaded probe is collected once and both flags
+    are computed driver-side with the arithmetic ``recall_gate`` uses
+    (h = |exact ∩ reloaded| pairs, flag = h >= |exact| * floor); the
+    output is ONE local relation — the previous exact.join(approx).agg
+    + crossJoin plan spent ~0.4 s of pure job latency per run on 50-row
+    frames (r13)."""
     from pyspark.sql.types import BooleanType, StructField, StructType
 
-    cols = ["query_id", "neighbor_id", "sim", "rnk"]
-    r_rows = reloaded.select(*cols).collect()
-    if fresh is None:
-        identical = True
-    else:
-        f_rows = fresh.select(*cols).collect()
-        identical = sorted(map(tuple, f_rows)) == sorted(map(tuple, r_rows))
-    _, e_rows, e_schema = _reload_gate_exact_rows(spark, sf_dir)
+    r_rows = reloaded.select("query_id", "neighbor_id").collect()
+    e_rows, e_schema = _reload_gate_exact_rows(spark, sf_dir)
     approx_pairs = {(r["query_id"], r["neighbor_id"]) for r in r_rows}
     h = sum(
         1 for er in e_rows if (er["query_id"], er["neighbor_id"]) in approx_pairs
@@ -3123,10 +3099,11 @@ def _reload_identity_gate(
     "n_probe) is built ONCE, saved as a parquet artifact, loaded back, "
     "and the corpus is probed with the PINNED centroids. Two booleans "
     "ride the exact top-k rows, both pinned TRUE by the oracle: "
-    "reload_identical — probe-after-reload returns the EXACT same "
-    "(query, neighbor, sim, rank) set as the fresh-build probe (the "
-    "union≡batch identity of the index world; floats round-trip "
-    "bit-exactly through parquet doubles), and recall_ok — the "
+    "reload_identical — the loaded state (centroids, n_probe, dim, "
+    "built_n) equals the saved state bit for bit (floats round-trip "
+    "exactly through parquet doubles; the probe is a deterministic "
+    "function of that state, so equal state means the probe-after-"
+    "reload is the fresh-build probe), and recall_ok — the "
     "reloaded index still clears the IVF recall floor (≥0.8) against "
     "brute force, so a save/load path that 'round-trips' a degenerate "
     "index cannot pass. This closes the plan-build-time caveat "
@@ -3137,43 +3114,25 @@ def _reload_identity_gate(
     tags=("llm", "similarity", "scale"),
 )
 def embedding_index_reload_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from ..operators.index_store import load_ann_index, save_ann_index
 
     emb = load(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 10)
-    # ground truth + k-center coarse train shared with the PQ sibling
-    # gate (identical deterministic computation — see the memo above)
-    n, _, _ = _reload_gate_exact_rows(spark, sf_dir)
+    # k-center coarse train shared with the PQ sibling gate (identical
+    # deterministic computation — see the memo above)
+    n = table_count(spark, sf_dir, "embeddings")
     cents = _reload_gate_cents(spark, sf_dir)
     # every granularity the index derives is PINNED into the artifact:
     # the probe count too (suggest_ivf_probe at build-time n)
-    n_probe = SIM.suggest_ivf_probe(n, len(cents))
-    # private scratch dir per call, removed on exit: the loader collects
-    # the whole artifact driver-side, so nothing below reads it again
-    with tempfile.TemporaryDirectory() as tmp:
-        path = os.path.join(tmp, "ann_idx")
-        save_ann_index(
-            spark, path, dim=64, built_n=n, n_probe=n_probe, centroids=cents
-        )
-        idx = load_ann_index(spark, path)
+    idx, identical = _reload(
+        spark, save_ann_index, load_ann_index, dim=64, built_n=n,
+        n_probe=SIM.suggest_ivf_probe(n, len(cents)), centroids=cents,
+    )
+    # the probe uses the RELOADED state: the lifecycle under test
     reloaded = SIM.ivf_topk(
-        emb, q, "vec_id", "embedding",
+        emb, emb.where(F.col("vec_id") < 10), "vec_id", "embedding",
         k=5, n_probe=idx["n_probe"], cents=idx["centroids"],
     )
-    # Round-trip identity is verified DRIVER-SIDE, bit-exactly, on the
-    # loaded state itself; equal state implies a fresh probe would be
-    # identical, so it only runs on the drift path (r13 — see
-    # _reload_identity_gate). The probe that always runs uses the
-    # RELOADED state: the lifecycle under test.
-    if idx["n_probe"] == n_probe and idx["centroids"] == cents:
-        return _reload_identity_gate(spark, sf_dir, reloaded, None)
-    fresh = SIM.ivf_topk(
-        emb, q, "vec_id", "embedding", k=5, n_probe=n_probe, cents=cents
-    )
-    return _reload_identity_gate(spark, sf_dir, reloaded, fresh)
+    return _reload_identity_gate(spark, sf_dir, reloaded, identical)
 
 
 @register(
@@ -3199,59 +3158,41 @@ def embedding_index_reload_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "actually persists — coarse centroids, per-subspace codebooks, "
     "n_probe, every granularity auto-derived at build — is trained "
     "ONCE, saved (operators/index_store), loaded back, and the "
-    "IVFx,PQy+refine probe runs with the PINNED state on both sides: "
-    "reload_identical asserts the probe-after-reload returns the exact "
-    "same (query, neighbor, sim, rank) set as the fresh probe (floats "
-    "round-trip bit-exactly through parquet doubles; the codebook "
-    "nesting reconstruction is what this exercises), recall_ok asserts "
+    "IVFx,PQy+refine probe runs with the RELOADED state: "
+    "reload_identical asserts the loaded state (coarse centroids, "
+    "codebooks, n_probe, dim, built_n) equals the saved state bit for "
+    "bit (floats round-trip exactly through parquet doubles; the "
+    "codebook nesting reconstruction is what this exercises), so the "
+    "probe equals a fresh-state probe, and recall_ok asserts "
     "the reloaded index still clears the re-ranked recall floor "
     "(≥0.8), so a degenerate round-trip cannot pass. The exact top-k "
-    "rows hash-match DuckDB. Training is shared by both probes, so the "
-    "gate stays bounded (the r7 verdict's cost note on the IVF gate).",
+    "rows hash-match DuckDB. Training comes from the per-fixture memo "
+    "and one probe runs, so the gate stays bounded (the r7 verdict's "
+    "cost note on the IVF gate).",
     tags=("llm", "similarity", "scale"),
 )
 def embedding_pq_index_reload_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from ..operators.index_store import load_ann_index, save_ann_index
 
     emb = load(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 10)
-    # ground truth, coarse centroids AND the residual-PQ codebooks come
-    # from the per-fixture memo: train_residual_pq's md5-seeded fit on
-    # the immutable fixture is deterministic (the same bit-identity
-    # argument that justified memoizing the cents — r9 judge ask #3),
-    # so this gate's repeated runs pay only save/load + probes.
-    n, _, _ = _reload_gate_exact_rows(spark, sf_dir)
+    # coarse centroids AND the residual-PQ codebooks come from the
+    # per-fixture memo: train_residual_pq's md5-seeded fit on the
+    # immutable fixture is deterministic (the same bit-identity argument
+    # that justified memoizing the cents — r9 judge ask #3), so this
+    # gate's repeated runs pay only save/load + one probe.
+    n = table_count(spark, sf_dir, "embeddings")
     cents, books = _reload_gate_pq(spark, sf_dir)
-    n_probe = SIM.suggest_ivf_probe(n, len(cents))
-    with tempfile.TemporaryDirectory() as tmp:
-        path = os.path.join(tmp, "ann_pq_idx")
-        save_ann_index(
-            spark, path, dim=len(cents[0]), built_n=n, n_probe=n_probe,
-            coarse=cents, codebooks=books,
-        )
-        idx = load_ann_index(spark, path)
+    idx, identical = _reload(
+        spark, save_ann_index, load_ann_index, dim=len(cents[0]), built_n=n,
+        n_probe=SIM.suggest_ivf_probe(n, len(cents)), coarse=cents,
+        codebooks=books,
+    )
     reloaded = SIM.ivf_pq_rerank_topk(
-        emb, q, "vec_id", "embedding", k=5,
+        emb, emb.where(F.col("vec_id") < 10), "vec_id", "embedding", k=5,
         n_probe=idx["n_probe"], residual=True,
         cents=idx["coarse"], codebooks=idx["codebooks"],
     )
-    # driver-side bit-exact state compare decides reload_identical; the
-    # fresh probe only runs on the drift path (r13 — see
-    # _reload_identity_gate / embedding_index_reload_topk)
-    if (
-        idx["n_probe"] == n_probe
-        and idx["coarse"] == cents
-        and idx["codebooks"] == books
-    ):
-        return _reload_identity_gate(spark, sf_dir, reloaded, None)
-    fresh = SIM.ivf_pq_rerank_topk(
-        emb, q, "vec_id", "embedding", k=5,
-        n_probe=n_probe, residual=True, cents=cents, codebooks=books,
-    )
-    return _reload_identity_gate(spark, sf_dir, reloaded, fresh)
+    return _reload_identity_gate(spark, sf_dir, reloaded, identical)
 
 
 # ---------------------------------------------------------------------------
@@ -4182,24 +4123,18 @@ def _qc_trained_model(spark: SparkSession, sf_dir: str) -> dict:
     tags=("llm", "text", "quality", "ml", "scale"),
 )
 def quality_classifier_reload_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from ..operators.model_store import load_classifier, save_classifier
+    from ..operators.model_store import load_classifier_artifact, save_classifier
 
     docs = load(spark, sf_dir, "documents")
     model = _qc_trained_model(spark, sf_dir)
-    # private scratch dir per call (a shared path lets two concurrent
-    # sessions race the save/load); the gate exercises save→load
-    # round-trip identity, which is path-independent
-    with tempfile.TemporaryDirectory() as tmp:
-        path = os.path.join(tmp, "qc_model")
-        save_classifier(spark, path, model["w6"], model["b6"])
-        w6, b6 = load_classifier(spark, path)
-    identical = w6 == model["w6"] and b6 == model["b6"]
+    art, identical = _reload(
+        spark, save_classifier, load_classifier_artifact,
+        w6=model["w6"], b6=model["b6"],
+    )
     return TX.score_quality_classifier(
-        docs, "text", "doc_id", label=F.col("lang") == "en", w6=w6, b6=b6
-    ).withColumn("reload_identical", F.lit(bool(identical)).cast("int"))
+        docs, "text", "doc_id", label=F.col("lang") == "en",
+        w6=art["w6"], b6=art["b6"],
+    ).withColumn("reload_identical", F.lit(identical).cast("int"))
 
 
 # ---------------------------------------------------------------------------
@@ -4388,21 +4323,6 @@ _EXACT_TOPK_FILTERED_SQL = f"""
     """
 
 
-def _filtered_gate_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized exact ground truth for the FILTERED-corpus top-k (the
-    _reload_gate_exact contract, one memo field per predicate)."""
-    def fit():
-        emb = load(spark, sf_dir, "embeddings")
-        q = emb.where(F.col("vec_id") < 10)
-        exact = SIM.brute_force_topk(
-            emb.where(_ann_filter()), q, "vec_id", "embedding", k=5
-        ).select("query_id", "neighbor_id", "sim", "rnk")
-        return exact.collect(), exact.schema
-
-    rows, schema = _memoized(sf_dir, "base_filtered", fit)
-    return _local_df(spark, rows, schema)
-
-
 @register(
     "embedding_topk_filtered",
     _EXACT_TOPK_FILTERED_SQL.format(flag=""),
@@ -4449,8 +4369,6 @@ def embedding_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 10)
-    exact = _filtered_gate_exact(spark, sf_dir)
     cents = _reload_gate_cents(spark, sf_dir)  # full-corpus index
     filtered = emb.where(_ann_filter())
     # the filtered density is what sizes the probe budget; one cheap
@@ -4458,10 +4376,9 @@ def embedding_ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # granularity-literal pattern)
     n_filtered = _memoized(sf_dir, "n_filtered", filtered.count)
     n_probe = SIM.suggest_ivf_probe(n_filtered, len(cents))
-    ann = SIM.ivf_topk(
+    return _recall_gated(spark, sf_dir, emb, 0.8, lambda q: SIM.ivf_topk(
         filtered, q, "vec_id", "embedding", k=5, cents=cents, n_probe=n_probe
-    )
-    return SIM.recall_gate(exact, ann, floor=0.8)
+    ), filtered=True)
 
 
 @register(
@@ -4722,21 +4639,16 @@ def cluster_balanced_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("llm", "text", "ml", "scale"),
 )
 def bpe_reload_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from ..operators.model_store import load_tokenizer, save_tokenizer
+    from ..operators.model_store import load_tokenizer_artifact, save_tokenizer
 
     docs = load(spark, sf_dir, "documents")
-    ms = _bpe_trained(spark, sf_dir, docs)
-    with tempfile.TemporaryDirectory() as tmp:
-        path = os.path.join(tmp, "bpe_model")
-        save_tokenizer(spark, path, ms)
-        reloaded = load_tokenizer(spark, path)
-    identical = reloaded == ms
+    art, identical = _reload(
+        spark, save_tokenizer, load_tokenizer_artifact,
+        merges=_bpe_trained(spark, sf_dir, docs),
+    )
     return TX.bpe_fertility_by_group(
-        docs, "text", "lang", reloaded
-    ).withColumn("reload_identical", F.lit(bool(identical)).cast("int"))
+        docs, "text", "lang", art["merges"]
+    ).withColumn("reload_identical", F.lit(identical).cast("int"))
 
 
 # ---------------------------------------------------------------------------
@@ -5268,23 +5180,17 @@ def _kmeans_trained(spark: SparkSession, sf_dir: str) -> dict:
     tags=("llm", "similarity", "ml", "scale"),
 )
 def kmeans_reload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from ..operators.model_store import load_centroids, save_centroids
 
     emb = load(spark, sf_dir, "embeddings")
     model = _kmeans_trained(spark, sf_dir)
-    with tempfile.TemporaryDirectory() as tmp:
-        path = os.path.join(tmp, "kmeans_model")
-        save_centroids(spark, path, model["centroids"], model["grid"])
-        art = load_centroids(spark, path)
-    identical = (
-        art["centroids"] == model["centroids"] and art["grid"] == model["grid"]
+    art, identical = _reload(
+        spark, save_centroids, load_centroids,
+        centroids=model["centroids"], grid=model["grid"],
     )
     return SIM.kmeans_assign_stats(
         emb, "vec_id", "embedding", art["centroids"], grid=art["grid"]
-    ).withColumn("reload_identical", F.lit(bool(identical)).cast("int"))
+    ).withColumn("reload_identical", F.lit(identical).cast("int"))
 
 
 @register(

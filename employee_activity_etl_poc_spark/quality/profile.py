@@ -57,47 +57,3 @@ def profile_table(
         ]
     )
     return wide.select(F.explode(per_col).alias("p")).select("p.*")
-
-
-def profile_drift(
-    baseline: DataFrame, current: DataFrame, rel_threshold: float = 0.1
-) -> DataFrame:
-    """Compare two profiles (same long format) and flag drifted columns:
-    null-RATE change beyond ``rel_threshold`` (absolute), or mean /
-    distinct-count relative change beyond it. The profile(t) vs
-    profile(t-1) alert every scheduled pipeline should run after loading.
-    """
-    b = baseline.select(
-        "column",
-        (F.col("n_null") / F.col("n")).alias("b_null_rate"),
-        F.col("n_distinct").alias("b_distinct"),
-        F.col("mean").alias("b_mean"),
-    )
-    c = current.select(
-        "column",
-        (F.col("n_null") / F.col("n")).alias("c_null_rate"),
-        F.col("n_distinct").alias("c_distinct"),
-        F.col("mean").alias("c_mean"),
-    )
-
-    def rel(a, bb):
-        return F.when(bb == 0, F.when(a == 0, 0.0).otherwise(1.0)).otherwise(
-            F.abs(a - bb) / F.abs(bb)
-        )
-
-    j = b.join(c, "column", "full")
-    return j.select(
-        "column",
-        F.round(F.abs(F.col("c_null_rate") - F.col("b_null_rate")), 4).alias(
-            "null_rate_delta"
-        ),
-        F.round(rel(F.col("c_distinct"), F.col("b_distinct")), 4).alias(
-            "distinct_rel_change"
-        ),
-        F.round(rel(F.col("c_mean"), F.col("b_mean")), 4).alias("mean_rel_change"),
-    ).withColumn(
-        "drifted",
-        (F.col("null_rate_delta") > rel_threshold)
-        | (F.col("distinct_rel_change") > rel_threshold)
-        | F.coalesce(F.col("mean_rel_change") > rel_threshold, F.lit(False)),
-    )

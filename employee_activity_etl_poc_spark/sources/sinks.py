@@ -52,28 +52,6 @@ def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).option("header", "true").csv(path)
 
 
-def overwrite_partitions(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str],
-) -> None:
-    """Idempotent partition backfill: overwrite ONLY the partitions present
-    in ``df`` (dynamic partitionOverwriteMode), leaving every other
-    partition untouched — re-running a day's gold job replaces that day,
-    never truncates the table (static overwrite's failure mode).
-
-    Conf is set/restored around the write; on Delta use
-    ``replaceWhere`` for the same semantics transactionally."""
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "static")
-    try:
-        spark.conf.set(key, "dynamic")
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-    finally:
-        spark.conf.set(key, prev)
-
-
 def write_training_shards(
     df: DataFrame,
     path: str,
@@ -99,150 +77,6 @@ def write_training_shards(
         sharded.repartition(n_shards, "shard")
         .write.mode(mode)
         .partitionBy("shard")
-        .parquet(path)
-    )
-
-
-def zorder_value(
-    df: DataFrame, cols: list[str], bits: int = 8
-) -> DataFrame:
-    """Adds ``_z``: the Morton (Z-order) interleave of the columns'
-    normalized ranks — rows close in ALL dimensions get close z-values.
-
-    Per column: one global min/max aggregate (driver scalars), normalize
-    to a ``bits``-bit bucket, then interleave bit i of column j into
-    position ``i*n_cols + j``. All column expressions — no UDF, no extra
-    shuffle beyond the caller's writes."""
-    from pyspark.sql import functions as F
-
-    stats = df.agg(
-        *[F.min(F.col(c).cast("double")).alias(f"mn_{c}") for c in cols],
-        *[F.max(F.col(c).cast("double")).alias(f"mx_{c}") for c in cols],
-    ).collect()[0]
-    n_cols = len(cols)
-    max_bucket = (1 << bits) - 1
-    z = F.lit(0).cast("long")
-    for j, c in enumerate(cols):
-        mn, mx = stats[f"mn_{c}"], stats[f"mx_{c}"]
-        span = (mx - mn) or 1.0
-        bucket = F.least(
-            F.lit(max_bucket),
-            F.floor((F.col(c).cast("double") - F.lit(mn)) / F.lit(span) * max_bucket),
-        ).cast("long")
-        for i in range(bits):
-            bit = F.shiftright(bucket, i).bitwiseAND(F.lit(1))
-            z = z + F.shiftleft(bit, i * n_cols + j)
-    return df.withColumn("_z", z)
-
-
-def hilbert_value(df: DataFrame, cols: list[str], bits: int = 8) -> DataFrame:
-    """Adds ``_h``: the Hilbert-curve index of the two columns' normalized
-    ranks — strictly better locality than the Morton interleave
-    (:func:`zorder_value`): consecutive Hilbert indices are ALWAYS
-    adjacent cells, so a contiguous index range (= one output file under
-    range partitioning) covers a more compact region, i.e. tighter
-    per-file min/max bounds. Two dimensions only (the standard xy→d
-    construction); use Morton for 3+.
-
-    Computed in an Arrow-vectorized pandas UDF: the per-bit
-    rotate/reflect state machine MUTATES (x, y) each level, so a pure
-    column-expression unrolling doubles the expression tree per bit
-    (6^bits nodes — Catalyst planning, not execution, becomes the
-    bottleneck; measured hung at bits=8). numpy runs the same 8-iteration
-    loop vectorized over the batch — the documented exception to the
-    no-UDF rule: per-row iterative state machines."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    if len(cols) != 2:
-        raise ValueError("hilbert_value is 2-D; use zorder_value for other arities")
-    stats = df.agg(
-        *[F.min(F.col(c).cast("double")).alias(f"mn_{c}") for c in cols],
-        *[F.max(F.col(c).cast("double")).alias(f"mx_{c}") for c in cols],
-    ).collect()[0]
-    max_bucket = (1 << bits) - 1
-    bounds = [
-        (stats[f"mn_{c}"], (stats[f"mx_{c}"] - stats[f"mn_{c}"]) or 1.0)
-        for c in cols
-    ]
-
-    # no type hints: `from __future__ import annotations` stringifies them,
-    # which pandas_udf's eval-type inference rejects; hint-less defaults to
-    # the scalar Series->Series eval type we want
-    @pandas_udf("long")
-    def _h(xs, ys):
-        import numpy as np
-
-        def bucket(v: pd.Series, mn: float, span: float) -> "np.ndarray":
-            b = np.floor((v.to_numpy(dtype=np.float64) - mn) / span * max_bucket)
-            return np.minimum(b, max_bucket).astype(np.int64)
-
-        x = bucket(xs, *bounds[0])
-        y = bucket(ys, *bounds[1])
-        d = np.zeros_like(x)
-        s = 1 << (bits - 1)
-        while s > 0:
-            rx = ((x & s) > 0).astype(np.int64)
-            ry = ((y & s) > 0).astype(np.int64)
-            d += s * s * ((3 * rx) ^ ry)
-            # rotate quadrant where ry == 0 (reflect when rx == 1, swap)
-            rot = ry == 0
-            refl = rot & (rx == 1)
-            x_r = np.where(refl, s - 1 - x, x)
-            y_r = np.where(refl, s - 1 - y, y)
-            x, y = np.where(rot, y_r, x_r), np.where(rot, x_r, y_r)
-            s >>= 1
-        return pd.Series(d)
-
-    return df.withColumn("_h", _h(F.col(cols[0]), F.col(cols[1])))
-
-
-def write_hilbert_clustered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    n_files: int = 8,
-    bits: int = 8,
-    mode: str = "overwrite",
-) -> None:
-    """:func:`write_zordered` with the Hilbert index — same API, tighter
-    per-file bounding boxes in 2-D (every contiguous index range is a
-    connected region; Morton ranges jump)."""
-    hdf = hilbert_value(df, cols, bits)
-    (
-        hdf.repartitionByRange(n_files, "_h")
-        .sortWithinPartitions("_h")
-        .drop("_h")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    n_files: int = 8,
-    bits: int = 8,
-    mode: str = "overwrite",
-) -> None:
-    """Parquet write clustered by Z-order over ``cols`` — the plain-
-    parquet equivalent of Delta ``OPTIMIZE ZORDER BY``: each output file
-    covers a small hyper-rectangle of the column space, so row-group
-    min/max statistics prune scans filtered on ANY of the columns (a
-    single-column sort prunes only its own column; Z-order prunes all
-    dimensions at ~1/2^(bits shared) selectivity each).
-
-    ``repartitionByRange(_z)`` gives contiguous z-ranges per file (range
-    exchange samples the z distribution); the within-partition sort costs
-    nothing extra at write time and tightens per-row-group stats."""
-    zdf = zorder_value(df, cols, bits)
-    (
-        zdf.repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode(mode)
         .parquet(path)
     )
 

@@ -114,7 +114,11 @@ def test_minhash_incremental_equals_batch(spark, sf_dir):
 
 def test_simhash_identical_for_identical_text(spark):
     df = _docs(spark, [(1, "alpha beta gamma"), (2, "alpha beta gamma"), (3, "x y z")])
-    sigs = {r["doc_id"]: r["s"] for r in df.select("doc_id", D.simhash16("text").alias("s")).collect()}
+    hashes = F.transform(D.tokens(F.col("text")), D._hash_long)
+    sigs = {
+        r["doc_id"]: r["s"]
+        for r in df.select("doc_id", D.simhash_from_hashes(hashes, 16).alias("s")).collect()
+    }
     assert sigs[1] == sigs[2]
     assert 0 <= sigs[1] < 2**16
     groups = D.simhash_duplicate_groups(df, "text", "doc_id").collect()
@@ -250,9 +254,9 @@ def test_near_duplicate_pairs(spark):
         corpus, "vec_id", "embedding", threshold=0.99
     ).collect()
     assert [(p["id_a"], p["id_b"]) for p in pairs] == [(1, 2)]
-    # the natural name routes to the scale-safe bucketed form and agrees
-    # on exact copies (identical signatures share every bucket)
-    bucketed = SIM.near_duplicate_pairs(
+    # the scale-safe bucketed form agrees on exact copies (identical
+    # signatures share every bucket)
+    bucketed = SIM.bucketed_near_duplicate_pairs(
         corpus, "vec_id", "embedding", dim=3, threshold=0.99
     ).collect()
     assert [(p["id_a"], p["id_b"]) for p in bucketed] == [(1, 2)]
@@ -424,21 +428,37 @@ def test_vectorized_topk_matches_fold_variant(spark, sf_dir):
 
 
 def test_lloyd_refinement_improves_or_keeps_recall(spark, sf_dir):
+    import numpy as np
+
     from employee_activity_etl_poc_spark.operators.similarity import (
         _ivf_centroids,
-        refine_centroids_lloyd,
+        _lloyd,
     )
     from employee_activity_etl_poc_spark.sources.readers import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     seed = _ivf_centroids(emb, "vec_id", "embedding", 8)
-    refined = refine_centroids_lloyd(emb, "embedding", seed, iterations=2)
+    x = np.array([r["embedding"] for r in emb.select("embedding").collect()])
+    refined = _lloyd(x, np.array(seed), 2).tolist()
     assert len(refined) == 8 and len(refined[0]) == len(seed[0])
     # refinement must actually move centroids (corpus isn't degenerate)
     assert refined != seed
     # deterministic
-    again = refine_centroids_lloyd(emb, "embedding", seed, iterations=2)
-    assert again == refined
+    assert _lloyd(x, np.array(seed), 2).tolist() == refined
+
+
+def test_lloyd_ties_join_the_larger_index():
+    """A point equidistant from two centroids is assigned by _nearest's
+    larger-index rule, the rule every serving path (the numpy matmul
+    tier and the JVM struct sort) assigns by — so a trained centroid
+    set and its serving assignment agree on ties."""
+    import numpy as np
+
+    from employee_activity_etl_poc_spark.operators.similarity import _lloyd
+
+    cents = np.array([[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]])
+    out = _lloyd(np.array([[0.0, 0.0, 1.0]]), cents, 1)
+    assert out.tolist() == [[1.0, 0.0, 0.0], [0.0, 0.0, 1.0]]
 
 
 def test_multi_probe_lsh_recall_not_worse(spark, sf_dir):
@@ -707,15 +727,24 @@ def test_token_budget_mixture_unimax_epoch_cap_and_temperature(spark):
 
 
 def test_keyed_sample_repartition_invariant(spark, sf_dir):
-    from employee_activity_etl_poc_spark.operators.sampling import keyed_sample
+    from employee_activity_etl_poc_spark.operators.sampling import (
+        stratified_keyed_sample,
+    )
     from employee_activity_etl_poc_spark.sources.readers import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    a = {r["doc_id"] for r in keyed_sample(docs, "doc_id", 0.3).select("doc_id").collect()}
-    b = {
-        r["doc_id"]
-        for r in keyed_sample(docs.repartition(13), "doc_id", 0.3).select("doc_id").collect()
-    }
+    fracs = {r["lang"]: 0.3 for r in docs.select("lang").distinct().collect()}
+
+    def sample(df):
+        return {
+            r["doc_id"]
+            for r in stratified_keyed_sample(df, "doc_id", "lang", fracs)
+            .select("doc_id")
+            .collect()
+        }
+
+    a = sample(docs)
+    b = sample(docs.repartition(13))
     assert a == b and 0 < len(a) < docs.count()
 
 
@@ -2415,10 +2444,20 @@ def test_soft_dedup_incremental_counts_accumulate_across_batches(spark):
         [(i, txt) for i in ids], "doc_id long, text string"
     )
     b1, b2, b3 = mk([1], "same page"), mk([2], "same page"), mk([3], "same page")
+    # the store after each batch, merged the way the ingest path reads
+    # it back: union of the per-batch counts, summed per hash
+    def merged(store, batch):
+        b = D.soft_dedup_store(batch, "text")
+        if store is None:
+            return b
+        return store.unionByName(b).groupBy("h").agg(
+            F.sum("dup_count").cast("long").alias("dup_count")
+        )
+
     o1 = D.soft_dedup_incremental(None, b1, "text", "doc_id").collect()[0]
-    s1 = D.merge_soft_dedup_store(None, b1, "text")
+    s1 = merged(None, b1)
     o2 = D.soft_dedup_incremental(s1, b2, "text", "doc_id").collect()[0]
-    s2 = D.merge_soft_dedup_store(s1, b2, "text")
+    s2 = merged(s1, b2)
     o3 = D.soft_dedup_incremental(s2, b3, "text", "doc_id").collect()[0]
     assert (o1["dup_count"], o2["dup_count"], o3["dup_count"]) == (1, 2, 3)
     assert (

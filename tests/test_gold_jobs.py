@@ -86,29 +86,3 @@ def test_incremental_appends_only_new_rows(spark, tmp_path):
     out = spark.read.parquet(gold_path)
     assert out.count() == 50
     assert out.select("activity_id").distinct().count() == 50
-
-
-def test_overwrite_partitions_backfills_one_day_only(spark, tmp_path):
-    from employee_activity_etl_poc_spark.sources.sinks import overwrite_partitions
-
-    path = str(tmp_path / "gold")
-    day1 = spark.createDataFrame([(1, "2024-06-01"), (2, "2024-06-01")], ["id", "d"])
-    day2 = spark.createDataFrame([(3, "2024-06-02")], ["id", "d"])
-    day1.unionByName(day2).write.partitionBy("d").parquet(path)
-
-    # backfill ONLY day 2 with corrected data
-    fixed = spark.createDataFrame(
-        [(30, "2024-06-02"), (31, "2024-06-02")], ["id", "d"]
-    )
-    overwrite_partitions(fixed, path, ["d"])
-
-    out = spark.read.parquet(path)
-    # partition values are type-inferred on read (string -> date): compare as str
-    ids = {str(r["d"]): sorted(x["id"] for x in out.where(F.col("d") == r["d"]).collect())
-           for r in out.select("d").distinct().collect()}
-    assert ids == {"2024-06-01": [1, 2], "2024-06-02": [30, 31]}
-    # static overwrite would have truncated day 1; conf restored afterwards
-    assert (
-        spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        == "static"
-    )

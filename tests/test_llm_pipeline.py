@@ -1170,3 +1170,41 @@ def test_ingest_sink_frames_start_at_materialized_blocks(spark, tmp_path, monkey
     )
     assert len(captured) == 1
     assert "InMemoryRelation" not in captured[0], captured[0]
+
+
+def test_line_cleaned_frame_scans_the_line_store_once(spark, tmp_path, monkeypatch):
+    """With line_dedup=True the line-cleaned batch is a checkpoint too,
+    materialized by the count that reports ``n_lines_removed``: the frame
+    every later stage reads (signatures, survivors, gate, shards) starts
+    at those blocks instead of re-running the line split, the line-store
+    join and the aggregate — which it did once per later execution."""
+    signed, sharded = [], []
+    sign = llm_pipeline.D.minhash_signature_table
+    write = llm_pipeline.write_training_shards
+
+    def capturing_sign(df, *args, **kwargs):
+        signed.append(df.inputFiles())
+        return sign(df, *args, **kwargs)
+
+    def capturing_write(chunks, *args, **kwargs):
+        sharded.append(chunks.inputFiles())
+        return write(chunks, *args, **kwargs)
+
+    monkeypatch.setattr(llm_pipeline.D, "minhash_signature_table", capturing_sign)
+    monkeypatch.setattr(llm_pipeline, "write_training_shards", capturing_write)
+    wd = str(tmp_path / "wd")
+    for b, word in enumerate(("alpha", "omega")):
+        page = " ".join(f"{word}{i} beta{i} gamma{i} delta{i}" for i in range(30))
+        batch = spark.createDataFrame(
+            [(2 * b, "boiler cookie banner\n" + page), (2 * b + 1, page + " end")],
+            "doc_id long, text string",
+        )
+        ingest_document_batch(
+            spark, batch, wd, min_quality=0.0, keep_langs=("unknown",),
+            batch_id=b, line_dedup=True,
+        )
+    # the second batch is the one with a line store to join
+    assert os.path.isdir(os.path.join(wd, "linestore"))
+    assert len(signed) == 2 and len(sharded) == 2
+    for files in signed + sharded:
+        assert not [f for f in files if "linestore" in f], files

@@ -77,7 +77,7 @@ def test_local_df_keeps_collected_struct_type(spark, sf_dir):
         _reload_gate_exact_rows,
     )
 
-    _, rows, schema = _reload_gate_exact_rows(spark, sf_dir)
+    rows, schema = _reload_gate_exact_rows(spark, sf_dir)
     assert rows and not all(f.nullable for f in schema.fields)
     got = local_df(spark, rows, schema)
     assert got.schema == schema == _python_rows_df(spark, rows, schema).schema

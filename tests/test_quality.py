@@ -97,27 +97,3 @@ def test_profile_table_stats(spark):
     # approx mode runs and keeps shape
     approx = profile_table(df, approx=True)
     assert approx.count() == 3
-
-
-def test_profile_drift_flags_changes(spark):
-    from employee_activity_etl_poc_spark.quality.profile import (
-        profile_drift,
-        profile_table,
-    )
-
-    base = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0), (4, "d", 40.0)],
-        ["id", "s", "v"],
-    )
-    # v's mean doubles and s gains nulls
-    cur = spark.createDataFrame(
-        [(1, None, 20.0), (2, None, 40.0), (3, "c", 60.0), (4, "d", 80.0)],
-        ["id", "s", "v"],
-    )
-    drift = {
-        r["column"]: r
-        for r in profile_drift(profile_table(base), profile_table(cur)).collect()
-    }
-    assert drift["v"]["drifted"] and drift["v"]["mean_rel_change"] == 1.0
-    assert drift["s"]["drifted"] and drift["s"]["null_rate_delta"] == 0.5
-    assert not drift["id"]["drifted"]

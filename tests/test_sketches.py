@@ -75,30 +75,6 @@ def test_tdigest_deterministic(spark, values):
     assert a == b
 
 
-def test_tdigest_grouped_matches_exact_within_bound(spark, sf_dir):
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .select("event_type", F.col("value").cast("double").alias("v"))
-        .where(F.col("v").isNotNull())
-    )
-    est = SK.tdigest_percentiles_grouped(
-        ev, ["event_type"], "v", [0.5, 0.9], delta=100.0
-    ).collect()
-    groups = {r["event_type"] for r in est}
-    assert groups == {r["event_type"] for r in ev.select("event_type").distinct().collect()}
-    import bisect
-
-    by_group: dict[str, list[float]] = {}
-    for r in ev.collect():
-        by_group.setdefault(r["event_type"], []).append(r["v"])
-    for g in by_group:
-        by_group[g].sort()
-    for r in est:
-        vals = by_group[r["event_type"]]
-        cdf = bisect.bisect_right(vals, r["value"]) / len(vals)
-        assert abs(cdf - r["pct"]) <= 0.02, (r["event_type"], r["pct"])
-
-
 def test_tdigest_compression_bounds_centroids(spark, values):
     cent = SK.tdigest_partition_sketches(values.repartition(4), "v", delta=50.0)
     counts = [
@@ -325,28 +301,6 @@ def test_kll_rank_error_and_determinism(spark, values):
     est = {r["pct"]: r["value"] for r in rows}
     again = {r["pct"]: r["value"] for r in SK.kll_quantiles(values, "v", pcts, k=200).collect()}
     assert est == again
-
-
-def test_kll_grouped_matches_exact_within_bound(spark, sf_dir):
-    """Grouped KLL: per-group rank error stays bounded vs the exact
-    per-group percentiles."""
-    import bisect
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_type", F.col("value").cast("double").alias("v")
-    ).where(F.col("v").isNotNull())
-    got = SK.kll_quantiles_grouped(ev, ["event_type"], "v", [0.25, 0.5, 0.9], k=200)
-    by_group: dict = {}
-    for r in ev.collect():
-        by_group.setdefault(r["event_type"], []).append(r["v"])
-    for vals in by_group.values():
-        vals.sort()
-    worst = 0.0
-    for r in got.collect():
-        vals = by_group[r["event_type"]]
-        cdf = bisect.bisect_right(vals, r["value"]) / len(vals)
-        worst = max(worst, abs(cdf - r["pct"]))
-    assert worst <= 0.03, worst
 
 
 def test_cms_range_merge_is_exact(spark):

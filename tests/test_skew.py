@@ -59,56 +59,15 @@ def test_salted_join_left_keeps_unmatched(spark):
     assert {r["v"]: r["d"] for r in out} == {"a": "X", "b": "Y", "z": None}
 
 
-def test_hybrid_salted_join_equals_plain_on_skewed_data(spark):
-    from pyspark.sql import functions as F
-
-    from employee_activity_etl_poc_spark.operators.skew import (
-        detect_hot_keys,
-        hybrid_salted_join,
-    )
-
-    # 90% of fact rows share key 7 — a classic hot key
-    fact = spark.range(2000).select(
-        F.when(F.col("id") % 10 < 9, 7).otherwise(F.col("id") % 100).alias("k"),
-        F.col("id").alias("v"),
-    )
-    dim = spark.range(100).select(F.col("id").alias("k"), (F.col("id") * 2).alias("d"))
-
-    hot = detect_hot_keys(fact, "k", sample_fraction=0.5, hot_share=0.1)
-    assert hot == [7]
-
-    plain = fact.join(dim, "k").groupBy("k").agg(
-        F.count("*").alias("n"), F.sum("d").alias("s")
-    )
-    hybrid = hybrid_salted_join(fact, dim, "k", n_salt=8).groupBy("k").agg(
-        F.count("*").alias("n"), F.sum("d").alias("s")
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, hybrid.collect()))
-
-
-def test_hybrid_join_no_hot_keys_falls_back(spark):
-    from employee_activity_etl_poc_spark.operators.skew import hybrid_salted_join
-
-    fact = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
-    dim = spark.createDataFrame([(1, "X"), (2, "Y")], ["k", "d"])
-    out = hybrid_salted_join(fact, dim, "k", hot_keys=[])
-    assert sorted((r["k"], r["d"]) for r in out.collect()) == [(1, "X"), (2, "Y")]
-
-
 def test_salted_join_rejects_outer_variants(spark):
     import pytest
-    from employee_activity_etl_poc_spark.operators.skew import (
-        hybrid_salted_join,
-        salted_join,
-    )
+    from employee_activity_etl_poc_spark.operators.skew import salted_join
 
     fact = spark.createDataFrame([(1, "a")], ["k", "x"])
     dim = spark.createDataFrame([(1, "d"), (2, "unmatched")], ["k", "y"])
     for how in ("right", "full", "outer", "full_outer"):
         with pytest.raises(ValueError, match="inner"):
             salted_join(fact, dim, "k", how=how)
-        with pytest.raises(ValueError, match="inner"):
-            hybrid_salted_join(fact, dim, "k", hot_keys=[1], how=how)
     # the sound variants still work
     assert salted_join(fact, dim, "k", how="left").count() == 1
 

@@ -293,48 +293,6 @@ def test_stream_to_jdbc_foreach_batch(spark, tmp_path):
     assert sorted(r["id"] for r in got.collect()) == list(range(2, 10))
 
 
-def test_zorder_write_tightens_per_file_bounds(spark, tmp_path):
-    """Z-ordered files each cover a small rectangle of (a, b) space: the
-    mean per-file span shrinks on BOTH columns vs a single-column sort,
-    which only tightens its own column — the property parquet row-group
-    min/max pruning feeds on."""
-    from pyspark.sql import functions as F
-
-    from employee_activity_etl_poc_spark.sources.sinks import write_zordered
-
-    n = 4096
-    df = spark.range(n).select(
-        (F.col("id") % 64).alias("a"),
-        F.floor(F.col("id") / 64).alias("b"),  # uniform 64x64 grid
-    )
-
-    def mean_spans(path):
-        per_file = (
-            spark.read.parquet(path)
-            .groupBy(F.input_file_name().alias("f"))
-            .agg(
-                (F.max("a") - F.min("a")).alias("sa"),
-                (F.max("b") - F.min("b")).alias("sb"),
-            )
-            .agg(F.avg("sa"), F.avg("sb"))
-            .collect()[0]
-        )
-        return per_file[0] / 63.0, per_file[1] / 63.0
-
-    write_zordered(df, str(tmp_path / "z"), ["a", "b"], n_files=16)
-    za, zb = mean_spans(str(tmp_path / "z"))
-
-    # baseline: sorted by a only -> b spans ~the full range in every file
-    df.repartitionByRange(16, "a").sortWithinPartitions("a").write.parquet(
-        str(tmp_path / "s")
-    )
-    sa, sb = mean_spans(str(tmp_path / "s"))
-
-    assert sb > 0.9, f"single-col baseline should not prune b (got {sb})"
-    assert za < 0.6 and zb < 0.6, f"z-order spans too wide: a={za} b={zb}"
-    assert spark.read.parquet(str(tmp_path / "z")).count() == n
-
-
 def test_loader_normalizes_timestamps_to_ltz(spark, sf_dir):
     """Regression guard for the round-2 bench failure: driver testdata
     regenerations have flipped timestamp physical types (TIMESTAMP(NANOS)
@@ -353,60 +311,3 @@ def test_loader_normalizes_timestamps_to_ltz(spark, sf_dir):
             if dtype == "timestamp":
                 # must be consumable by the strictest LTZ-only function
                 df.select(F.unix_micros(F.col(col))).limit(1).collect()
-
-
-def _hilbert_xy2d(order: int, x: int, y: int) -> int:
-    """Reference implementation (classic iterative xy2d)."""
-    rx = ry = 0
-    d = 0
-    s = order // 2
-    while s > 0:
-        rx = 1 if (x & s) > 0 else 0
-        ry = 1 if (y & s) > 0 else 0
-        d += s * s * ((3 * rx) ^ ry)
-        if ry == 0:
-            if rx == 1:
-                x = s - 1 - x
-                y = s - 1 - y
-            x, y = y, x
-        s //= 2
-    return d
-
-
-def test_hilbert_value_matches_reference_and_clusters(spark, tmp_path):
-    """The unrolled column-expression Hilbert index equals the classic
-    xy2d for every cell of a 16x16 grid, and the clustered write tightens
-    per-file bounds at least as well as Morton on both columns."""
-    from pyspark.sql import functions as F
-
-    from employee_activity_etl_poc_spark.sources.sinks import (
-        hilbert_value,
-        write_hilbert_clustered,
-    )
-
-    grid = spark.createDataFrame(
-        [(x, y) for x in range(16) for y in range(16)], "a long, b long"
-    )
-    got = {
-        (r["a"], r["b"]): r["_h"]
-        for r in hilbert_value(grid, ["a", "b"], bits=4).collect()
-    }
-    for (x, y), h in got.items():
-        assert h == _hilbert_xy2d(16, x, y), (x, y, h)
-
-    big = spark.range(4096).select(
-        (F.col("id") % 64).alias("a"), F.floor(F.col("id") / 64).alias("b")
-    )
-    write_hilbert_clustered(big, str(tmp_path / "h"), ["a", "b"], n_files=16)
-
-    spans = (
-        spark.read.parquet(str(tmp_path / "h"))
-        .groupBy(F.input_file_name().alias("f"))
-        .agg(
-            (F.max("a") - F.min("a")).alias("sa"),
-            (F.max("b") - F.min("b")).alias("sb"),
-        )
-        .agg(F.avg("sa"), F.avg("sb"))
-        .collect()[0]
-    )
-    assert spans[0] / 63.0 < 0.6 and spans[1] / 63.0 < 0.6, spans

@@ -519,12 +519,12 @@ def test_session_window_agg_under_readstream(spark, tmp_path):
     }
 
 
-def test_streaming_progress_metrics(spark, activities, tmp_path):
-    from employee_activity_etl_poc_spark.streaming.metrics import (
-        progress_metrics,
-        throughput_summary,
-    )
+def _data_batches(progress):
+    """The micro-batches of a query's recent progress that read rows."""
+    return [p for p in progress if p.get("numInputRows")]
 
+
+def test_streaming_progress_metrics(spark, activities, tmp_path):
     src = tmp_path / "topic"
     sink = tmp_path / "bronze"
     ckpt = tmp_path / "ckpt"
@@ -539,16 +539,18 @@ def test_streaming_progress_metrics(spark, activities, tmp_path):
         q.awaitTermination(60)
     except Exception:
         pass
-    metrics = progress_metrics(q)
-    summary = throughput_summary(q)
+    progress = q.recentProgress
     run_to_completion(q)
 
-    assert summary["total_input_rows"] == activities.count()
-    assert summary["n_batches"] >= 1
-    data_batches = [m for m in metrics if m["num_input_rows"]]
-    assert data_batches and data_batches[0]["batch_duration_ms"] > 0
+    data_batches = _data_batches(progress)
+    assert sum(p["numInputRows"] for p in data_batches) == activities.count()
+    assert len(progress) >= 1
+    assert data_batches and data_batches[0]["durationMs"]["triggerExecution"] > 0
     # the dedup operator reports its state
-    assert summary["max_state_rows"] == activities.count()
+    assert max(
+        (p.get("stateOperators") or [{}])[0].get("numRowsTotal") or 0
+        for p in progress
+    ) == activities.count()
 
 
 def test_processing_time_trigger_multi_batch(spark, activities, tmp_path):
@@ -557,11 +559,6 @@ def test_processing_time_trigger_multi_batch(spark, activities, tmp_path):
     spark_consumer/spark_consumer.py:34-38, shrunk to 1 s), picks up data
     arriving between triggers, and stops cleanly with exactly-once output."""
     import time
-
-    from employee_activity_etl_poc_spark.streaming.metrics import (
-        progress_metrics,
-        throughput_summary,
-    )
 
     src = tmp_path / "topic"
     sink = tmp_path / "bronze"
@@ -585,7 +582,7 @@ def test_processing_time_trigger_multi_batch(spark, activities, tmp_path):
     def wait_rows(n, deadline_s=90):
         end = time.monotonic() + deadline_s
         while time.monotonic() < end:
-            if sum(m["num_input_rows"] for m in progress_metrics(q)) >= n:
+            if sum(p["numInputRows"] for p in _data_batches(q.recentProgress)) >= n:
                 return
             time.sleep(0.5)
         raise AssertionError(f"did not ingest {n} rows in {deadline_s}s")
@@ -598,160 +595,13 @@ def test_processing_time_trigger_multi_batch(spark, activities, tmp_path):
     finally:
         q.stop()
 
-    summary = throughput_summary(q)
-    assert summary["total_input_rows"] == 40
-    data_batches = [m for m in progress_metrics(q) if m["num_input_rows"]]
+    data_batches = _data_batches(q.recentProgress)
+    assert sum(p["numInputRows"] for p in data_batches) == 40
     assert len(data_batches) >= 2, "expected the two files in separate micro-batches"
 
     bronze = spark.read.parquet(str(sink))
     assert bronze.count() == 40
     assert bronze.select("activity_id").distinct().count() == 40
-
-
-def test_stream_stream_interval_join(spark, tmp_path):
-    """Two live file streams joined on key within a time bound: the inner
-    interval join emits exactly the batch join's rows (state bounded by
-    watermark + interval, append mode)."""
-    from employee_activity_etl_poc_spark.streaming.joins import stream_interval_join
-
-    clicks_dir = tmp_path / "clicks"
-    buys_dir = tmp_path / "buys"
-    sink = tmp_path / "joined"
-    ckpt = tmp_path / "ckpt"
-    clicks_dir.mkdir()
-    buys_dir.mkdir()
-
-    clicks = spark.createDataFrame(
-        [
-            (1, "2024-06-01 10:00:00", "c1"),
-            (2, "2024-06-01 10:05:00", "c2"),
-            (3, "2024-06-01 10:10:00", "c3"),  # never converts
-        ],
-        "user_id long, ts string, click_id string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    buys = spark.createDataFrame(
-        [
-            (1, "2024-06-01 10:20:00", "p1"),  # 20 min after click  -> match
-            (2, "2024-06-01 11:30:00", "p2"),  # 85 min after click  -> outside bound
-            (1, "2024-06-01 09:50:00", "p0"),  # BEFORE the click    -> no match
-        ],
-        "user_id long, ts string, purchase_id string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    clicks.coalesce(1).write.parquet(str(clicks_dir / "b0"))
-    buys.coalesce(1).write.parquet(str(buys_dir / "b0"))
-
-    c_stream = spark.readStream.schema(clicks.schema).parquet(str(clicks_dir / "*"))
-    b_stream = spark.readStream.schema(buys.schema).parquet(str(buys_dir / "*"))
-    joined = stream_interval_join(
-        c_stream, b_stream, key="user_id", left_ts="ts", right_ts="ts",
-        upper="1 hour", left_watermark="2 hours", right_watermark="2 hours",
-    )
-    q = (
-        joined.writeStream.format("parquet")
-        .outputMode("append")
-        .option("checkpointLocation", str(ckpt))
-        .option("path", str(sink))
-        .trigger(availableNow=True)
-        .start()
-    )
-    run_to_completion(q)
-
-    out = spark.read.parquet(str(sink))
-    got = {(r["click_id"], r["purchase_id"]) for r in out.collect()}
-    assert got == {("c1", "p1")}
-    # batch parity: the same operator on batch frames gives the same rows
-    batch = stream_interval_join(
-        clicks, buys, key="user_id", left_ts="ts", right_ts="ts", upper="1 hour"
-    )
-    assert {(r["click_id"], r["purchase_id"]) for r in batch.collect()} == got
-
-
-def test_stream_stream_interval_join_left_outer(spark, tmp_path):
-    """leftOuter: the never-converted click emits with null purchase once
-    the right watermark proves no partner can arrive (advanced by a
-    far-future sentinel purchase in a second batch)."""
-    from employee_activity_etl_poc_spark.streaming.joins import stream_interval_join
-
-    clicks_dir = tmp_path / "clicks"
-    buys_dir = tmp_path / "buys"
-    sink = tmp_path / "joined"
-    ckpt = tmp_path / "ckpt"
-    clicks_dir.mkdir()
-    buys_dir.mkdir()
-
-    # Stream-stream join state stores scale with shuffle partitions (2
-    # stores x partitions x batch); 3 rows don't need 32 of them.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-
-    clicks = spark.createDataFrame(
-        [(1, "2024-06-01 10:00:00", "c1"), (3, "2024-06-01 10:10:00", "c3")],
-        "user_id long, ts string, click_id string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    buys = spark.createDataFrame(
-        [(1, "2024-06-01 10:20:00", "p1")],
-        "user_id long, ts string, purchase_id string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    clicks.coalesce(1).write.parquet(str(clicks_dir / "b0"))
-    buys.coalesce(1).write.parquet(str(buys_dir / "b0"))
-
-    def run_once():
-        # maxFilesPerTrigger=1 chunks each availableNow run into per-file
-        # micro-batches, so a watermark advanced by one batch can evict +
-        # emit in the NEXT batch of the same run (no extra run needed).
-        c_stream = (
-            spark.readStream.schema(clicks.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(clicks_dir / "*"))
-        )
-        b_stream = (
-            spark.readStream.schema(buys.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(buys_dir / "*"))
-        )
-        joined = stream_interval_join(
-            c_stream, b_stream, key="user_id", left_ts="ts", right_ts="ts",
-            upper="1 hour", left_watermark="10 minutes", right_watermark="10 minutes",
-            how="leftOuter",
-        )
-        q = (
-            joined.writeStream.format("parquet")
-            .outputMode("append")
-            .option("checkpointLocation", str(ckpt))
-            .option("path", str(sink))
-            .trigger(availableNow=True)
-            .start()
-        )
-        run_to_completion(q)
-
-    try:
-        run_once()
-        # Sentinels on BOTH sides (the join watermark is the MIN across
-        # inputs — a stalled side pins it and nothing ever evicts), twice:
-        # a watermark computed from batch N's data only gates eviction
-        # from batch N+1 on, so the first pair advances it and the second
-        # pair lands in later micro-batches that evict + emit.
-        for i, day in enumerate(("2024-06-02", "2024-06-03")):
-            spark.createDataFrame(
-                [(99, f"{day} 00:00:00", f"pz{i}")],
-                "user_id long, ts string, purchase_id string",
-            ).withColumn("ts", F.col("ts").cast("timestamp")).coalesce(1).write.parquet(
-                str(buys_dir / f"b{i + 1}")
-            )
-            spark.createDataFrame(
-                [(98, f"{day} 00:00:00", f"cz{i}")],
-                "user_id long, ts string, click_id string",
-            ).withColumn("ts", F.col("ts").cast("timestamp")).coalesce(1).write.parquet(
-                str(clicks_dir / f"b{i + 1}")
-            )
-        run_once()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-    out = spark.read.parquet(str(sink))
-    got = {(r["click_id"], r["purchase_id"]) for r in out.collect()}
-    assert ("c1", "p1") in got
-    assert ("c3", None) in got, f"unconverted click not emitted: {got}"
 
 
 def test_dedup_within_watermark_collapses_restamped_resends(spark, tmp_path):

@@ -520,7 +520,7 @@ def test_classifier_model_store_roundtrip_and_guards(spark, tmp_path):
     import pytest as _pytest
 
     from employee_activity_etl_poc_spark.operators.model_store import (
-        load_classifier,
+        load_classifier_artifact,
         save_classifier,
     )
 
@@ -533,7 +533,8 @@ def test_classifier_model_store_roundtrip_and_guards(spark, tmp_path):
     assert len(model["w6"]) == 1024 and isinstance(model["b6"], int)
     path = str(tmp_path / "qc_model")
     save_classifier(spark, path, model["w6"], model["b6"])
-    w6, b6 = load_classifier(spark, path)
+    art = load_classifier_artifact(spark, path)
+    w6, b6 = art["w6"], art["b6"]
     assert w6 == model["w6"] and b6 == model["b6"]  # bit-exact ints
     scored = TX.score_quality_classifier(
         docs, "text", "doc_id", label=F.col("y") == 1, w6=w6, b6=b6
@@ -543,7 +544,7 @@ def test_classifier_model_store_roundtrip_and_guards(spark, tmp_path):
     bad = str(tmp_path / "not_a_model")
     spark.range(3).selectExpr("id AS b", "id AS w6").write.parquet(bad)
     with _pytest.raises(ValueError, match="sentinel"):
-        load_classifier(spark, bad)
+        load_classifier_artifact(spark, bad)
     # truncated artifact (weight rows missing) rejected
     trunc = str(tmp_path / "truncated")
     from employee_activity_etl_poc_spark.localrel import local_df
@@ -552,7 +553,7 @@ def test_classifier_model_store_roundtrip_and_guards(spark, tmp_path):
         spark, [(-2, 1024), (-1, 0), (0, 5)], "b long, w6 long"
     ).write.parquet(trunc)
     with _pytest.raises(ValueError, match="truncated"):
-        load_classifier(spark, trunc)
+        load_classifier_artifact(spark, trunc)
 
 
 def _py_bpe(texts: list[str], n_merges: int) -> list[tuple]:
@@ -766,7 +767,7 @@ def test_blocklist_filter_c4_policy_and_boundary(spark):
 
 def test_tokenizer_store_roundtrip_and_guards(spark, tmp_path):
     from employee_activity_etl_poc_spark.operators.model_store import (
-        load_tokenizer,
+        load_tokenizer_artifact,
         save_tokenizer,
     )
 
@@ -776,7 +777,7 @@ def test_tokenizer_store_roundtrip_and_guards(spark, tmp_path):
     ]
     path = str(tmp_path / "tok")
     save_tokenizer(spark, path, merges)
-    assert load_tokenizer(spark, path) == merges
+    assert load_tokenizer_artifact(spark, path)["merges"] == merges
     # truncated artifact (sentinel claims 2, only rank 1 present) rejected
     import pytest as _pytest
 
@@ -789,7 +790,7 @@ def test_tokenizer_store_roundtrip_and_guards(spark, tmp_path):
         "rank int, lhs string, rhs string, merged string, pair_count long",
     ).write.mode("overwrite").parquet(bad)
     with _pytest.raises(ValueError, match="truncated"):
-        load_tokenizer(spark, bad)
+        load_tokenizer_artifact(spark, bad)
     # foreign artifact (merged != lhs+rhs) rejected
     worse = str(tmp_path / "tok_foreign")
     local_df(
@@ -798,7 +799,7 @@ def test_tokenizer_store_roundtrip_and_guards(spark, tmp_path):
         "rank int, lhs string, rhs string, merged string, pair_count long",
     ).write.mode("overwrite").parquet(worse)
     with _pytest.raises(ValueError, match="foreign"):
-        load_tokenizer(spark, worse)
+        load_tokenizer_artifact(spark, worse)
     # not-an-artifact rejected
     empty = str(tmp_path / "tok_empty")
     local_df(
@@ -806,7 +807,7 @@ def test_tokenizer_store_roundtrip_and_guards(spark, tmp_path):
         "rank int, lhs string, rhs string, merged string, pair_count long",
     ).write.mode("overwrite").parquet(empty)
     with _pytest.raises(ValueError, match="sentinel"):
-        load_tokenizer(spark, empty)
+        load_tokenizer_artifact(spark, empty)
 
 
 def test_bpe_vocab_size_curve_monotone_compression(spark):
