@@ -475,7 +475,6 @@ def minhash_near_duplicates(
     bands: int = 4,
     shingle_k: int = 3,
     threshold: float = 0.5,
-    persist: bool = True,
     max_bucket_size: int | None = None,
     max_doc_frequency: int | None = None,
 ) -> DataFrame:
@@ -484,8 +483,8 @@ def minhash_near_duplicates(
     Pipeline: shingle -> signature -> band explode -> equi-join on
     (band, key) -> verify true Jaccard >= threshold. The shingle frame is
     referenced four times (both join sides + both verify sides), so it is
-    persisted by default — one tokenize+md5 pass instead of four; pass
-    ``persist=False`` if the caller manages its own checkpoint/persist.
+    persisted — one tokenize+md5 pass instead of four. The cache backs
+    the returned lazy frame; the caller owns its release.
 
     ``max_doc_frequency``: drop shingles occurring in MORE than this many
     documents before signing — document-frequency pruning, the standard
@@ -499,17 +498,12 @@ def minhash_near_duplicates(
     the signatures AND the verify Jaccard use the pruned sets, i.e.
     similarity is measured over content, not chrome.
     """
-    hashed, banded = lsh_banded_frame(
-        df,
-        text_col,
-        id_col,
-        num_perm=num_perm,
-        bands=bands,
-        shingle_k=shingle_k,
-        persist=persist,
-        max_bucket_size=max_bucket_size,
-        max_doc_frequency=max_doc_frequency,
+    hashed = _shingle_hashes(df, text_col, id_col, shingle_k)
+    hashed = (
+        hashed.persist() if max_doc_frequency is None
+        else _pruned(hashed, max_doc_frequency)
     )
+    banded = _signed_bands(hashed, num_perm, bands, max_bucket_size)
     pairs = (
         banded.alias("a")
         .join(
@@ -524,56 +518,49 @@ def minhash_near_duplicates(
     return _verified(pairs, hashed, hashed, "doc_a", "doc_b", threshold)
 
 
-def lsh_banded_frame(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_perm: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
-    persist: bool = True,
+def _pruned(hashed: DataFrame, max_doc_frequency: int) -> DataFrame:
+    """(doc, hs) with every shingle held by more than
+    ``max_doc_frequency`` documents dropped, returned persisted and
+    materialized; the caller owns its release."""
+    # hs is already per-doc distinct, so count(*) per hash == document
+    # frequency. The anti-join keeps everything NOT in the frequent
+    # set; broadcast is safe because shingles shared by > cap docs are
+    # rare kinds even when their occurrences are not. Persist the
+    # pre-prune frame: the DF aggregate AND the prune join both read
+    # it — one tokenize+md5 pass, not two.
+    pre_prune = hashed.persist()
+    exploded = pre_prune.select("doc", F.explode("hs").alias("h"))
+    frequent = (
+        exploded.groupBy("h")
+        .agg(F.count("*").alias("df"))
+        .where(F.col("df") > max_doc_frequency)
+        .select("h")
+    )
+    pruned = (
+        exploded.join(F.broadcast(frequent), "h", "left_anti")
+        .groupBy("doc")
+        .agg(F.collect_list("h").alias("hs"))
+        .persist()
+    )
+    # Materialize the pruned frame, then release the pre-prune cache —
+    # otherwise every call (e.g. per micro-batch) leaks one cached copy
+    # of the un-pruned shingle frame in executor storage.
+    pruned.count()
+    pre_prune.unpersist()
+    return pruned
+
+
+def _signed_bands(
+    hashed: DataFrame,
+    num_perm: int,
+    bands: int,
     max_bucket_size: int | None = None,
-    max_doc_frequency: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """The candidate-generation half of :func:`minhash_near_duplicates`:
-    ``(hashed, banded)`` where ``hashed`` is (doc, hs: array<long>) and
-    ``banded`` is (doc, band, key) — the frame whose (band, key)
-    self-equi-join produces LSH candidate pairs. Public so skew
-    monitoring (:func:`lsh_bucket_stats`) and the adversarial-corpus
-    stress tests measure EXACTLY the candidate space the dedup join
-    pays for, not a reimplementation of it."""
-    # signatures, band keys and the verify Jaccard all derive from this
-    # one frame, so it is the frame the persist below caches
-    hashed = _shingle_hashes(df, text_col, id_col, shingle_k)
-    if max_doc_frequency is not None:
-        # hs is already per-doc distinct, so count(*) per hash == document
-        # frequency. The anti-join keeps everything NOT in the frequent
-        # set; broadcast is safe because shingles shared by > cap docs are
-        # rare kinds even when their occurrences are not. Persist the
-        # pre-prune frame: the DF aggregate AND the prune join both read
-        # it — one tokenize+md5 pass, not two.
-        pre_prune = hashed.persist() if persist else hashed
-        exploded = pre_prune.select("doc", F.explode("hs").alias("h"))
-        frequent = (
-            exploded.groupBy("h")
-            .agg(F.count("*").alias("df"))
-            .where(F.col("df") > max_doc_frequency)
-            .select("h")
-        )
-        hashed = (
-            exploded.join(F.broadcast(frequent), "h", "left_anti")
-            .groupBy("doc")
-            .agg(F.collect_list("h").alias("hs"))
-        )
-        if persist:
-            # Materialize the pruned frame, then release the pre-prune
-            # cache — otherwise every call (e.g. per micro-batch) leaks one
-            # cached copy of the un-pruned shingle frame in executor storage.
-            hashed = hashed.persist()
-            hashed.count()
-            pre_prune.unpersist()
-    elif persist:
-        hashed = hashed.persist()
+) -> DataFrame:
+    """(doc, hs) → (doc, band, key): sign each document and explode its
+    band keys — the frame whose (band, key) self-equi-join produces LSH
+    candidate pairs. The dedup joins and the skew monitor
+    (:func:`lsh_bucket_stats`) all read it, so the monitor measures
+    EXACTLY the candidate space the dedup join pays for."""
     sigs = hashed.select(
         "doc", minhash_from_hashes(F.col("hs"), num_perm).alias("sig")
     )
@@ -592,7 +579,7 @@ def lsh_banded_frame(
             .where(F.col("_bn") <= max_bucket_size)
             .drop("_bn")
         )
-    return hashed, banded
+    return banded
 
 
 def lsh_bucket_stats(
@@ -604,7 +591,6 @@ def lsh_bucket_stats(
     shingle_k: int = 3,
     max_bucket_size: int | None = None,
     max_doc_frequency: int | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """Skew monitor for the LSH candidate space: one row —
     (n_docs, n_buckets, max_bucket, candidate_pairs) — where
@@ -617,36 +603,26 @@ def lsh_bucket_stats(
     ``max_bucket_size``) can be evaluated against the real corpus by
     re-running the monitor, not the join.
 
-    With the default ``persist=True`` the monitor runs EAGERLY: the
-    banded frame is materialized once (DISK_ONLY — narrow (doc, band,
-    key) rows), both aggregates read the cache, the single result row
-    is collected, and EVERY internal cache is unpersisted before
-    returning a local-relation DataFrame. Eager-and-released is the
-    right contract for a pre-flight run once per ingest epoch: the
-    lazy form either re-derived shingles → md5 → minhash per aggregate
-    branch (~8 signature passes for the two-mode gated query, 130 s at
-    50k docs) or — persisted without an ownership handle — leaked one
-    cache registration per monitor run into long-lived sessions.
-    ``persist=False`` keeps the plan fully lazy and cache-free (plan
-    inspection; callers composing their own lifecycle)."""
+    The monitor runs EAGERLY: the banded frame is materialized once
+    (DISK_ONLY — narrow (doc, band, key) rows), both aggregates read the
+    cache, the single result row is collected, and EVERY internal cache
+    is unpersisted before returning a local-relation DataFrame.
+    Eager-and-released is the right contract for a pre-flight run once
+    per ingest epoch: the lazy form either re-derived shingles → md5 →
+    minhash per aggregate branch (~8 signature passes for the two-mode
+    gated query, 130 s at 50k docs) or — persisted without an ownership
+    handle — leaked one cache registration per monitor run into
+    long-lived sessions."""
     # the un-pruned mode reads the signature frame exactly once (banded
-    # derives from it linearly), so no internal persist is requested —
-    # a cache there would be write-only. The DF-pruned mode reads it
-    # twice inside the prune (frequency aggregate + anti-join probe),
-    # and lsh_banded_frame manages that lifecycle itself.
-    hashed, banded = lsh_banded_frame(
-        df,
-        text_col,
-        id_col,
-        num_perm=num_perm,
-        bands=bands,
-        shingle_k=shingle_k,
-        persist=persist and max_doc_frequency is not None,
-        max_bucket_size=max_bucket_size,
-        max_doc_frequency=max_doc_frequency,
+    # derives from it linearly), so it is not persisted — a cache there
+    # would be write-only. The DF-pruned mode reads it twice inside the
+    # prune (frequency aggregate + anti-join probe), which _pruned caches.
+    hashed = _shingle_hashes(df, text_col, id_col, shingle_k)
+    if max_doc_frequency is not None:
+        hashed = _pruned(hashed, max_doc_frequency)
+    banded = _signed_bands(hashed, num_perm, bands, max_bucket_size).persist(
+        StorageLevel.DISK_ONLY
     )
-    if persist:
-        banded = banded.persist(StorageLevel.DISK_ONLY)
     buckets = banded.groupBy("band", "key").agg(F.count("*").alias("n_b"))
     out = buckets.agg(
         F.count("*").alias("n_buckets"),
@@ -657,8 +633,6 @@ def lsh_bucket_stats(
     ).crossJoin(
         F.broadcast(banded.agg(F.count_distinct("doc").alias("n_docs")))
     ).select("n_docs", "n_buckets", "max_bucket", "candidate_pairs")
-    if not persist:
-        return out
     # try/finally: a failed collect must not leak the DISK_ONLY caches
     # into the long-lived session (r7 advice) — unpersist is idempotent
     # and lazy, so releasing on the error path costs nothing.
@@ -681,7 +655,6 @@ def lsh_bucket_stats_sampled(
     shingle_k: int = 3,
     sample_mod: int = 4,
     max_doc_frequency: int | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """Sampled form of :func:`lsh_bucket_stats` — the monitor is a
     PRE-FLIGHT, so it can run on a deterministic 1/``sample_mod`` md5
@@ -724,7 +697,7 @@ def lsh_bucket_stats_sampled(
     stats = lsh_bucket_stats(
         sampled, text_col, id_col,
         num_perm=num_perm, bands=bands, shingle_k=shingle_k,
-        max_doc_frequency=max_doc_frequency, persist=persist,
+        max_doc_frequency=max_doc_frequency,
     )
     m = F.lit(int(sample_mod)).cast("long")
     return stats.select(
@@ -813,7 +786,6 @@ def minhash_cross_pairs(
     bands: int = 4,
     shingle_k: int = 3,
     threshold: float = 0.5,
-    persist: bool = True,
 ) -> DataFrame:
     """STRICTLY BIPARTITE near-dup pairs: left × right only — no
     left×left or right×right candidates are ever generated, unlike
@@ -834,29 +806,13 @@ def minhash_cross_pairs(
 
     Output: (left_id, right_id, jaccard) with jaccard >= threshold.
 
-    CACHE OWNERSHIP (r7 advice): with the default ``persist=True`` this
-    function registers FOUR internal caches (hashed+banded per side)
-    that back the returned LAZY frame — the caller owns their release
-    (``spark.catalog.clearCache()`` after consuming the result, or a
-    targeted unpersist of the session's cached frames). One-shot gated
-    runs under bench.py's per-query ``clearCache()`` hygiene are
-    covered; REPEATED or streaming call sites must pass
-    ``persist=False`` (each side's text is then hashed twice — once for
-    banding, once for the verify join — the right trade when the
-    alternative is unbounded cache registrations per micro-batch,
-    exactly the leak class fixed in lsh_bucket_stats/llm_pipeline).
-    ENFORCED, not just documented: tests/test_cache_ownership.py lints
-    every call site by ast — repeated/streaming contexts must pass
-    ``persist=False``; one-shot default-persist sites must be on its
-    allowlist (r8 judge ask #8)."""
-    hashed_l, banded_l = lsh_banded_frame(
-        left, text_col, id_col, num_perm=num_perm, bands=bands,
-        shingle_k=shingle_k, persist=persist,
-    )
-    hashed_r, banded_r = lsh_banded_frame(
-        right, text_col, id_col, num_perm=num_perm, bands=bands,
-        shingle_k=shingle_k, persist=persist,
-    )
+    The two shingle frames are persisted (each is read by banding and
+    by the verify join); the caches back the returned lazy frame and
+    the caller owns their release."""
+    hashed_l = _shingle_hashes(left, text_col, id_col, shingle_k).persist()
+    banded_l = _signed_bands(hashed_l, num_perm, bands)
+    hashed_r = _shingle_hashes(right, text_col, id_col, shingle_k).persist()
+    banded_r = _signed_bands(hashed_r, num_perm, bands)
     pairs = (
         banded_l.alias("a")
         .join(
@@ -1388,7 +1344,6 @@ def prefix_jaccard_pairs(
     threshold: float,
     shingle_k: int = 3,
     max_shingle_frequency: int | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """EXACT all-pairs shingle Jaccard ≥ ``threshold`` with NO blocking
     clause — prefix filtering (AllPairs, Bayardo/Ma/Srikant WWW 2007;
@@ -1448,14 +1403,14 @@ def prefix_jaccard_pairs(
 
     The shingle frame is referenced three times (explode + both verify
     sides) and the prefix frame twice (both join sides), so both are
-    persisted by default — at ``DISK_ONLY``: these are the plan's two
+    persisted — at ``DISK_ONLY``: these are the plan's two
     bulkiest frames (per-doc k-gram arrays; the prefix fan-out), and
     keeping them on-heap alongside the join stages' sort buffers is a
     memory multiplier that OOM'd a 500k-doc fixture on an 8 GiB heap,
     while columnar batches re-read from local disk (page-cache-warm)
     cost ~nothing next to the join work (measured 500k docs: heap
-    cache OOM, no cache 140 s, DISK_ONLY 57 s cold / 6 s warm). Pass
-    ``persist=False`` if the caller manages its own lifecycle.
+    cache OOM, no cache 140 s, DISK_ONLY 57 s cold / 6 s warm). The
+    caches back the returned lazy frame; the caller owns their release.
 
     Reference parity: the reference dedups with pandas
     ``drop_duplicates`` (bronze/test7.py:31); this whole family is the
@@ -1464,21 +1419,18 @@ def prefix_jaccard_pairs(
         F.col(id_col).alias("doc"),
         shingles(F.col(text_col), shingle_k).alias("sh"),
     ).where(F.size(tokens(F.col(text_col))) >= shingle_k)
-    base = base.withColumn("sz", F.size("sh"))
-    if persist:
-        # DISK_ONLY, not the on-heap default: the shingle arrays are
-        # the operator's bulkiest payload (|docs| × k-gram strings),
-        # and holding them on-heap next to 32 concurrent sort-buffer
-        # tasks OOM'd the sf10 fixture (500k docs / 8g heap), while
-        # local disk reads of columnar batches land in page cache —
-        # measured sf10: heap-cache OOM, no cache 140 s, DISK_ONLY
-        # 57 s cold / 6 s warm. The persist stays LAZY: with every
-        # join merge/shuffle_hash-hinted there are no broadcast-build
-        # jobs racing the cache at t=0, and block-level get-or-compute
-        # locking makes the one action materialize each partition
-        # exactly once — no count() job at plan-BUILD time, so plan
-        # inspection (tools/plan_audit.py) stays compile-only.
-        base = base.persist(StorageLevel.DISK_ONLY)
+    # DISK_ONLY, not the on-heap default: the shingle arrays are the
+    # operator's bulkiest payload (|docs| × k-gram strings), and holding
+    # them on-heap next to 32 concurrent sort-buffer tasks OOM'd the sf10
+    # fixture (500k docs / 8g heap), while local disk reads of columnar
+    # batches land in page cache — measured sf10: heap-cache OOM, no
+    # cache 140 s, DISK_ONLY 57 s cold / 6 s warm. The persist stays
+    # LAZY: with every join merge/shuffle_hash-hinted there are no
+    # broadcast-build jobs racing the cache at t=0, and block-level
+    # get-or-compute locking makes the one action materialize each
+    # partition exactly once — no count() job at plan-BUILD time, so
+    # plan inspection (tools/plan_audit.py) stays compile-only.
+    base = base.withColumn("sz", F.size("sh")).persist(StorageLevel.DISK_ONLY)
     ex = base.select("doc", "sz", F.explode("sh").alias("g"))
     freq = ex.groupBy("g").agg(F.count("*").alias("gf"))
     plen = (F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1).cast("int")
@@ -1520,11 +1472,10 @@ def prefix_jaccard_pairs(
     )
     if max_shingle_frequency is not None:
         pref = pref.where(F.col("gf") <= max_shingle_frequency)
-    if persist:
-        # the self-join's two sides both read pref; DISK_ONLY for the
-        # same heap reason — pref is the widest frame of the plan
-        # (~0.6·|sh| rows per doc). Lazy, like base.
-        pref = pref.persist(StorageLevel.DISK_ONLY)
+    # the self-join's two sides both read pref; DISK_ONLY for the same
+    # heap reason — pref is the widest frame of the plan (~0.6·|sh| rows
+    # per doc). Lazy, like base.
+    pref = pref.persist(StorageLevel.DISK_ONLY)
     a, b = pref.alias("a"), pref.alias("b")
     # positional overlap upper bound for this match row (1-indexed pos)
     ubound = F.lit(1) + F.least(
@@ -1957,7 +1908,6 @@ def duplicated_token_spans(
     id_col: str,
     k: int = 8,
     min_occurrences: int = 2,
-    persist: bool = True,
 ) -> DataFrame:
     """Exact substring-duplication detection — the span-level dedup of
     Lee et al. 2022 ("Deduplicating Training Data Makes Language Models
@@ -1984,18 +1934,17 @@ def duplicated_token_spans(
     construction (the guarded sequence). Gram fingerprints are 60-bit
     (:func:`_hash_long60`) — corpus-wide frequency counting in a 32-bit
     space would birthday-collide around ~65k distinct grams and report
-    unique text as duplicated."""
-    grams = _positioned_grams(_tokenized(df, text_col, id_col), k)
-    if persist:
-        # the gram frame feeds BOTH the frequency aggregate and the
-        # semi-join probe; without a cache each side re-pays the
-        # operator's real CPU cost — materializing every k-gram string
-        # and md5-fingerprinting ~|tokens| grams per doc. DISK_ONLY:
-        # narrow (doc, pos, g) rows, and the span family's frames must
-        # not occupy heap next to the window stages (same posture as
-        # prefix_jaccard_pairs). Pass persist=False for caller-managed
-        # lifecycles (the streaming pipeline's per-batch calls).
-        grams = grams.persist(StorageLevel.DISK_ONLY)
+    unique text as duplicated. The gram frame is persisted; the cache
+    backs the returned lazy frame and the caller owns its release."""
+    # the gram frame feeds BOTH the frequency aggregate and the semi-join
+    # probe; without a cache each side re-pays the operator's real CPU
+    # cost — materializing every k-gram string and md5-fingerprinting
+    # ~|tokens| grams per doc. DISK_ONLY: narrow (doc, pos, g) rows, and
+    # the span family's frames must not occupy heap next to the window
+    # stages (same posture as prefix_jaccard_pairs).
+    grams = _positioned_grams(_tokenized(df, text_col, id_col), k).persist(
+        StorageLevel.DISK_ONLY
+    )
     dup = (
         grams.groupBy("g")
         .agg(F.count("*").alias("_n"))
@@ -2086,7 +2035,6 @@ def remove_duplicated_spans(
     id_col: str,
     k: int = 8,
     min_occurrences: int = 2,
-    persist: bool = True,
 ) -> DataFrame:
     """The APPLY step of span-level dedup (Lee et al. 2022): rewrite the
     corpus keeping exactly ONE canonical occurrence of each duplicated
@@ -2104,12 +2052,12 @@ def remove_duplicated_spans(
     length. Content identity is md5 over the span's token slice, so two
     occurrences match iff their text matches exactly — the same
     contract the detector's k-gram fingerprints guarantee for spans
-    ≥ k."""
+    ≥ k. The detector's gram frame and the removal frame are persisted;
+    the caller owns their release."""
     from pyspark.sql import Window
 
     spans = duplicated_token_spans(
-        df, text_col, id_col, k=k, min_occurrences=min_occurrences,
-        persist=persist,
+        df, text_col, id_col, k=k, min_occurrences=min_occurrences
     )
     base = _tokenized(df, text_col, id_col)
     located = spans.join(
@@ -2132,7 +2080,9 @@ def remove_duplicated_spans(
         .where(F.col("_rk") > 1)  # rank 1 = the canonical keeper, stays
         .select("doc_id", "span_start", "span_end")
     )
-    return _apply_span_removals(df, text_col, id_col, base, removals, persist)
+    return _apply_span_removals(
+        df, text_col, id_col, base, removals, persist=True
+    )
 
 
 def remove_duplicated_spans_incremental(

@@ -1,19 +1,16 @@
 """Skew mitigation — salting rewrites for hot keys (SCALE.md).
 
-AQE's skew-join handling covers sort-merge joins at runtime; these are the
-*structural* rewrites for the two places AQE can't help:
+AQE's skew-join handling covers sort-merge joins at runtime; this is the
+*structural* rewrite for the place AQE can't help: a reduce-side
+aggregation where one group receives a disproportionate share of rows
+(map-side partial aggregation already bounds this for algebraic
+aggregates — the salted two-stage form is for high-cardinality payload
+aggs like ``collect_list``/exact distinct, or engines/paths where
+partials are unavailable).
 
-- a reduce-side aggregation where one group receives a disproportionate
-  share of rows (map-side partial aggregation already bounds this for
-  algebraic aggregates — the salted two-stage form is for high-cardinality
-  payload aggs like ``collect_list``/exact distinct, or engines/paths where
-  partials are unavailable);
-- a shuffle join against a dim too big to broadcast whose fact side has
-  hot keys: replicate the dim ``n_salt``× and scatter the fact rows.
-
-Both rewrites are RESULT-IDENTICAL to their plain forms (the salted agg is
-oracle-checked against the unsalted SQL in the registry) — salt only
-redistributes rows, never changes semantics.
+The rewrite is RESULT-IDENTICAL to its plain form (it is oracle-checked
+against the unsalted SQL in the registry) — salt only redistributes rows,
+never changes semantics.
 """
 
 from __future__ import annotations
@@ -75,37 +72,3 @@ def salted_agg(
     stage1 = salted.groupBy(*keys, _SALT).agg(*partials)
     return stage1.groupBy(*keys).agg(*finals)
 
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    n_salt: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-resistant equi-join for non-broadcastable dims: the dim is
-    replicated ``n_salt``× (explode over salt ids), fact rows get a random
-    salt, and the join key becomes (key, salt) — a hot fact key now lands
-    on ``n_salt`` reducers instead of one.
-
-    Cost: dim shuffle volume × n_salt — use only when a specific fact key
-    is hot enough to stall the stage (and prefer ``broadcast`` whenever the
-    dim fits).
-
-    Only ``inner``/``left`` are sound: the dim is replicated ``n_salt``×,
-    so a right/full join would emit each UNMATCHED dim row once per salt
-    replica (n_salt null-padded copies). Guarded rather than silently
-    wrong."""
-    if how not in ("inner", "left", "left_outer", "leftouter"):
-        raise ValueError(
-            f"salted_join supports how='inner'/'left' only (got {how!r}): "
-            "the replicated dim would duplicate unmatched dim rows under "
-            "right/full joins"
-        )
-    salted_fact = fact.withColumn(
-        _SALT, F.pmod(F.hash(F.monotonically_increasing_id()), F.lit(n_salt))
-    )
-    replicated_dim = dim.withColumn(
-        _SALT, F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-    )
-    return salted_fact.join(replicated_dim, [key, _SALT], how).drop(_SALT)

@@ -1212,7 +1212,6 @@ def quality_classifier(
     n_buckets: int = 1024,
     iters: int = 3,
     lr: float = 10.0,
-    persist: bool | str = True,
     model_out: dict | None = None,
 ):
     """CCNet/fastText-style supervised linear quality classifier,
@@ -1251,25 +1250,20 @@ def quality_classifier(
     Returns (id, label, n_feats, score, pred); ``model_out`` (a dict,
     optional) receives the exact trained weights {w6, b6, n_buckets}
     for artifact persistence (:mod:`..operators.model_store`).
-    ``persist=True`` (default) caches the feature frames for the FIT
-    ONLY and unpersists them before returning — the returned scoring
-    plan recomputes the feature pass once, and nothing cache-resident
-    outlives the call (r11 advice #3: the old contract left two
-    session-lifetime MEMORY_AND_DISK entries per fixture — large at
-    sf1+ — relying on LRU eviction). ``persist="train"`` is the same
-    contract (kept for callers). ``persist=False`` skips caching
-    entirely — each training iteration recomputes features (a caller
-    managing its own checkpoint, the remove_duplicated_spans
-    contract). Weights are NOT regularized —
+    The feature frames are cached for the FIT ONLY and unpersisted
+    before returning — the returned scoring plan recomputes the feature
+    pass once, and nothing cache-resident outlives the call (r11 advice
+    #3: the old contract left two session-lifetime MEMORY_AND_DISK
+    entries per fixture — large at sf1+ — relying on LRU eviction).
+    Weights are NOT regularized —
     ``iters`` is small and features are L1-normalized; callers
     selecting a corpus should threshold ``score`` (CCNet keeps the
     head/middle of the score distribution)."""
     import math
 
     x, y = _classifier_feature_frame(df, text_col, id_col, label, n_buckets)
-    if persist:
-        x = x.persist()
-        y = y.persist()
+    x = x.persist()
+    y = y.persist()
     n_docs = y.count()
     # sentinel feature rides the gradient pass only: its grid term
     # floor(r6·1e6/1e6 + 0.5) = r6 exactly, so bucket -1 accumulates
@@ -1314,13 +1308,12 @@ def quality_classifier(
         model_out["w6"] = list(w6)
         model_out["b6"] = int(b6)
         model_out["n_buckets"] = int(n_buckets)
-    if persist:
-        # cache carried the fit only: drop it now — the returned scoring
-        # plan recomputes the feature pass once. Keeping the cache for
-        # the returned plan would trade one feature pass for a
-        # session-lifetime cache entry per call (r11 advice #3).
-        x.unpersist()
-        y.unpersist()
+    # cache carried the fit only: drop it now — the returned scoring plan
+    # recomputes the feature pass once. Keeping the cache for the
+    # returned plan would trade one feature pass for a session-lifetime
+    # cache entry per call (r11 advice #3).
+    x.unpersist()
+    y.unpersist()
     return _classifier_score_frame(x, y, id_col, w6, b6)
 
 

@@ -815,6 +815,22 @@ def events_bloom_pruned_building(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _session_scratch(name: str, sf_dir: str) -> str:
+    """Per-sf scratch directory inside the Spark session's own root
+    (``SparkFiles.getRootDirectory()``, deleted at session stop), rebuilt
+    by each run: repeated invocations (bench loops, oracle sweeps) reuse
+    ONE directory instead of leaking a fresh mkdtemp per call, and two
+    concurrent sessions at the same sf never delete each other's table."""
+    import os
+
+    from pyspark import SparkFiles
+
+    return os.path.join(
+        SparkFiles.getRootDirectory(),
+        f"{name}_{os.path.basename(sf_dir.rstrip('/'))}",
+    )
+
+
 @register(
     "delta_roundtrip_stats",
     """
@@ -844,21 +860,13 @@ def events_bloom_pruned_building(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def delta_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
-    import os
 
     from ..sources.deltalog import read_delta_pylog, write_delta_pylog
 
     ev = load(spark, sf_dir, "events").select(
         "event_id", "event_type", F.round("value", 4).alias("v")
     )
-    # fixed per-sf scratch path, rebuilt each run: repeated invocations
-    # (bench loops, oracle sweeps) reuse ONE directory instead of
-    # leaking a fresh mkdtemp per call
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_delta_rt_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    path = _session_scratch("delta_rt", sf_dir)
     shutil.rmtree(path, ignore_errors=True)
     write_delta_pylog(ev.where(F.col("event_id") % 2 == 0), path)
     write_delta_pylog(ev.where(F.col("event_id") % 2 == 1), path)
@@ -901,14 +909,10 @@ def delta_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
-    import tempfile
 
     from ..sources.deltalog import read_delta_pylog, streaming_delta_sink
 
-    scratch = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_stream_gate_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    scratch = _session_scratch("stream_gate", sf_dir)
     shutil.rmtree(scratch, ignore_errors=True)
     table = os.path.join(scratch, "table")
     ckpt = os.path.join(scratch, "ckpt")

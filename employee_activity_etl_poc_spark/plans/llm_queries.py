@@ -339,10 +339,8 @@ def fuzzy_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .unionByName(planted)
     )
-    # persist=True caches are caller-owned (see minhash_cross_pairs
-    # docstring): this is a one-shot gate, released by the harness's
-    # per-query clearCache(); a repeated/streaming caller would pass
-    # persist=False instead.
+    # the operator's caches are caller-owned: this one-shot gate is
+    # released by the harness's per-query clearCache()
     return D.minhash_cross_pairs(
         train, bench, "text", "doc_id",
         num_perm=16, bands=4, shingle_k=3, threshold=0.5,
@@ -1796,13 +1794,9 @@ def _lsh_bucket_stats_oracle_sql(cap: int) -> str:
 def dedup_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _with_boilerplate_near_copies(load(spark, sf_dir, "documents"))
 
-    from .registry import plan_audit_active
-
     def stats(mode: str, **kw) -> DataFrame:
-        # lazy under the plan census (same plan shape, no eager collect)
         return D.lsh_bucket_stats(
-            corpus, "text", "doc_id", num_perm=16, bands=4, shingle_k=3,
-            persist=not plan_audit_active(), **kw
+            corpus, "text", "doc_id", num_perm=16, bands=4, shingle_k=3, **kw
         ).select(F.lit(mode).alias("mode"), "*")
 
     return stats("undefended").unionByName(
@@ -1906,14 +1900,10 @@ def _lsh_bucket_stats_sampled_oracle_sql(cap: int, mod: int) -> str:
 def dedup_lsh_bucket_stats_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _with_boilerplate_near_copies(load(spark, sf_dir, "documents"))
 
-    from .registry import plan_audit_active
-
     def stats(mode: str, **kw) -> DataFrame:
-        # lazy under the plan census (same plan shape, no eager collect)
         return D.lsh_bucket_stats_sampled(
             corpus, "text", "doc_id",
-            num_perm=16, bands=4, shingle_k=3, sample_mod=4,
-            persist=not plan_audit_active(), **kw
+            num_perm=16, bands=4, shingle_k=3, sample_mod=4, **kw
         ).select(F.lit(mode).alias("mode"), "*")
 
     return stats("undefended").unionByName(
@@ -4090,13 +4080,11 @@ def _qc_trained_model(spark: SparkSession, sf_dir: str) -> dict:
     def fit():
         docs = load(spark, sf_dir, "documents")
         model: dict = {}
-        # persist="train": cache the feature frame for the fit, drop it
-        # before returning — this gate discards the returned scoring
-        # plan (it scores via the ARTIFACT), so a lingering cache would
-        # just leak
+        # the returned scoring plan is discarded: this gate scores via
+        # the ARTIFACT
         TX.quality_classifier(
             docs, "text", "doc_id", label=F.col("lang") == "en",
-            persist="train", model_out=model,
+            model_out=model,
         )
         return model
 

@@ -233,8 +233,7 @@ def refresh_classifier_if_drifted(
         model: dict = {}
         trained = quality_classifier(
             corpus, text_col, id_col, label,
-            n_buckets=n_buckets, iters=iters, lr=lr,
-            persist="train", model_out=model,
+            n_buckets=n_buckets, iters=iters, lr=lr, model_out=model,
         )
         profile = score_profile(trained)
         save_classifier(

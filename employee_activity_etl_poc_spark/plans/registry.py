@@ -42,33 +42,6 @@ class Query:
 
 REGISTRY: dict[str, Query] = {}
 
-# --- plan-audit mode -------------------------------------------------------
-# tools/plan_audit.py compiles every registry plan to census operators;
-# "compiled, not executed" was a lie for the two LSH monitors, whose
-# default eager-and-released contract collects DURING plan construction
-# (r8 judge: the census ran two monitor jobs per form). Queries with an
-# eager build step consult this flag and take their lazy path instead —
-# identical plan SHAPE, no job. Only plan auditing may set it: the lazy
-# monitor form re-derives signatures per aggregate branch when actually
-# EXECUTED, which is exactly what the eager default exists to avoid.
-_PLAN_AUDIT_MODE = False
-
-
-def plan_audit_active() -> bool:
-    return _PLAN_AUDIT_MODE
-
-
-class plan_audit_mode:
-    """Context manager: compile-only census mode (see above)."""
-
-    def __enter__(self):
-        global _PLAN_AUDIT_MODE
-        _PLAN_AUDIT_MODE = True
-
-    def __exit__(self, *exc):
-        global _PLAN_AUDIT_MODE
-        _PLAN_AUDIT_MODE = False
-
 
 def register(name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = ()):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):

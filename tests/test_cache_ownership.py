@@ -1,13 +1,12 @@
-"""Cache-ownership lint (r8 judge ask #8): ``minhash_cross_pairs`` with
-the default ``persist=True`` registers four internal caches the CALLER
-must release — fine for one-shot gated queries under bench.py's
-per-query ``clearCache()`` hygiene, a leak for any repeated or streaming
-call site (one cache registration per micro-batch, the class fixed in
-``lsh_bucket_stats``/``llm_pipeline``). This enforces the documented
-contract with ast, not a docstring: every call site in the package is
-either on the ONE_SHOT allowlist or passes ``persist=False``
-explicitly. Same rule for the other persist-defaulting pair producers a
-streaming loop could reach."""
+"""Cache-ownership lint (r8 judge ask #8): every operator that persists
+frames backing its returned LAZY result hands the CALLER the release —
+fine for one-shot gated queries under bench.py's per-query
+``clearCache()`` hygiene, a leak for any repeated or streaming call site
+(one cache registration per micro-batch, the class fixed in
+``lsh_bucket_stats``/``llm_pipeline``). This enforces the contract with
+ast, not a docstring: repeated contexts never call an always-caching
+operator and pass ``persist=False`` to the one that can opt out, and
+every other call site in the package is on the ONE_SHOT allowlist."""
 
 from __future__ import annotations
 
@@ -19,19 +18,35 @@ PKG = os.path.join(
     "employee_activity_etl_poc_spark",
 )
 
-# functions whose default persist=True hands the caller a cache-release
-# obligation
-_OWNED = {"minhash_cross_pairs"}
+# operators that always leave caches for their caller to release
+_ALWAYS_CACHES = {
+    "minhash_near_duplicates",
+    "minhash_cross_pairs",
+    "prefix_jaccard_pairs",
+    "duplicated_token_spans",
+    "remove_duplicated_spans",
+}
+# the one caching operator with a persist=False opt-out
+_OPT_OUT = "remove_duplicated_spans_incremental"
+_OWNED = _ALWAYS_CACHES | {_OPT_OUT}
 
-# (relative module, function name) call sites allowed to rely on the
-# default: one-shot registered gate queries, released by the bench/sweep
+# (relative module, function name) call sites allowed to leave caches
+# behind: one-shot registered gate queries, released by the bench/sweep
 # clearCache hygiene between queries
 ONE_SHOT_OK = {
+    ("plans/llm_queries.py", "minhash_near_duplicates"),
     ("plans/llm_queries.py", "minhash_cross_pairs"),
+    ("plans/llm_queries.py", "prefix_jaccard_pairs"),
+    ("plans/llm_queries.py", "duplicated_token_spans"),
+    ("plans/llm_queries.py", "remove_duplicated_spans"),
+    ("plans/llm_queries.py", "remove_duplicated_spans_incremental"),
+    # remove_duplicated_spans builds on the detector: its own caller
+    # owns both operators' caches
+    ("operators/dedup.py", "duplicated_token_spans"),
 }
 
-# modules that run per micro-batch / per epoch: a call site here must
-# ALWAYS pass persist=False, allowlist or not
+# modules that run per micro-batch / per epoch: no always-caching
+# operator, and the opt-out operator only with persist=False
 _REPEATED_CONTEXTS = ("streaming/", "plans/llm_pipeline.py")
 
 
@@ -67,22 +82,21 @@ def _passes_persist_false(node: ast.Call) -> bool:
 
 def test_cross_pairs_call_sites_release_or_disable_caches():
     found = list(_call_sites())
-    assert found, "no minhash_cross_pairs call sites found — lint is stale"
+    assert {name for _, name, _ in found} == _OWNED, (
+        "a caching operator has no package call site — lint is stale"
+    )
     for rel, name, node in found:
-        repeated = rel.startswith(_REPEATED_CONTEXTS[0]) or any(
-            rel == c or rel.startswith(c) for c in _REPEATED_CONTEXTS
-        )
-        if repeated:
-            assert _passes_persist_false(node), (
+        if rel.startswith(_REPEATED_CONTEXTS):
+            assert name == _OPT_OUT and _passes_persist_false(node), (
                 f"{rel}:{node.lineno}: {name} in a repeated/streaming "
-                "context must pass persist=False (cache-per-micro-batch "
-                "leak otherwise)"
+                "context leaves one cache registration per micro-batch — "
+                f"only {_OPT_OUT}(persist=False) may run here"
             )
-        elif not _passes_persist_false(node):
+        elif not (name == _OPT_OUT and _passes_persist_false(node)):
             assert (rel, name) in ONE_SHOT_OK, (
-                f"{rel}:{node.lineno}: {name} relies on persist=True but "
-                "is not on the ONE_SHOT_OK allowlist — either pass "
-                "persist=False or document the release owner here"
+                f"{rel}:{node.lineno}: {name} leaves caches for its caller "
+                "but is not on the ONE_SHOT_OK allowlist — document the "
+                "release owner here"
             )
 
 

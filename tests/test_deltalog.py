@@ -350,3 +350,45 @@ def test_toctou_schema_race_cleans_staged_files(spark, tmp_path, monkeypatch):
     assert n_after == n_before
     # and the table still reads as the original commit left it
     assert read_delta_pylog(spark, path).count() == 3
+
+
+def test_delta_roundtrip_gate_scratch_is_session_owned(spark, sf_dir):
+    """The registered round-trip gate writes its scratch table under the
+    session's own root: a second session's table at the old fixed
+    per-sf temp path (same sf) survives the run."""
+    import tempfile
+
+    from employee_activity_etl_poc_spark.plans.registry import REGISTRY
+    from employee_activity_etl_poc_spark.sources.readers import load_table
+
+    shared = os.path.join(tempfile.gettempdir(), "spark_graft_delta_rt_sf0.001")
+    created = not os.path.exists(shared)
+    os.makedirs(shared, exist_ok=True)
+    marker = os.path.join(shared, "other_session_marker")
+    open(marker, "w").close()
+    try:
+        got = {
+            r["event_type"]: (r["n"], r["sum_v"], r["n_version1"])
+            for r in REGISTRY["delta_roundtrip_stats"].fn(spark, sf_dir).collect()
+        }
+        assert os.path.exists(marker)
+    finally:
+        if os.path.exists(marker):
+            os.remove(marker)
+        if created and os.path.isdir(shared) and not os.listdir(shared):
+            os.rmdir(shared)
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "event_type", F.round("value", 4).alias("v")
+    )
+    n_v1 = ev.where(F.col("event_id") % 2 == 0).count()
+    want = {
+        r["event_type"]: (r["n"], r["sum_v"], n_v1)
+        for r in ev.where(F.col("event_id") % 3 == 0)
+        .groupBy("event_type")
+        .agg(F.count("*").alias("n"), F.round(F.sum("v"), 4).alias("sum_v"))
+        .collect()
+    }
+    assert got.keys() == want.keys() and got
+    for k, (n, s, v1) in want.items():
+        assert got[k][0] == n and got[k][2] == v1
+        assert got[k][1] == pytest.approx(s, abs=1e-4)

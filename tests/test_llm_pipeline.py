@@ -642,7 +642,7 @@ def test_quality_model_stage_gates_batches_from_artifact(spark, tmp_path):
     model: dict = {}
     quality_classifier(
         corpus, "text", "doc_id", label=F.col("label") == 1,
-        n_buckets=64, iters=2, persist="train", model_out=model,
+        n_buckets=64, iters=2, model_out=model,
     )
     art = str(tmp_path / "qc_model")
     save_classifier(spark, art, model["w6"], model["b6"])
@@ -828,7 +828,7 @@ def test_streaming_ingest_with_quality_model(spark, tmp_path):
     model: dict = {}
     quality_classifier(
         corpus, "text", "doc_id", label=F.col("label") == 1,
-        n_buckets=64, iters=2, persist="train", model_out=model,
+        n_buckets=64, iters=2, model_out=model,
     )
     art = str(tmp_path / "qc_model")
     save_classifier(spark, art, model["w6"], model["b6"])

@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from employee_activity_etl_poc_spark.operators.skew import salted_agg, salted_join
+from employee_activity_etl_poc_spark.operators.skew import salted_agg
 from employee_activity_etl_poc_spark.sources.readers import load_table
 
 
@@ -31,45 +31,6 @@ def test_salted_agg_equals_plain(spark, sf_dir):
         ).collect()
     }
     assert plain == salted
-
-
-def test_salted_join_equals_plain(spark, sf_dir):
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
-    )
-    plain = (
-        orders.join(customer, "o_custkey")
-        .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("n"), F.round(F.sum("o_totalprice"), 2).alias("s"))
-    )
-    salted = (
-        salted_join(orders, customer, "o_custkey", n_salt=8)
-        .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("n"), F.round(F.sum("o_totalprice"), 2).alias("s"))
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_salted_join_left_keeps_unmatched(spark):
-    fact = spark.createDataFrame([(1, "a"), (2, "b"), (99, "z")], ["k", "v"])
-    dim = spark.createDataFrame([(1, "X"), (2, "Y")], ["k", "d"])
-    out = salted_join(fact, dim, "k", n_salt=4, how="left").collect()
-    assert len(out) == 3
-    assert {r["v"]: r["d"] for r in out} == {"a": "X", "b": "Y", "z": None}
-
-
-def test_salted_join_rejects_outer_variants(spark):
-    import pytest
-    from employee_activity_etl_poc_spark.operators.skew import salted_join
-
-    fact = spark.createDataFrame([(1, "a")], ["k", "x"])
-    dim = spark.createDataFrame([(1, "d"), (2, "unmatched")], ["k", "y"])
-    for how in ("right", "full", "outer", "full_outer"):
-        with pytest.raises(ValueError, match="inner"):
-            salted_join(fact, dim, "k", how=how)
-    # the sound variants still work
-    assert salted_join(fact, dim, "k", how="left").count() == 1
 
 
 def test_salted_agg_count_star_counts_nulls(spark):

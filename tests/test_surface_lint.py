@@ -64,8 +64,6 @@ KEEP = {
         "test reference implementation",
     ("operators/dedup.py", "simhash_from_hashes"):
         "test reference implementation (the fold simhash_signatures matches)",
-    # the join twin of the registry's salted_agg (SCALE.md skew rewrites)
-    ("operators/skew.py", "salted_join"): "skew rewrite",
     # the paper's end-to-end entry points
     ("plans/pipeline_demo.py", "run_end_to_end"): "paper entry point",
     ("plans/llm_pipeline.py", "stream_document_ingest"): "paper entry point",

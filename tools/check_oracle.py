@@ -112,7 +112,11 @@ def run_sweep(spark, sf_dir: str, only: set[str] | None = None) -> int:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark("check_oracle")
+    # no console progress bar: it shares a terminal line (split by \r)
+    # with the OK/FAIL result lines, so a line filter would drop results
+    spark = get_spark(
+        "check_oracle", extra_conf={"spark.ui.showConsoleProgress": "false"}
+    )
     return 1 if run_sweep(spark, sf_dir, only or None) else 0
 
 

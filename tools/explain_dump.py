@@ -6,10 +6,6 @@ exchange ids (``plan_id=N``) are normalized at write time: both are
 session counters, so two dumps of the same plan taken at different
 commits compare with a plain ``diff``.
 
-Runs under ``plan_audit_mode()`` so eager monitors take their lazy path
-(identical plan shape, no collect) and the table-load memo is warmed the
-same way the census is.
-
 Usage:
     python tools/explain_dump.py <suffix> <query[,query...]> [sf_dir]
 
@@ -26,10 +22,7 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from employee_activity_etl_poc_spark.plans.registry import (  # noqa: E402
-    REGISTRY,
-    plan_audit_mode,
-)
+from employee_activity_etl_poc_spark.plans.registry import REGISTRY  # noqa: E402
 from employee_activity_etl_poc_spark.session import get_spark  # noqa: E402
 
 
@@ -45,18 +38,17 @@ def main() -> None:
     out_dir = os.path.join(REPO, "plans", os.environ.get("PLAN_ROUND", "r14"))
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("explain-dump")
-    with plan_audit_mode():
-        for name in names:
-            df = REGISTRY[name].fn(spark, sf_dir)
-            txt = normalize(
-                df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-                    df._jdf.queryExecution(), "formatted"
-                )
+    for name in names:
+        df = REGISTRY[name].fn(spark, sf_dir)
+        txt = normalize(
+            df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
+                df._jdf.queryExecution(), "formatted"
             )
-            path = os.path.join(out_dir, f"{name}_{suffix}.txt")
-            with open(path, "w") as fh:
-                fh.write(txt)
-            print(f"wrote {path} ({len(txt)} chars)")
+        )
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as fh:
+            fh.write(txt)
+        print(f"wrote {path} ({len(txt)} chars)")
     spark.stop()
 
 

@@ -2,14 +2,13 @@
 
 For every registered query, compiles the executed plan at a given sf_dir
 and counts the operators that matter at 100 TB: shuffles (Exchange),
-join strategies, Python boundaries, scans. The census runs under
-``plan_audit_mode()`` (the eager LSH monitors take their lazy path —
-identical plan shape, no collect) with the table-load memo warmed, and
-COUNTS the Spark jobs each query runs while its plan is BUILT: zero for
-109 of 133 queries (honest "compiled, not executed", enforced — r8
-judge ask #4); the rest need runtime values to assemble their plan
-(scalar-literal counts, trained centroid/codebook literals, iterative
-convergence, side-effect gates) and must be allowlisted in
+join strategies, Python boundaries, scans. The census runs with the
+table-load memo warmed and COUNTS the Spark jobs each query runs while
+its plan is BUILT: zero for every query whose plan needs no runtime
+value (honest "compiled, not executed", enforced — r8 judge ask #4);
+the rest need runtime values to assemble their plan (scalar-literal
+counts, trained centroid/codebook literals, iterative convergence,
+eager pre-flights, side-effect gates) and must be allowlisted in
 PLAN_BUILD_JOBS_OK with a rationale. Writes PLAN_AUDIT.md (a per-query
 table + totals) and exits non-zero if any query plans a
 BroadcastNestedLoopJoin / CartesianProduct without being explicitly
@@ -28,10 +27,7 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-from employee_activity_etl_poc_spark.plans.registry import (  # noqa: E402
-    REGISTRY,
-    plan_audit_mode,
-)
+from employee_activity_etl_poc_spark.plans.registry import REGISTRY  # noqa: E402
 from employee_activity_etl_poc_spark.schemas import TESTDATA_TABLES  # noqa: E402
 from employee_activity_etl_poc_spark.session import get_spark  # noqa: E402
 from employee_activity_etl_poc_spark.sources.readers import load_table  # noqa: E402
@@ -103,6 +99,8 @@ PLAN_BUILD_JOBS_OK = {
     "dedup_span_removal_stats": "same store, plus the removal pass statistics",
     "dedup_spans_incremental": "builds the persisted gram-store batches (store semantics are the query)",
     "dedup_spans_incremental_removal": "same, incremental store + removal",
+    "dedup_lsh_bucket_stats": "eager pre-flight: one-row result collected, caches released",
+    "dedup_lsh_bucket_stats_sampled": "eager pre-flight: one-row result collected, caches released",
 }
 
 # Queries ALLOWED to plan a nested-loop/cartesian, with why. Exactly the
@@ -156,11 +154,6 @@ NESTED_LOOP_OK = {
     "embedding_ivf_filtered_topk": "1-row recall flag cross-joined onto the local filtered-exact baseline",
     "lm_quality_bigram_nll": "1-row broadcast T/V totals aggregate cross-joined (r10b)",
     "text_compression_ratio": "1-row corpus-flag side cross-joined (gate)",
-    "dedup_lsh_bucket_stats": "1-row bucket aggregates assembled (2 modes)",
-    "dedup_lsh_bucket_stats_sampled": (
-        "1-row scaled bucket aggregates assembled (2 modes, eager "
-        "monitor on the 1/4 sample)"
-    ),
     "embedding_pq_index_reload_topk": (
         "1-row recall + reload-identity flags cross-joined onto the "
         "local exact baseline (r9: probes collected once, identity is "
@@ -219,10 +212,10 @@ def strip_cached_subplans(plan: str) -> str:
 
 
 def census(spark, sf_dir: str):
-    """Compile every registry plan under plan_audit_mode with the table
-    memo warmed; return (rows, violations) where each row carries the
-    operator counts AND the number of Spark jobs the query ran while its
-    plan was assembled (zero unless allowlisted)."""
+    """Compile every registry plan with the table memo warmed; return
+    (rows, violations) where each row carries the operator counts AND
+    the number of Spark jobs the query ran while its plan was assembled
+    (zero unless allowlisted)."""
     from employee_activity_etl_poc_spark.sources.readers import (
         _NANOS_TS_COLUMNS,
         _read_table_raw,
@@ -235,37 +228,36 @@ def census(spark, sf_dir: str):
             _read_table_raw(spark, sf_dir, t)
     rows = []
     violations = []
-    with plan_audit_mode():
-        for name, q in REGISTRY.items():
-            group = f"plan_audit_{name}"
-            sc.setJobGroup(group, name)
-            try:
-                plan = (
-                    q.fn(spark, sf_dir)
-                    ._jdf.queryExecution()
-                    .executedPlan()
-                    .toString()
-                )
-            except Exception as e:  # a query that cannot even plan is a bug
-                violations.append(f"{name}: PLAN ERROR {e}")
-                continue
-            finally:
-                sc.setJobGroup("plan_audit_idle", "")
-            build_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-            plan = strip_cached_subplans(plan)
-            counts = {k: len(rx.findall(plan)) for k, rx in COUNTERS.items()}
-            counts["build_jobs"] = build_jobs
-            rows.append((name, counts))
-            if counts["bnlj_cartesian"] and name not in NESTED_LOOP_OK:
-                violations.append(
-                    f"{name}: {counts['bnlj_cartesian']} nested-loop/"
-                    "cartesian joins, not allowlisted"
-                )
-            if build_jobs and name not in PLAN_BUILD_JOBS_OK:
-                violations.append(
-                    f"{name}: ran {build_jobs} Spark jobs at plan build, "
-                    "not in PLAN_BUILD_JOBS_OK"
-                )
+    for name, q in REGISTRY.items():
+        group = f"plan_audit_{name}"
+        sc.setJobGroup(group, name)
+        try:
+            plan = (
+                q.fn(spark, sf_dir)
+                ._jdf.queryExecution()
+                .executedPlan()
+                .toString()
+            )
+        except Exception as e:  # a query that cannot even plan is a bug
+            violations.append(f"{name}: PLAN ERROR {e}")
+            continue
+        finally:
+            sc.setJobGroup("plan_audit_idle", "")
+        build_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        plan = strip_cached_subplans(plan)
+        counts = {k: len(rx.findall(plan)) for k, rx in COUNTERS.items()}
+        counts["build_jobs"] = build_jobs
+        rows.append((name, counts))
+        if counts["bnlj_cartesian"] and name not in NESTED_LOOP_OK:
+            violations.append(
+                f"{name}: {counts['bnlj_cartesian']} nested-loop/"
+                "cartesian joins, not allowlisted"
+            )
+        if build_jobs and name not in PLAN_BUILD_JOBS_OK:
+            violations.append(
+                f"{name}: ran {build_jobs} Spark jobs at plan build, "
+                "not in PLAN_BUILD_JOBS_OK"
+            )
     return rows, violations
 
 
@@ -276,8 +268,8 @@ def main() -> int:
     lines = [
         "# PLAN AUDIT — registry-wide physical-plan census",
         "",
-        f"Compiled (not executed) against `{sf_dir}`, under "
-        "`plan_audit_mode()` with the table-load memo warmed. Columns: "
+        f"Compiled (not executed) against `{sf_dir}`, with the "
+        "table-load memo warmed. Columns: "
         "shuffles (Exchange), broadcast-hash / sort-merge / "
         "nested-loop+cartesian joins, Python boundaries (Arrow or row "
         "pickling), parquet scans, whole-stage-codegen spans, and `bj` — "
@@ -285,7 +277,7 @@ def main() -> int:
         "every query whose plan needs no runtime value; non-zero only on "
         "the documented `PLAN_BUILD_JOBS_OK` allowlist: scalar-literal "
         "counts, trained centroid/codebook literals, iterative "
-        "convergence, side-effect gates). Nested-loop entries are only "
+        "convergence, eager pre-flights, side-effect gates). Nested-loop entries are only "
         "legal on the documented allowlist in `tools/plan_audit.py` "
         "(tiny flag/estimate sides, exact baselines, bounded-block "
         "all-pairs).",
