@@ -12,6 +12,19 @@ centralize one factory with scale-aware defaults:
   machine-local time (``bronze/redPandaToDeltaLake.py:80-83``) — we fix UTC
   and document the deliberate divergence (SURVEY §7 risk register).
 - Arrow enabled for any pandas-interop path (Pandas UDFs, toPandas).
+- Streaming checkpoints go through Spark's ``FileSystemBasedCheckpointFileManager``
+  in the local session. The default FileContext manager commits each
+  checkpoint file with ``AbstractFileSystem.renameInternal``, which asks
+  ``getFileLinkStatus``; on a ``file:`` path without libhadoop (pip PySpark
+  ships none) Hadoop answers that by forking a ``readlink`` process per file.
+  That covers the offset, commit and source/sink metadata logs and every
+  state-store delta file and its checksum file, so the forks bound each
+  micro-batch's commit. The FileSystem manager renames through
+  ``FileSystem.rename`` (no link lookup) and writes the same checkpoint
+  layout, so a checkpoint written by either manager resumes under the
+  other. :func:`apply_engine_conf` leaves the default in place for other
+  masters, whose checkpoints may live on HDFS, where FileContext's atomic
+  rename-with-overwrite is the reason it is Spark's default.
 """
 
 from __future__ import annotations
@@ -88,6 +101,11 @@ def get_spark(
     builder = apply_engine_conf(
         SparkSession.builder.appName(app_name).master(f"local[{cores}]"),
         shuffle_partitions,
+    )
+    builder = builder.config(
+        "spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager",
     )
     if extra_conf:
         for k, v in extra_conf.items():
