@@ -13,7 +13,7 @@ centralize one factory with scale-aware defaults:
   and document the deliberate divergence (SURVEY §7 risk register).
 - Arrow enabled for any pandas-interop path (Pandas UDFs, toPandas).
 - Streaming checkpoints go through Spark's ``FileSystemBasedCheckpointFileManager``
-  in the local session. The default FileContext manager commits each
+  on every master. The default FileContext manager commits each
   checkpoint file with ``AbstractFileSystem.renameInternal``, which asks
   ``getFileLinkStatus``; on a ``file:`` path without libhadoop (pip PySpark
   ships none) Hadoop answers that by forking a ``readlink`` process per file.
@@ -22,9 +22,13 @@ centralize one factory with scale-aware defaults:
   micro-batch's commit. The FileSystem manager renames through
   ``FileSystem.rename`` (no link lookup) and writes the same checkpoint
   layout, so a checkpoint written by either manager resumes under the
-  other. :func:`apply_engine_conf` leaves the default in place for other
-  masters, whose checkpoints may live on HDFS, where FileContext's atomic
-  rename-with-overwrite is the reason it is Spark's default.
+  other. ``spark.sql.streaming.checkpointFileManagerClass`` is an internal
+  Spark conf, and the class path is the one Spark 4.1 ships (package
+  ``org.apache.spark.sql.execution.streaming.checkpointing``); on another
+  Spark version re-check it, or every streaming query fails when it opens
+  its checkpoint.
+  ``tests/test_streaming.py::test_checkpoints_commit_through_filesystem_manager``
+  fails if the class Spark resolves is not this one.
 """
 
 from __future__ import annotations
@@ -84,6 +88,13 @@ def apply_engine_conf(
         # session tz) rather than TIMESTAMP_NTZ so µs-epoch functions and
         # the DuckDB oracle agree (sources/readers.py::_ensure_session_conf).
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        # Commit streaming checkpoints without a readlink fork per file
+        # (module docstring; internal conf, Spark 4.1 class path).
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
 
 
@@ -95,17 +106,13 @@ def get_spark(
     """Build (or fetch) the singleton SparkSession.
 
     Local mode is single-JVM; on a cluster the same conf applies minus the
-    master override. Every knob here is a plain public Spark conf.
+    master override. Every knob is a public Spark conf except the
+    checkpoint file manager class (see the module docstring).
     """
     cores = default_parallelism()
     builder = apply_engine_conf(
         SparkSession.builder.appName(app_name).master(f"local[{cores}]"),
         shuffle_partitions,
-    )
-    builder = builder.config(
-        "spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing."
-        "FileSystemBasedCheckpointFileManager",
     )
     if extra_conf:
         for k, v in extra_conf.items():

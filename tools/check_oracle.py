@@ -59,43 +59,6 @@ def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
-def _check_query(spark, con, sf_dir: str, name: str, q) -> bool:
-    """Run one query on both engines and print its result line; True when
-    it failed."""
-    t0 = time.time()
-    try:
-        sdf = q.fn(spark, sf_dir).toPandas()
-    except Exception as e:
-        print(f"FAIL {name}: spark error: {e}")
-        return True
-    if q.oracle is None:
-        print(f"SKIP {name}: no oracle (rows={len(sdf)}) [{time.time()-t0:.1f}s]")
-        return False
-    try:
-        odf = con.execute(q.oracle).fetchdf()
-    except Exception as e:
-        print(f"FAIL {name}: duckdb error: {e}")
-        return True
-    sn, sc, sh = normalize(sdf)
-    on_, oc, oh = normalize(odf)
-    ok = (sn, sc, sh) == (on_, oc, oh)
-    status = "OK  " if ok else "FAIL"
-    print(f"{status} {name}: rows {sn}/{on_} cols {sc == oc} hash {sh == oh} "
-          f"[{time.time()-t0:.1f}s]")
-    if not ok:
-        if sc != oc:
-            print(f"   spark cols: {sc}\n   duck  cols: {oc}")
-        elif sn != on_ or sh != oh:
-            # show a few differing rows for debugging
-            s = sdf[sorted(sdf.columns)].map(_norm_cell)
-            o = odf[sorted(odf.columns)].map(_norm_cell)
-            s_t = set(map(tuple, s.itertuples(index=False)))
-            o_t = set(map(tuple, o.itertuples(index=False)))
-            print(f"   only-spark: {list(s_t - o_t)[:3]}")
-            print(f"   only-duck : {list(o_t - s_t)[:3]}")
-    return not ok
-
-
 def run_sweep(spark, sf_dir: str, only: set[str] | None = None) -> int:
     """Run the full registry-vs-oracle compare; returns the failure
     count. Callable from main() AND from the in-suite
@@ -107,7 +70,40 @@ def run_sweep(spark, sf_dir: str, only: set[str] | None = None) -> int:
         if only and name not in only:
             continue
         try:
-            failures += _check_query(spark, con, sf_dir, name, q)
+            t0 = time.time()
+            try:
+                sdf = q.fn(spark, sf_dir).toPandas()
+            except Exception as e:
+                print(f"FAIL {name}: spark error: {e}")
+                failures += 1
+                continue
+            if q.oracle is None:
+                print(f"SKIP {name}: no oracle (rows={len(sdf)}) [{time.time()-t0:.1f}s]")
+                continue
+            try:
+                odf = con.execute(q.oracle).fetchdf()
+            except Exception as e:
+                print(f"FAIL {name}: duckdb error: {e}")
+                failures += 1
+                continue
+            sn, sc, sh = normalize(sdf)
+            on_, oc, oh = normalize(odf)
+            ok = (sn, sc, sh) == (on_, oc, oh)
+            status = "OK  " if ok else "FAIL"
+            print(f"{status} {name}: rows {sn}/{on_} cols {sc == oc} hash {sh == oh} "
+                  f"[{time.time()-t0:.1f}s]")
+            if not ok:
+                failures += 1
+                if sc != oc:
+                    print(f"   spark cols: {sc}\n   duck  cols: {oc}")
+                elif sn != on_ or sh != oh:
+                    # show a few differing rows for debugging
+                    s = sdf[sorted(sdf.columns)].map(_norm_cell)
+                    o = odf[sorted(odf.columns)].map(_norm_cell)
+                    s_t = set(map(tuple, s.itertuples(index=False)))
+                    o_t = set(map(tuple, o.itertuples(index=False)))
+                    print(f"   only-spark: {list(s_t - o_t)[:3]}")
+                    print(f"   only-duck : {list(o_t - s_t)[:3]}")
         finally:
             # release the caches a query leaves for its caller, as bench.py
             # and perfbench/query_mix.py do, so no later query re-caches them

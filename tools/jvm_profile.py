@@ -1,17 +1,17 @@
 """Where the CPU of one perfbench workload round goes, by thread class.
 
-Runs a perfbench workload in this process (set-up and warm-up as
-``perfbench/run.py`` does them, then ``--rounds`` timed rounds) on a driver
-JVM started with a JFR recording, and prints for the timed rounds:
+Runs a perfbench workload in this process on a driver JVM started with a
+JFR recording, and prints for the ``--rounds`` timed rounds the CPU seconds
+by thread class (``/proc/<pid>/task/*/stat`` before and after: JIT, executor
+tasks, py4j, GC, the rest of the JVM with exited threads, its reaped child
+processes, the Python driver, the Python workers) and the child processes
+the JVM started, by command (``jdk.ProcessStart``). The last stdout line is
+the same numbers as one JSON object.
 
-- CPU seconds by thread class, from ``/proc/<pid>/task/*/stat`` before and
-  after: JIT compiler threads, executor task threads, py4j connection
-  threads, GC threads, the rest of the JVM (threads that exited included),
-  the JVM's reaped child processes, the Python driver and the Python
-  workers under the JVM;
-- the child processes the JVM started, by command (``jdk.ProcessStart``).
-
-The last stdout line is the same numbers as one JSON object.
+The JVM is the one ``perfbench/run.py``'s ``execute`` starts: the same
+environment and untraced ``spark_conf``, plus ``spark.driver.defaultJavaOptions``
+for JFR. Unlike ``execute`` it runs ``prepare`` once (not ``SETUP_REPEATS``
+times), times no set-up, and runs ``--rounds`` rounds instead of ``--seconds``.
 
     python tools/jvm_profile.py --workload medallion_cdc --seed 1 --rounds 2
 """
@@ -100,11 +100,11 @@ def main(argv=None) -> int:
     args = ap.parse_args(argv)
 
     workdir = tempfile.mkdtemp(prefix="jvm_profile-")
-    tmp = os.path.join(workdir, "tmp")
-    os.makedirs(tmp)
+    os.makedirs(tmp := os.path.join(workdir, "tmp"))
     os.environ.update(
         TMPDIR=tmp,
         PYTHONPATH=os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p),
+        SPARK_LAUNCHER_OPTS="-XX:-UsePerfData",
         SPARK_GRAFT_CPUS=run.CORES,
         SPARK_DRIVER_MEMORY=DRIVER_MEMORY,
     )
@@ -141,12 +141,9 @@ def main(argv=None) -> int:
         print(f"  cpu  {name:<15} {s:8.2f} s")
     for cmd, n in child.most_common():
         print(f"  fork {cmd:<15} {n:8d}")
-    print(json.dumps({
-        "rounds": args.rounds,
-        "timed_s": round(bench.timed_s, 3),
-        "cpu_s": {k: round(v, 2) for k, v in cpu_s.items()},
-        "forks": dict(child.most_common()),
-    }))
+    print(json.dumps({"rounds": args.rounds, "timed_s": round(bench.timed_s, 3),
+                      "cpu_s": {k: round(v, 2) for k, v in cpu_s.items()},
+                      "forks": dict(child.most_common())}))
     return 0
 
 
